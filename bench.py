@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -127,6 +129,7 @@ def bench_etl(spark, n_rows: int = 500_000) -> tuple[float, int]:
         n_out = spark.read.parquet(f"{sink}/donations").count()
     finally:
         raw.unpersist()
+        shutil.rmtree(sink, ignore_errors=True)
     return round(time.perf_counter() - t0, 3), n_out
 
 
@@ -356,7 +359,7 @@ def main() -> None:
         # r11 verdict "what's wrong" #4: min-of-N absorbs sub-25% true
         # regressions for a round; publish the median too (sidecar only)
         # so drift stays visible even when the min flatters it
-        medians[name] = sorted(runs)[len(runs) // 2]
+        medians[name] = round(statistics.median(runs), 3)
     for name in contended:
         q_dir = overrides.get(name, sf_dir)
         t0 = time.perf_counter()

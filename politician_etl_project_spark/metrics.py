@@ -2,9 +2,14 @@
 + ``app/main.py`` endpoints, ``app/app.py`` dashboard queries).
 
 One function per reference endpoint, computed over a :class:`etl.Warehouse`
-(or any dict of the 9 schema tables).  Where the reference issues ~8
-sequential ORM queries per endpoint, each hitting Postgres, the bundles
-here collapse into a handful of multi-aggregate DataFrame jobs:
+(or any dict of the 9 schema tables).  The two whole-request reports —
+GET /politicians/{id} (``politician_report_sql``) and the chamber / party
+/ congress / multi scope endpoints (``scope_report_sql``) — are ONE SQL
+statement each, returning a long-format ``(section, metric, label,
+value)`` frame, checked against the independent DuckDB oracles in
+queries/serving.py.  Where the reference issues ~8 sequential ORM queries
+per endpoint, each hitting Postgres, the per-endpoint bundles here
+collapse into a handful of multi-aggregate DataFrame jobs:
 
 - split counts are one pass with ``sum(when(...))`` (A6) instead of two
   filtered ``COUNT(*)`` round-trips (``app/metrics.py:77-78``);
@@ -193,153 +198,6 @@ def dashboard_stats(tables: dict[str, DataFrame]) -> DataFrame:
     for c in counts[1:]:
         out = out.unionByName(c)
     return out.orderBy("stat")
-
-
-def politician_report(
-    donations: DataFrame,
-    donors: DataFrame,
-    bills: DataFrame,
-    cosponsors: DataFrame,
-    votes: DataFrame,
-    politician_id: int,
-) -> DataFrame:
-    """The FULL politician-detail request as ONE DataFrame / ONE action —
-    the number a user migrating the reference's FastAPI layer asks for
-    first.  The reference serves GET /politicians/{id} with ~8
-    SEQUENTIAL ORM queries (app/metrics.py:49-93 via app/main.py), each
-    a Postgres round trip; here every bundle branch
-    (financial_metrics + legislative_metrics + voting_metrics) lands in
-    one unioned long-format frame ``(section, metric, label, value)``,
-    so Spark schedules the branches' stages CONCURRENTLY inside a
-    single collect — the shared-scan consolidation SURVEY §3.2
-    describes, end to end.
-
-    Determinism contract (oracle-grade): every list-shaped part gets an
-    explicit total order — top donors by (total desc, name, donor_id),
-    recent bills by (date_introduced desc, official_bill_number),
-    recent votes by (date desc, official_bill_number, roll_key when
-    present) — and pct-of-total uses the engine-portable half-up
-    formula ``floor(x*10000/total + 0.5)/100`` instead of DECIMAL
-    division, whose rounding mode differs across engines.  Values are
-    DOUBLE; dates surface as epoch days."""
-    fin = financial_metrics(donations, donors, {"politician_id": politician_id})
-    leg = legislative_metrics(bills, cosponsors, politician_id)
-    vot = voting_metrics(votes, bills, politician_id)
-    cols = ["section", "metric", "label", "value"]
-
-    def _shape(df, section, metric, label, value):
-        return df.select(
-            F.lit(section).alias("section"),
-            metric.alias("metric") if not isinstance(metric, str) else F.lit(metric).alias("metric"),
-            label.cast("string").alias("label"),
-            value.cast("double").alias("value"),
-        ).select(cols)
-
-    totals = fin["total"].select(
-        F.expr(
-            "stack(3, 'total_donations', CAST(total_donations AS DOUBLE), "
-            "'n_donations', CAST(n_donations AS DOUBLE), "
-            "'n_donors', CAST(n_donors AS DOUBLE)) AS (metric, value)"
-        )
-    )
-    parts = [
-        _shape(totals, "financial", F.col("metric"), F.lit(""), F.col("value")),
-        _shape(
-            fin["by_type"]
-            .withColumn(
-                # engine-portable half-up pct (see docstring): recomputed
-                # from the exact totals rather than reusing the DECIMAL
-                # `pct`, whose division rounding differs across engines
-                "pct_portable",
-                F.col("total").cast("double")
-                * 10000
-                / F.sum(F.col("total").cast("double")).over(Window.partitionBy()),
-            )
-            .select(
-                "donor_type",
-                F.expr(
-                    "stack(3, 'by_type_total', CAST(total AS DOUBLE), "
-                    "'by_type_n', CAST(n AS DOUBLE), "
-                    "'by_type_pct', CAST(floor(pct_portable + 0.5) / 100 AS DOUBLE)) "
-                    "AS (metric, value)"
-                ),
-            ),
-            "financial",
-            F.col("metric"),
-            F.col("donor_type"),
-            F.col("value"),
-        ),
-        _shape(
-            fin["top_donors"].withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy().orderBy(
-                        F.desc("total_donated"), F.asc("name"), F.asc("donor_id")
-                    )
-                ),
-            ),
-            "financial",
-            F.format_string("top_donor_%02d", F.col("rank")),
-            F.col("name"),
-            F.col("total_donated"),
-        ),
-        _shape(
-            fin["timeline"],
-            "financial",
-            F.lit("timeline"),
-            F.concat_ws("|", "month", "donor_type"),
-            F.col("total"),
-        ),
-        _shape(
-            leg["sponsored"], "legislative", F.lit("n_sponsored"), F.lit(""), F.col("n_sponsored")
-        ),
-        _shape(
-            leg["cosponsored"].select(
-                F.expr(
-                    "stack(3, 'n_cosponsored', CAST(n_cosponsored AS DOUBLE), "
-                    "'n_original', CAST(n_original AS DOUBLE), "
-                    "'n_joined_later', CAST(n_joined_later AS DOUBLE)) AS (metric, value)"
-                )
-            ),
-            "legislative",
-            F.col("metric"),
-            F.lit(""),
-            F.col("value"),
-        ),
-        _shape(
-            leg["recent_bills"].withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy().orderBy(
-                        F.desc("date_introduced"), F.asc("official_bill_number")
-                    )
-                ),
-            ),
-            "legislative",
-            F.format_string("recent_bill_%02d", F.col("rank")),
-            F.col("official_bill_number"),
-            F.datediff("date_introduced", F.lit("1970-01-01")),
-        ),
-        _shape(
-            vot["breakdown"], "voting", F.lit("position_n"), F.col("vote_position"), F.col("n")
-        ),
-        _shape(
-            vot["recent_votes"].withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy().orderBy(F.desc("date"), F.asc("official_bill_number"))
-                ),
-            ),
-            "voting",
-            F.format_string("recent_vote_%02d", F.col("rank")),
-            F.col("official_bill_number"),
-            F.datediff("date", F.lit("1970-01-01")),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric", "label")
 
 
 def _paged(
@@ -660,114 +518,6 @@ def multi_politician_metrics(
     return scope_metrics(tables, ids=ids, congress=congress)
 
 
-def scope_report(
-    tables: dict[str, DataFrame],
-    ids: list[int] | None = None,
-    chamber: str | None = None,
-    party: str | None = None,
-    congress: int | None = None,
-) -> DataFrame:
-    """One scope-metrics request END TO END as a single long-format
-    frame ``(section, metric, label, value)`` — the scope twin of
-    ``politician_report`` (round-7 verdict #6: promote a scope bundle
-    to the driver gate).
-
-    The reference answers GET /metrics/chamber/{chamber} (and party /
-    congress / multi, app/metrics.py:133-519) with ~8 sequential ORM
-    queries per request; here all eight scope_metrics frames union into
-    one plan so Spark runs the branch stages concurrently in ONE
-    action, sharing the broadcast politician-scope semi-join across
-    every fact.
-
-    Determinism contract: roster labeled name|party|state (names unique
-    per politician), top donors ranked (total desc, name, donor_id),
-    votes rollup surfaces its grand total as position 'TOTAL'; final
-    order is the total (section, metric, label) key."""
-    out = scope_metrics(tables, ids=ids, chamber=chamber, party=party, congress=congress)
-    cols = ["section", "metric", "label", "value"]
-
-    def _shape(df, section, metric, label, value):
-        return df.select(
-            F.lit(section).alias("section"),
-            metric.alias("metric") if not isinstance(metric, str) else F.lit(metric).alias("metric"),
-            label.cast("string").alias("label"),
-            value.cast("double").alias("value"),
-        ).select(cols)
-
-    parts = [
-        _shape(
-            out["politicians"],
-            "scope",
-            F.lit("member"),
-            F.concat_ws("|", "name", "party", "state"),
-            F.col("politician_id"),
-        ),
-        _shape(
-            out["n_politicians"], "scope", F.lit("n_politicians"), F.lit(""), F.col("total_politicians")
-        ),
-        _shape(
-            out["donations_total"].select(
-                F.expr(
-                    "stack(2, 'total_amount', CAST(total_amount AS DOUBLE), "
-                    "'n_donations', CAST(n_donations AS DOUBLE)) AS (metric, value)"
-                )
-            ),
-            "financial",
-            F.col("metric"),
-            F.lit(""),
-            F.col("value"),
-        ),
-        _shape(
-            out["donations_by_type"],
-            "financial",
-            F.lit("by_type_total"),
-            F.col("donor_type"),
-            F.col("total"),
-        ),
-        _shape(
-            out["top_donors"].withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy().orderBy(
-                        F.desc("total_donated"), F.asc("name"), F.asc("donor_id")
-                    )
-                ),
-            ),
-            "financial",
-            F.format_string("top_donor_%02d", F.col("rank")),
-            F.col("name"),
-            F.col("total_donated"),
-        ),
-        _shape(
-            out["bills_sponsored"], "legislative", F.lit("sponsored"), F.lit(""), F.col("sponsored")
-        ),
-        _shape(
-            out["cosponsored"].select(
-                F.expr(
-                    "stack(3, 'cosponsored_original', CAST(cosponsored_original AS DOUBLE), "
-                    "'cosponsored_later', CAST(cosponsored_later AS DOUBLE), "
-                    "'total_cosponsored', CAST(total_cosponsored AS DOUBLE)) AS (metric, value)"
-                )
-            ),
-            "legislative",
-            F.col("metric"),
-            F.lit(""),
-            F.col("value"),
-        ),
-        _shape(
-            out["votes_by_position"],
-            "voting",
-            F.lit("position_n"),
-            F.col("vote_position"),
-            F.col("n"),
-        ),
-    ]
-    res = parts[0]
-    for p in parts[1:]:
-        res = res.unionByName(p)
-    return res.orderBy("section", "metric", "label")
-
-
 _REPORT_SQL = """
 WITH base AS (
   SELECT /*+ BROADCAST(n) */ d.donor_id, d.amount, d.date, n.name, n.donor_type
@@ -856,18 +606,30 @@ ORDER BY section, metric, label
 def politician_report_sql(
     tables: dict[str, DataFrame], politician_id: int, view_prefix: str = "dom_"
 ) -> DataFrame:
-    """``politician_report`` as ONE SQL statement — the low-latency
-    serving variant.
+    """The FULL politician-detail request (GET /politicians/{id}) as ONE
+    SQL statement / ONE action.  The reference serves it with ~8
+    SEQUENTIAL ORM queries (app/metrics.py:49-93 via app/main.py), each
+    a Postgres round trip; here the financial, legislative and voting
+    sections land in one unioned long-format frame ``(section, metric,
+    label, value)``, so Spark schedules the branches' stages
+    concurrently inside a single collect (SURVEY §3.2).
 
-    Measured at sf0.1 (round 8): the composable DataFrame version
-    spends ~0.55 s just CONSTRUCTING the request plan (hundreds of
-    py4j round trips + per-transform analysis for the ~14-branch
-    union), ~0.08 s optimizing, ~0.7 s executing.  A single SQL string
-    parses and analyzes in one JVM call, so plan construction drops to
-    ~milliseconds while Catalyst produces the same physical plan — the
-    right shape for a request-serving path where the query text is
-    fixed and only parameters vary.  tests/test_metrics.py pins this
-    equivalent row-for-row to politician_report.
+    SQL text rather than composed DataFrame calls: building the same
+    ~14-branch union through the DataFrame API cost ~0.55 s of py4j
+    round trips per request at sf0.1, while one SQL string parses and
+    analyzes in one JVM call — the right shape for a serving path where
+    the query text is fixed and only parameters vary.
+
+    Determinism contract (oracle-grade): every list-shaped part gets an
+    explicit total order — top donors by (total desc, name, donor_id),
+    recent bills by (date_introduced desc, official_bill_number),
+    recent votes by (date desc, official_bill_number) — and
+    pct-of-total uses the engine-portable half-up formula
+    ``floor(x*10000/total + 0.5)/100`` instead of DECIMAL division,
+    whose rounding mode differs across engines.  Values are DOUBLE;
+    dates surface as epoch days.  tests/test_metrics.py checks it
+    against the DuckDB oracle of q_metrics_bundle_e2e at several
+    politician ids.
 
     ``tables`` are registered as temp views ``{prefix}donations`` etc.
     (registration is idempotent and ~free); the caller passes the
@@ -946,10 +708,15 @@ SELECT section, metric, label, value FROM (
     FROM scos)
   UNION ALL
   SELECT 'voting', 'position_n',
-         CASE WHEN grouping(position) = 1 THEN 'TOTAL' ELSE position END,
-         CAST(COUNT(*) AS DOUBLE)
-  FROM (SELECT COALESCE(vote_position, 'Unknown') AS position FROM sv)
+         CASE WHEN grouping(position) = 1 THEN 'TOTAL' ELSE position END AS label,
+         CAST(SUM(w) AS DOUBLE)
+  -- ROLLUP emits no grand total over empty input: one weight-0 row keeps
+  -- an empty scope's TOTAL at 0, and HAVING drops that row's own group
+  -- (real positions are never NULL)
+  FROM (SELECT COALESCE(vote_position, 'Unknown') AS position, 1 AS w FROM sv
+        UNION ALL SELECT NULL, 0)
   GROUP BY ROLLUP(position)
+  HAVING label IS NOT NULL
 )
 ORDER BY section, metric, label
 """
@@ -963,14 +730,27 @@ def scope_report_sql(
     congress: int | None = None,
     view_prefix: str = "dom_",
 ) -> DataFrame:
-    """``scope_report`` as ONE SQL statement — same rationale and same
-    measured plan-construction saving as ``politician_report_sql`` (the
-    DataFrame scope_report spends ~0.6 s building its ~8-branch plan
-    through py4j).  tests/test_metrics.py pins it row-for-row equal to
-    scope_report.  Scope parameters are inlined after validation:
-    chamber/party from a fixed vocabulary, ids/congress as ints — no
-    caller string reaches the SQL text unescaped (the injection bug
-    class of app/app.py:99-108 stays designed out)."""
+    """One scope-metrics request END TO END as ONE SQL statement / ONE
+    action, returning ``(section, metric, label, value)``.  The reference
+    answers GET /metrics/chamber/{chamber} (and party / congress / multi,
+    app/metrics.py:133-519) with ~8 sequential ORM queries per request,
+    each re-filtering a driver-side ``IN (ids...)`` list; here every
+    ``scope_metrics`` part unions into one plan that shares the
+    politician-scope semi-join across every fact.  SQL text for the same
+    reason as ``politician_report_sql`` (the DataFrame-API plan of the
+    ~8-branch union cost ~0.6 s of py4j calls per request).
+
+    Determinism contract: roster labeled name|party|state (names unique
+    per politician), top donors ranked (total desc, name, donor_id),
+    votes surface their grand total as position 'TOTAL' (0 for an empty
+    scope); final order is the total (section, metric, label) key.
+    tests/test_metrics.py checks it against the DuckDB oracle of
+    q_scope_metrics_e2e at several scopes, the empty one included.
+
+    Scope parameters are inlined after validation: chamber/party from a
+    fixed vocabulary, ids/congress as ints — no caller string reaches
+    the SQL text unescaped (the injection bug class of app/app.py:99-108
+    stays designed out)."""
     preds = []
     if ids is not None:
         preds.append(

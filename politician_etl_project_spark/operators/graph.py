@@ -1,89 +1,31 @@
-"""Iterative graph operators: connected components over an edge list.
+"""Iterative and join-based graph operators over an edge list:
+integer-exact weighted PageRank (``pagerank_micro``) and degree-oriented
+triangle enumeration (``triangles``).  Connected components live in
+``operators/components.py``.
 
-The LLM-pipeline motivation: MinHash-LSH emits near-dup *pairs*, but
-production dedup keeps one document per *group*, and near-duplication is
-transitive only through the pair graph (A~B, B~C does not guarantee a
-qualifying A~C pair).  Treating pairs as undirected edges and taking
-connected components gives the exact transitive grouping the reference's
-``drop_duplicates`` achieves trivially on exact keys
-(reference analog: scripts/ingest_fec.py dedup + ON CONFLICT paths).
+Both operators are pure DataFrame plans — no driver-side graph state, no
+collect of the graph — and both are built so a DuckDB oracle can replay
+them exactly:
 
-Algorithm: min-label propagation.  Every vertex starts labeled with its
-own id; each round every vertex takes the min of its own label and its
-neighbors' labels; at the fixpoint every vertex carries the min vertex id
-of its component.  Rounds needed = graph diameter — for near-dup
-clusters (quasi-cliques produced by LSH buckets) that is 2-3, so the
-simple propagation beats the O(log n)-round large-star/small-star
-variant (Kiveris et al., "Connected Components in MapReduce and Beyond")
-in both code and constant factors; switch to star contraction only if
-components with long path diameters ever become the workload.
+- ``pagerank_micro`` keeps ranks as BIGINT micro-units, so every round's
+  sums are order-independent integer math and bit-identical across
+  engines (double-valued PageRank re-associates per partitioning and
+  cannot be hash-compared).  Each round is one join of the small rank
+  table with the edge list plus one aggregate shuffle.
+- ``triangles`` orients each edge from its lower-(degree, id) endpoint,
+  which bounds the wedge fan-out at power-law hubs (the "curse of the
+  last reducer"), and emits id-sorted triples so a naive enumeration
+  yields the same row set.
 
-Scale (100 TB): each round is one shuffle join of the label table with
-the symmetrized edge list on the edge key plus a min-aggregate — no
-driver-side graph state, no collect.  Label frames are
-``localCheckpoint``-ed every round, which (a) truncates the lineage so
-the plan does not grow exponentially across iterations and (b)
-materializes each round once.  Convergence is detected without a
-changed-rows join: labels only ever decrease, so ``sum(label)`` is
-strictly monotone until the fixpoint, and one scalar aggregate per round
-(off the already-checkpointed frame) decides termination.
+Lineage: frames consumed more than once are ``localCheckpoint``-ed
+lazily, so an expensive edge-derivation subtree runs once instead of
+being replicated into every consumer of the final plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components of the undirected graph given by ``edges``.
-
-    Returns ``(id, comp)`` for every vertex appearing in any edge, where
-    ``comp`` is the minimum vertex id of the vertex's component — a
-    deterministic, join-able cluster key.  Isolated vertices (no edges)
-    are by definition absent; callers that need singletons left-join the
-    corpus against the result and coalesce ``comp`` to the vertex id.
-
-    ``max_iter`` bounds the propagation rounds (raise only for graphs
-    with pathological path diameters; see module docstring).
-    """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
-    labels = sym.select(F.col("u").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
-    )
-    # lazy checkpoint: the sum-action below materializes it, so each
-    # round runs exactly one job over a lineage of depth one
-    labels = labels.localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels.withColumnRenamed("id", "u"), "u")
-            .groupBy("v")
-            .agg(F.min("comp").alias("ncomp"))
-            .withColumnRenamed("v", "id")
-        )
-        labels = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
 
 
 def pagerank_micro(
@@ -126,7 +68,7 @@ def pagerank_micro(
 
     Scale (100 TB): each round is one shuffle join of the (small) rank
     table with the edge list on ``u`` plus one aggregate shuffle on
-    ``v`` — the same bounded-round shape as ``connected_components``.
+    ``v`` — a bounded number of rounds, each a fixed plan shape.
     The edge+out-degree frame is computed once and reused; with a fixed
     small iteration count the lineage stays shallow, no checkpoint
     needed.  Reference analog: the reference has no graph op — this
@@ -228,7 +170,7 @@ def triangles(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
         # lineage truncation the (often expensive) edge-derivation subtree
         # replicates 6x in the final plan (measured 92 exchanges on the
         # co-purchase query; 10 after).  Same discipline as
-        # connected_components / pagerank_micro.
+        # pagerank_micro.
         .localCheckpoint(eager=False)
     )
     deg = (

@@ -1,5 +1,5 @@
 """Serving-layer declared queries: the full politician-detail request
-(metrics.politician_report) at data scale, driver-oracle-checked.
+(metrics.politician_report_sql) at data scale, checked against DuckDB.
 
 The reference serves GET /politicians/{id} as ~8 sequential ORM queries
 (app/metrics.py:49-93, app/main.py politician detail route); SURVEY §3.2
@@ -58,6 +58,8 @@ from politician_etl_project_spark.queries.registry import declared_query
 
 _PID = 7
 
+# DuckDB oracle of politician_report_sql, a template on {pid}: the
+# registry entry fills in _PID, tests/test_metrics.py other politicians
 _ORACLE = """
 WITH don AS (
   SELECT o_custkey % 149 + 1 AS politician_id,
@@ -77,7 +79,7 @@ dnr AS (
 base AS (
   SELECT d.*, n.name, n.donor_type
   FROM don d JOIN dnr n USING (donor_id)
-  WHERE d.politician_id = 7
+  WHERE d.politician_id = {pid}
 ),
 bil AS (
   SELECT p_partkey AS bill_id,
@@ -120,7 +122,7 @@ tl AS (
          donor_type, SUM(amount) AS total
   FROM base GROUP BY 1, 2
 ),
-myvotes AS (SELECT * FROM vot_pos WHERE politician_id = 7),
+myvotes AS (SELECT * FROM vot_pos WHERE politician_id = {pid}),
 recent_votes AS (
   SELECT v.date, b.official_bill_number
   FROM myvotes v JOIN bil b USING (bill_id)
@@ -150,24 +152,24 @@ SELECT * FROM (
          CAST(total AS DOUBLE) FROM tl
   UNION ALL
   SELECT 'legislative', 'n_sponsored', '',
-         CAST(COUNT(*) AS DOUBLE) FROM bil WHERE sponsor_id = 7
+         CAST(COUNT(*) AS DOUBLE) FROM bil WHERE sponsor_id = {pid}
   UNION ALL
   SELECT 'legislative', 'n_cosponsored', '', CAST(COUNT(*) AS DOUBLE)
-  FROM cos WHERE politician_id = 7
+  FROM cos WHERE politician_id = {pid}
   UNION ALL
   SELECT 'legislative', 'n_original', '',
          CAST(COALESCE(SUM(CASE WHEN is_original_cosponsor THEN 1 ELSE 0 END), 0) AS DOUBLE)
-  FROM cos WHERE politician_id = 7
+  FROM cos WHERE politician_id = {pid}
   UNION ALL
   SELECT 'legislative', 'n_joined_later', '',
          CAST(COALESCE(SUM(CASE WHEN is_original_cosponsor THEN 0 ELSE 1 END), 0) AS DOUBLE)
-  FROM cos WHERE politician_id = 7
+  FROM cos WHERE politician_id = {pid}
   UNION ALL
   SELECT 'legislative', printf('recent_bill_%02d',
            ROW_NUMBER() OVER (ORDER BY date_introduced DESC, official_bill_number)),
          official_bill_number,
          CAST(date_diff('day', DATE '1970-01-01', date_introduced) AS DOUBLE)
-  FROM (SELECT * FROM bil WHERE sponsor_id = 7
+  FROM (SELECT * FROM bil WHERE sponsor_id = {pid}
         ORDER BY date_introduced DESC, official_bill_number LIMIT 10)
   UNION ALL
   SELECT 'voting', 'position_n', COALESCE(vote_position, 'Unknown'),
@@ -185,12 +187,12 @@ ORDER BY section, metric, label
 
 @declared_query(
     "q_metrics_bundle_e2e",
-    oracle=_ORACLE,
+    oracle=_ORACLE.format(pid=_PID),
     ops=("A2", "A5", "A6", "A10", "A11", "J7", "O3", "U1", "W2"),
     doc="ONE politician-detail request end to end — the reference's ~8 "
     "sequential ORM round trips (app/metrics.py:49-93 via app/main.py) "
-    "served as a single unioned long-format DataFrame / one action "
-    "(metrics.politician_report): financial total + by-type pct + "
+    "served as ONE SQL statement / one action "
+    "(metrics.politician_report_sql): financial total + by-type pct + "
     "top-10 donors + monthly timeline + sponsored/cosponsored splits + "
     "recent bills + vote breakdown + recent votes.  Spark schedules "
     "the branch stages concurrently inside one collect, so the benched "
@@ -200,19 +202,16 @@ ORDER BY section, metric, label
     "arithmetic (module docstring) — identical expressions on the "
     "oracle side — and are MATERIALIZED once per corpus "
     "(ensure_domain_store, round-8): partition-laid on politician_id "
-    "so the request partition-prunes to 1/149th of each fact, and "
-    "served via the SQL-text variant (politician_report_sql) whose "
-    "one-shot parse+analyze replaces ~0.55 s of py4j plan "
-    "construction.  Measured sf0.1 isolated: ~0.6-0.7 s/request.  At "
+    "so the request partition-prunes to 1/149th of each fact; the "
+    "SQL text's one-shot parse+analyze replaces ~0.55 s of py4j plan "
+    "construction a DataFrame-API build of the same union costs.  "
+    "Measured sf0.1 isolated: ~0.6-0.7 s/request.  At "
     "100 TB the same layout means the request touches one bucket per "
     "table.",
 )
 def q_metrics_bundle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from politician_etl_project_spark.metrics import politician_report_sql
 
-    # the SQL-text serving variant (one JVM parse+analyze instead of
-    # ~0.55 s of per-transform py4j construction — metrics.py docstring);
-    # row-for-row equal to metrics.politician_report by test
     frames = domain_frames(spark, sf_dir)
     return politician_report_sql(frames, _PID)
 
@@ -439,6 +438,9 @@ def derive_domain_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
     }
 
 
+# DuckDB oracle of scope_report_sql, a template on {scope_pred} (a
+# predicate over pols) and {congress} (an int or NULL): the registry entry
+# fills in the House/117 request, tests/test_metrics.py other scopes
 _SCOPE_ORACLE = """
 WITH pols AS (
   SELECT i AS politician_id,
@@ -448,7 +450,7 @@ WITH pols AS (
          'POL P' || CAST(i AS VARCHAR) AS name
   FROM range(1, 150) t(i)
 ),
-scope AS (SELECT * FROM pols WHERE chamber = 'House'),
+scope AS (SELECT * FROM pols WHERE {scope_pred}),
 don AS (
   SELECT o_custkey % 149 + 1 AS politician_id,
          o_orderkey % 1009 AS donor_id,
@@ -475,7 +477,7 @@ bil AS (
          115 + p_partkey % 4 AS congress
   FROM part
 ),
-cbil AS (SELECT bill_id FROM bil WHERE congress = 117),
+cbil AS (SELECT bill_id FROM bil WHERE {congress} IS NULL OR congress = {congress}),
 cos AS (
   SELECT DISTINCT l_partkey AS bill_id,
          l_suppkey % 149 + 1 AS politician_id,
@@ -528,7 +530,7 @@ SELECT * FROM (
   UNION ALL
   SELECT 'legislative', 'sponsored', '', CAST(COUNT(*) AS DOUBLE)
   FROM bil b JOIN scope s ON b.sponsor_id = s.politician_id
-  WHERE b.congress = 117
+  WHERE {congress} IS NULL OR b.congress = {congress}
   UNION ALL
   SELECT 'legislative', 'cosponsored_original', '',
          CAST(COALESCE(SUM(CASE WHEN is_original_cosponsor THEN 1 ELSE 0 END), 0) AS DOUBLE)
@@ -550,15 +552,15 @@ ORDER BY section, metric, label
 
 @declared_query(
     "q_scope_metrics_e2e",
-    oracle=_SCOPE_ORACLE,
+    oracle=_SCOPE_ORACLE.format(scope_pred="chamber = 'House'", congress=117),
     ops=("A2", "A5", "A6", "A11", "J7", "P8", "O3", "U1", "A10"),
     doc="ONE scope-metrics request end to end (round-7 verdict #6 — "
     "the scope twin of q_metrics_bundle_e2e): GET /metrics/chamber/"
     "house?congress=117, which the reference answers with ~8 "
     "sequential ORM queries re-filtering a driver-side IN-list "
     "(app/metrics.py:245-334; shared engine :133-519), served as a "
-    "single unioned long-format frame (metrics.scope_report over "
-    "metrics.scope_metrics).  Exercises the broadcast "
+    "single SQL statement / long-format frame "
+    "(metrics.scope_report_sql).  Exercises the broadcast "
     "politician-scope semi-join against every fact, the broadcast "
     "bill-id semi-join for the congress filter on cosponsors/votes, "
     "and the grouping/rollup votes total ('TOTAL' row) — all branch "
@@ -570,8 +572,6 @@ ORDER BY section, metric, label
 def q_scope_metrics_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from politician_etl_project_spark.metrics import scope_report_sql
 
-    # SQL-text serving variant (one JVM parse+analyze; row-for-row equal
-    # to metrics.scope_report by test)
     frames = domain_frames(spark, sf_dir)
     tables = dict(frames)
     tables["bill_cosponsors"] = tables.pop("cosponsors")

@@ -75,28 +75,32 @@ def assert_driver_safe_types(spark_schema, con, oracle: str, name: str) -> None:
 
 
 def compare(spark, spec, sf_dir: str) -> None:
-    sdf = spec.fn(spark, sf_dir)
+    compare_df(spec.fn(spark, sf_dir), spec.oracle, sf_dir, spec.name)
+
+
+def compare_df(sdf, oracle: str, sf_dir: str, name: str) -> None:
+    """``compare`` for any Spark frame against any oracle SQL text."""
     s_cols = list(sdf.columns)
 
     con = duck_connect(sf_dir)
     try:
-        assert_driver_safe_types(sdf.schema, con, spec.oracle, spec.name)
+        assert_driver_safe_types(sdf.schema, con, oracle, name)
         s_rows = [tuple(r) for r in sdf.collect()]
         # pandas .df(), NOT fetchall(): the driver floats the DuckDB side,
         # so a nullable int64 becomes float64 (49666 -> 49666.0) and NULL
         # becomes NaN — fetchall() hides exactly that hazard class (two
         # queries passed here at fetchall and failed the r02 driver sim)
-        ddf = con.execute(spec.oracle).df()
+        ddf = con.execute(oracle).df()
         d_cols = list(ddf.columns)
         d_rows = list(ddf.itertuples(index=False, name=None))
     finally:
         con.close()
 
     assert sorted(s_cols) == sorted(d_cols), (
-        f"{spec.name}: column mismatch spark={sorted(s_cols)} duck={sorted(d_cols)}"
+        f"{name}: column mismatch spark={sorted(s_cols)} duck={sorted(d_cols)}"
     )
-    assert len(s_rows) == len(d_rows), f"{spec.name}: rowcount spark={len(s_rows)} duck={len(d_rows)}"
+    assert len(s_rows) == len(d_rows), f"{name}: rowcount spark={len(s_rows)} duck={len(d_rows)}"
     sc, dc = canon_rows(s_cols, s_rows), canon_rows(d_cols, d_rows)
     if sc != dc:
         diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:5]
-        raise AssertionError(f"{spec.name}: value mismatch, first diffs: {diffs}")
+        raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")

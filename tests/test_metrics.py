@@ -122,24 +122,13 @@ def test_pagination_endpoint(wh):
 
 
 def test_politician_report_one_request_consolidation(wh):
-    """politician_report = the whole politician-detail endpoint in one
-    frame: every section present, scalar metrics agreeing with the
+    """politician_report_sql = the whole politician-detail endpoint in
+    one frame: every section present, scalar metrics agreeing with the
     individual bundles it consolidates."""
-    from pyspark.sql import functions as F
-
-    from politician_etl_project_spark import metrics
-
-    pid = (
-        wh.read("politicians").filter(F.col("congress_id") == "P000197").collect()[0].politician_id
-    )
-    rep = metrics.politician_report(
-        wh.read("donations"),
-        wh.read("donors"),
-        wh.read("bills"),
-        wh.read("bill_cosponsors"),
-        wh.read("votes"),
-        pid,
-    )
+    pid = _pid(wh, "P000197")
+    tables = {name: wh.read(name) for name in ("donations", "donors", "bills", "votes")}
+    tables["cosponsors"] = wh.read("bill_cosponsors")
+    rep = metrics.politician_report_sql(tables, pid)
     rows = {(r["section"], r["metric"], r["label"]): r["value"] for r in rep.collect()}
     assert {s for s, _, _ in rows} == {"financial", "legislative", "voting"}
 
@@ -195,7 +184,11 @@ def test_top_donor_tiebreak_is_donor_id(spark):
     )
     cosponsors = spark.createDataFrame([], "bill_id int, politician_id int, is_original_cosponsor boolean")
     votes = spark.createDataFrame([], "politician_id int, bill_id int, date date, vote_position string")
-    report = metrics.politician_report(donations, donors, bills, cosponsors, votes, 1)
+    report = metrics.politician_report_sql(
+        {"donations": donations, "donors": donors, "bills": bills,
+         "cosponsors": cosponsors, "votes": votes},
+        1,
+    )
     ranks = {
         r.metric: (r.label, r.value)
         for r in report.filter(F.col("metric").startswith("top_donor_")).collect()
@@ -206,65 +199,40 @@ def test_top_donor_tiebreak_is_donor_id(spark):
     assert ranks["top_donor_03"] == ("AAA FIRST", 50.0)
 
 
-def test_report_sql_equals_dataframe_api(spark):
-    """The SQL-text serving variants must be row-for-row equal to the
-    composable DataFrame bundles they shadow (round-8: the serving
-    queries moved to SQL text to cut ~0.55-0.6 s of per-request py4j
-    plan construction; this pins the two implementations together)."""
-    from politician_etl_project_spark.metrics import (
-        politician_report,
-        politician_report_sql,
-        scope_report,
-        scope_report_sql,
+def test_report_sql_matches_duckdb_oracles(spark, sf_dir):
+    """The SQL serving reports against the independent DuckDB oracles of
+    q_metrics_bundle_e2e / q_scope_metrics_e2e, filled in for other
+    politicians and scopes than the registry's — including the empty
+    scope, whose votes TOTAL must still read 0."""
+    from politician_etl_project_spark.queries.serving import (
+        _ORACLE,
+        _SCOPE_ORACLE,
+        domain_frames,
     )
-    from politician_etl_project_spark.queries.serving import _PID, domain_frames
+    from tests.oracle_utils import compare_df
 
-    frames = domain_frames(spark, "/root/testdata/sf0.001")
-    df_rows = sorted(
-        map(
-            tuple,
-            politician_report(
-                frames["donations"],
-                frames["donors"],
-                frames["bills"],
-                frames["cosponsors"],
-                frames["votes"],
-                _PID,
-            ).collect(),
+    frames = domain_frames(spark, sf_dir)
+    for pid in (7, 3, 149):  # the registry's, another, the range edge
+        compare_df(
+            metrics.politician_report_sql(frames, pid),
+            _ORACLE.format(pid=pid),
+            sf_dir,
+            f"politician_report_sql({pid})",
         )
-    )
-    sql_rows = sorted(map(tuple, politician_report_sql(frames, _PID).collect()))
-    assert df_rows == sql_rows and len(df_rows) > 20
-    for pid in (3, 149):  # other politicians, including the range edge
-        a = sorted(
-            map(
-                tuple,
-                politician_report(
-                    frames["donations"],
-                    frames["donors"],
-                    frames["bills"],
-                    frames["cosponsors"],
-                    frames["votes"],
-                    pid,
-                ).collect(),
-            )
-        )
-        b = sorted(map(tuple, politician_report_sql(frames, pid).collect()))
-        assert a == b, f"report SQL diverged for politician {pid}"
 
     tables = dict(frames)
     tables["bill_cosponsors"] = tables.pop("cosponsors")
-    for kwargs in (
-        {"chamber": "house", "congress": 117},
-        {"party": "D"},
-        {"ids": [3, 7, 11], "congress": 116},
-        {"ids": [9999]},  # empty scope: every aggregate leg on no rows
-        {},
+    for kwargs, scope_pred in (
+        ({"chamber": "house", "congress": 117}, "chamber = 'House'"),
+        ({"party": "D"}, "party = 'D'"),
+        ({"ids": [3, 7, 11], "congress": 116}, "politician_id IN (3, 7, 11)"),
+        ({"ids": [9999]}, "politician_id = 9999"),  # empty scope: every leg on no rows
+        ({}, "TRUE"),
     ):
-        a = sorted(map(tuple, scope_report(tables, **kwargs).collect()))
-        b = sorted(map(tuple, scope_report_sql(tables, **kwargs).collect()))
-        assert a == b, f"scope SQL diverged for {kwargs}"
-        assert len(a) > 10 or kwargs == {"ids": [9999]}
+        oracle = _SCOPE_ORACLE.format(scope_pred=scope_pred, congress=kwargs.get("congress", "NULL"))
+        compare_df(
+            metrics.scope_report_sql(tables, **kwargs), oracle, sf_dir, f"scope_report_sql({kwargs})"
+        )
 
 
 def test_domain_store_equals_derivation(spark):

@@ -69,6 +69,31 @@ def test_donor_build_deterministic(spark, fec_dir):
     assert keys == sorted(keys)
 
 
+def test_donor_build_null_filing_ids(spark, tmp_path):
+    """An empty SUB_ID reads as NULL under the all-string PERMISSIVE
+    scan; a donor whose every filing id is NULL must still keep its
+    attributes (min_by skips NULL ordering keys), and one with any
+    non-NULL filing id must keep the minimum one's."""
+    lines = [
+        "C001|N|YE||img|15|IND|ROE, RICHARD|DALLAS|TX|75201|ACME|ENG|03152024|200|||1|||",
+        "C001|N|YE||img|15|IND|ROE, RICHARD|AUSTIN|TX|75201|ACME|ENG|03162024|300|||1|||",
+        "C001|N|YE||img|15|IND|POE, EDGAR|WACO|TX|76701|X|Y|03172024|50|||1|||",
+        "C001|N|YE||img|15|IND|POE, EDGAR|ELGIN|TX|76701|X|Y|03182024|60|||1|||SUB0000000009",
+        "C001|N|YE||img|15|IND|POE, EDGAR|BASTROP|TX|76701|X|Y|03192024|70|||1|||SUB0000000008",
+    ]
+    (tmp_path / "itcont.txt").write_text("\n".join(lines) + "\n")
+    it = fec.read_itcont(spark, str(tmp_path / "itcont.txt"))
+    linked = spark.createDataFrame([("C001",)], "CMTE_ID string")
+    got = {r.name: r for r in fec.build_donors(fec.transform_donations(it, linked)).collect()}
+    assert set(got) == {"ROE, RICHARD", "POE, EDGAR"}
+    # all filing ids NULL: a real row wins, ties broken on the attributes
+    assert (got["ROE, RICHARD"].city, got["ROE, RICHARD"].donor_source_key) == (
+        "AUSTIN",
+        "ROE, RICHARD|75201|ACME",
+    )
+    assert got["POE, EDGAR"].city == "BASTROP"  # min non-NULL filing id
+
+
 def test_ccl_union_dedup(spark, fec_dir):
     ccl = fec.read_ccl(spark, str(fec_dir / "ccl24.txt"), str(fec_dir / "ccl26.txt"))
     assert ccl.count() == 3  # 4 lines, 1 exact dup dropped

@@ -378,7 +378,6 @@ def segment_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     seg_tokens: int = 3,
-    key: str = "digest",
 ) -> DataFrame:
     """Corpus-level EXACT segment deduplication — the line/paragraph
     dedup stage of public pretraining pipelines (C4 drops repeated
@@ -393,42 +392,32 @@ def segment_dedup(
     was seen earlier (nullable STRING, driver-safe).
 
     Scale (100 TB): the keep-first winner per segment is
-    ``min(struct(doc_id, seg_idx))`` under a ``groupBy(seg)`` — a
+    ``min(struct(doc_id, seg_idx))`` grouped by segment — a
     PLAIN AGGREGATE, deliberately not a row_number window: partial
     aggregation combines map-side, so a boilerplate segment repeated
     billions of times ("all rights reserved") collapses to one row
     per map task before the exchange, where a window would sort the
     entire hot partition on one task.  Total cost: one agg shuffle on
-    the segment value + one groupBy(doc) to reassemble + one join on
+    the segment digest + one groupBy(doc) to reassemble + one join on
     doc id.  No window, no self-join, no per-row Python.
 
-    ``key`` picks what the winner exchange carries:
-
-    - ``'digest'`` (default since r11 — the builder's own 5x sweep
-      step caught the direct form's winner exchange growing 4.17x on
-      raw segment text, the fattest shuffle in the engine, while the
-      digest form shuffles O(segments x 16B)): the winner agg keys on
-      a 16-byte MD5 of the
-      segment, so the hot exchange carries digests + ids — never
-      segment text.  Survivor text is then RE-DERIVED ROW-LOCALLY by
-      re-slicing each doc's own token array at the surviving indices
-      (a winner is fully identified by (doc, seg_idx)), which also
-      replaces the direct form's text-carrying reassembly groupBy
-      with an ids-only one.  No segment-text key can ever hot-spot an
-      exchange, and 128-bit digests make collisions ignorable at any
-      corpus size (~2^64 segments for a 50% birthday bound).
-      Hash-proven equal to the direct form (tests + the shared DuckDB
-      oracle of q_segment_dedup_direct).
-    - ``'direct'``: the raw segment text is the groupBy key — one
-      fewer projection, fine when segments are short AND the corpus
-      is small; kept as the documented comparison twin.
+    The winner exchange carries digests, never segment text: the
+    winner agg keys on a 16-byte MD5 of the segment, so the hot
+    exchange carries digests + ids (O(segments x 16B); keying on the
+    raw text grew that exchange 4.17x on a 5x corpus step, SCALE.md).
+    Survivor text is then RE-DERIVED ROW-LOCALLY by re-slicing each
+    doc's own token array at the surviving indices (a winner is fully
+    identified by (doc, seg_idx)), so the reassembly groupBy is
+    ids-only too.  No segment-text key can ever hot-spot an exchange,
+    and 128-bit digests make collisions ignorable at any corpus size
+    (~2^64 segments for a 50% birthday bound).  Checked against a
+    pure-Python keep-first reference (tests) and q_segment_dedup's
+    DuckDB oracle.
 
     Reference analog: no dedup tier exists in the reference
     (documents are served verbatim, app/database.py); this is part of
     the LLM-data-pipeline surface the Spark engine adds.
     """
-    if key not in ("direct", "digest"):
-        raise ValueError(f"key must be 'direct' or 'digest', got {key!r}")
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     n_segs = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
     segs = docs.select(
@@ -448,67 +437,41 @@ def segment_dedup(
         F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("bigint").alias("n_segs"),
     ).where(F.col("n_segs").isNotNull())
 
-    if key == "digest":
-        # hot exchange carries (16B digest, ids) — the segment text is
-        # dropped BEFORE the shuffle and re-derived row-locally at the end
-        winners = (
-            segs.select(F.unhex(F.md5("seg")).alias("dg"), id_col, "seg_idx")
-            .groupBy("dg")
-            .agg(F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("w"))
+    # hot exchange carries (16B digest, ids) — the segment text is
+    # dropped BEFORE the shuffle and re-derived row-locally at the end
+    winners = (
+        segs.select(F.unhex(F.md5("seg")).alias("dg"), id_col, "seg_idx")
+        .groupBy("dg")
+        .agg(F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("w"))
+    )
+    kept_idx_per_doc = (
+        winners.select(
+            F.col(f"w.{id_col}").alias(id_col), F.col("w.seg_idx").alias("seg_idx")
         )
-        kept_idx_per_doc = (
-            winners.select(
-                F.col(f"w.{id_col}").alias(id_col), F.col("w.seg_idx").alias("seg_idx")
-            )
-            .groupBy(id_col)
-            .agg(
-                F.count("*").cast("bigint").alias("n_kept"),
-                F.array_sort(F.collect_list("seg_idx")).alias("kept_idx"),
-            )
+        .groupBy(id_col)
+        .agg(
+            F.count("*").cast("bigint").alias("n_kept"),
+            F.array_sort(F.collect_list("seg_idx")).alias("kept_idx"),
         )
-        # survivor text re-derived from the doc's OWN token array — a
-        # winner is uniquely (doc, seg_idx), so re-slicing reproduces the
-        # exploded segment bit-for-bit with zero text ever shuffled on a
-        # segment key
-        doc_toks = docs.select(F.col(id_col), toks.alias("_toks"))
-        rebuilt = F.concat_ws(
-            " ",
-            F.transform(
-                F.col("kept_idx"),
-                lambda i: F.concat_ws(
-                    " ", F.slice(F.col("_toks"), i * seg_tokens + 1, seg_tokens)
-                ),
+    )
+    # survivor text re-derived from the doc's OWN token array — a
+    # winner is uniquely (doc, seg_idx), so re-slicing reproduces the
+    # exploded segment bit-for-bit with zero text ever shuffled on a
+    # segment key
+    doc_toks = docs.select(F.col(id_col), toks.alias("_toks"))
+    rebuilt = F.concat_ws(
+        " ",
+        F.transform(
+            F.col("kept_idx"),
+            lambda i: F.concat_ws(
+                " ", F.slice(F.col("_toks"), i * seg_tokens + 1, seg_tokens)
             ),
-        )
-        joined = per_doc.join(kept_idx_per_doc, id_col, "left").join(doc_toks, id_col)
-        return joined.select(
-            F.col(id_col),
-            "n_segs",
-            F.coalesce(F.col("n_kept"), F.lit(0).cast("bigint")).alias("n_kept"),
-            F.when(F.col("kept_idx").isNotNull(), rebuilt).alias("kept_text"),
-        )
-
-    winners = segs.groupBy("seg").agg(
-        F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("w")
+        ),
     )
-    kept = winners.select(
-        F.col(f"w.{id_col}").alias(id_col),
-        F.col("w.seg_idx").alias("seg_idx"),
-        "seg",
-    )
-    kept_per_doc = kept.groupBy(id_col).agg(
-        F.count("*").cast("bigint").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
-                lambda s: s["seg"],
-            ),
-        ).alias("kept_text"),
-    )
-    return per_doc.join(kept_per_doc, id_col, "left").select(
+    joined = per_doc.join(kept_idx_per_doc, id_col, "left").join(doc_toks, id_col)
+    return joined.select(
         F.col(id_col),
         "n_segs",
         F.coalesce(F.col("n_kept"), F.lit(0).cast("bigint")).alias("n_kept"),
-        "kept_text",
+        F.when(F.col("kept_idx").isNotNull(), rebuilt).alias("kept_text"),
     )

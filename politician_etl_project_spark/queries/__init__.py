@@ -11,12 +11,6 @@ value hash honest (see ``registry.py`` docstring for the mechanism):
   DECIMAL outputs in ``CAST(... AS DOUBLE)`` / HUGEINT outputs in
   ``CAST(... AS BIGINT)`` via ``SELECT * REPLACE`` — so DuckDB's float
   canonicalization and Spark's rendering agree cell-for-cell.
-
-``load_all`` also orders the registry deliberately: the driver verifies a
-finite window of entries per round (50 in round 1), so the first slots are
-packed with (a) every query that hash-failed round 1 — proving the decimal
-fix — and (b) one representative per SURVEY §2 family and per
-LLM-data-pipeline operator, with redundant TPC-H plan shapes pushed last.
 """
 
 from __future__ import annotations
@@ -25,258 +19,6 @@ import dataclasses
 import os
 
 from politician_etl_project_spark.queries.registry import REGISTRY, QuerySpec, declared_query
-
-DRIVER_WINDOW = [
-    # --- ROUND-12 WINDOW (driver checks [:50]) ---
-    # Slots 1-6: sentinels — implementation changed THIS round, so their
-    # prior green predates the edit (see WINDOW_SENTINELS):
-    # q_dedup_incremental (store-probe left-semi near join + the
-    # parallel-listing threshold fix), q_etl_run_all / q_etl_incremental
-    # (build_donors first-wins window -> min_by aggregate),
-    # q_stateful_totals_live / q_stream_interval_join_live /
-    # q_watermark_latedrop (throwaway stream checkpoints moved to tmpfs).
-    # Slots 7-27: the 21 remaining r7-stale names (alphabetical;
-    # q_watermark_latedrop is the 22nd but already holds a sentinel
-    # slot) — exactly the ROUND-12 PLAN the r11 window comment carried.
-    # Slots 28-50: the alphabetically-first 23 r8-stale names.
-    # ROUND-13 PLAN (keep rotation mechanical): head = any new/rewritten
-    # queries + the 23 remaining r8-stale names (q_event_paths ..
-    # q_window_running_sum, alphabetical) + the alphabetically-first
-    # r9-stale names to fill 50.
-    # tests/test_window.py asserts this composition mechanically
-    # (never-checked subset of head; non-sentinel verified head slots no
-    # fresher than any verified name outside, judged boundary-aware).
-    "q_dedup_incremental",
-    "q_etl_run_all",
-    "q_etl_incremental",
-    "q_stateful_totals_live",
-    "q_stream_interval_join_live",
-    "q_watermark_latedrop",
-    "q_pii_scrub",
-    "q_pivot_status_matrix",
-    "q_range_join",
-    "q_repetition_filter",
-    "q_retention_cohorts",
-    "q_rolling_fingerprint",
-    "q_rollup_hierarchy",
-    "q_scd2_history",
-    "q_sequence_packing",
-    "q_session_windows",
-    "q_simhash",
-    "q_sliding_window",
-    "q_src_bills_xml",
-    "q_src_members",
-    "q_stats_prune",
-    "q_surrogate_ids",
-    "q_token_stats",
-    "q_train_shuffle",
-    "q_tumbling_window",
-    "q_vector_norms",
-    "q_watermark_cutoff",
-    "q_abtest_lift",
-    "q_ann_index_extend",
-    "q_ann_pq",
-    "q_ann_recall_eval",
-    "q_bloom_prune",
-    "q_bm25_index_extend",
-    "q_bpe_train_merges",
-    "q_bpe_vocab_stats",
-    "q_bucketed_join",
-    "q_calendar_spine",
-    "q_cdc_apply",
-    "q_committee_roster_e2e",
-    "q_correlation",
-    "q_countmin_sketch",
-    "q_dashboard_stats_e2e",
-    "q_data_profile",
-    "q_dedup_multi_policy",
-    "q_dedup_survivors",
-    "q_dpp_prune",
-    "q_dq_constraints",
-    "q_dup_clusters",
-    "q_embed_dup_clusters",
-    "q_embed_quantize",
-    "q_segment_dedup_direct",
-    "q_segment_dedup",
-    "q_media_decode_jpeg",
-    "q_except",
-    "q_exists_probe",
-    "q_fuzzy_match_topk",
-    "q_global_stats",
-    "q_in_list_dim",
-    "q_intersect",
-    "q_like_keyword",
-    "q_max_regex_extract",
-    "q_monthly_timeline",
-    "q_multikey_sort",
-    "q_name_split_map",
-    "q_near_dup_pairs_capped",
-    "q_pagination",
-    "q_pct_of_total",
-    "q_pretrain_e2e",
-    "q_proj_concat",
-    "q_recent_n",
-    "q_salted_agg",
-    "q_scalar_kitchen",
-    "q_segment_dedup_digest",
-    "q_semi_join",
-    "q_src_jdbc",
-    "q_topk_customers",
-    "q_union_distinct",
-    "q_ann_batch",
-    "q_approx_sketches",
-    "q_boilerplate_shingles",
-    "q_bpe_merge_candidates",
-    "q_bpe_token_count",
-    "q_child_roster_page",
-    "q_context_windows",
-    "q_corpus_stats",
-    "q_cube_matrix",
-    "q_decontamination",
-    "q_entity_navigation",
-    "q_event_funnel",
-    "q_format_report",
-    "q_grouping_sets",
-    "q_hll_mergeable",
-    "q_label_centroid",
-    "q_lang_id",
-    "q_list_endpoint_page",
-    "q_media_metadata",
-    "q_near_dup_pairs",
-    "q_ngram_jaccard_pairs",
-    "q_percentiles",
-    "q_media_decode_real",
-    "q_media_decode_png",
-    "q_domain_stats",
-    "q_embed_near_dup",
-    "q_event_dedup",
-    "q_fact_dim_rollup",
-    "q_filter_eq_range",
-    "q_frame_sample",
-    "q_hash_split",
-    "q_incremental_rollup",
-    "q_json_extract",
-    "q_junction_hierarchy",
-    "q_k_anonymity",
-    "q_knn_bruteforce",
-    "q_knn_with_metadata",
-    "q_left_join_coalesce",
-    "q_limit1_probe",
-    "q_media_pixel_stats",
-    "q_merge_batch_replay",
-    "q_minhash_calibration",
-    "q_minhash_signatures",
-    "q_pq_rerank",
-    "q_sketch_merge_replay",
-    "q_src_votes_json",
-    "q_time_travel",
-    "q_url_canonicalize",
-    "q02_min_cost_supplier",
-    "q03_shipping_priority",
-    "q04_order_priority",
-    "q05_region_volume",
-    "q11_important_value",
-    "q13_order_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_disjunctive_revenue",
-    "q20_part_promotion",
-    "q21_waiting_suppliers",
-    "q_anti_join",
-    "q_avg_by_segment",
-    "q_bm25_indexed",
-    "q_bm25_topk",
-    "q_conditional_split",
-    "q_count_distinct",
-    "q_dedup_keep_first",
-    "q_dedup_keep_last",
-    "q_dynamic_filters",
-    "q_compaction_maintenance",
-    "q_semantic_search_e2e",
-    "q_lm_quality_score",
-    "q_moments_mergeable",
-    "q_negative_sampling",
-    "q_orc_roundtrip",
-    "q_outlier_zscore",
-    "q_pagerank",
-    "q_pmi_terms",
-    "q_provenance_audit",
-    "q_quantile_normalize",
-    "q_schema_drift",
-    "q_schema_evolution",
-    "q_simhash_banded",
-    "q_simhash_near_pairs",
-    "q_skew_diagnostic",
-    "q_snapshot_diff",
-    "q_time_to_convert",
-    "q_triangle_count",
-    "q_weighted_downsample",
-    "q_weighted_sample_topk",
-    "q_window_range_frame",
-    "q_zorder_layout",
-    "q01_pricing_summary",
-    "q06_forecast_revenue",
-    "q07_nation_volume",
-    "q08_market_share",
-    "q09_product_profit",
-    "q10_returned_items",
-    "q12_late_shipments",
-    "q18_large_orders",
-    "q22_dormant_customers",
-    "q_ann_ivf",
-    "q_ann_lsh",
-    "q_asof_join",
-    "q_bigram_lm_score",
-    "q_broadcast_lookup",
-    "q_cdf_read",
-    "q_composite_key_join",
-    "q_corpus_mixture",
-    "q_curation_funnel",
-    "q_date_roundtrip",
-    "q_dedup_exact",
-    "q_scope_metrics_e2e",
-    "q_rollup_maintenance_live",
-    "q_snapshot_append_live",
-    "q_metrics_bundle_e2e",
-    "q_funnel_clusters",
-    "q_src_committees_yaml",
-    "q_src_fec_csv",
-    "q_stratified_sample",
-    "q_text_quality",
-    "q_tfidf_top_terms",
-    "q_unpivot_measures",
-    "q_window_lag_lead",
-    "q_window_moving_avg",
-    "q_window_ntile",
-    "q_window_rank",
-    "q_window_running_sum",
-    "q_equidepth_histogram",
-    "q_event_paths",
-    "q_event_transitions",
-    "q_feature_hashing",
-    "q_gap_fill",
-    "q_hybrid_rrf",
-    "q_inverted_index",
-]
-
-
-# Sentinels: head slots re-verifying queries whose implementation changed
-# THIS round (their prior green predates the edit) — exempt from the
-# stalest-first head rule, bounded to keep rotation honest.
-WINDOW_SENTINELS = [
-    # r12: stage-4 store probe rewritten inner+distinct -> left-semi;
-    # store reads no longer launch a parallel-listing job
-    "q_dedup_incremental",
-    # r12: build_donors first-wins row_number window -> min_by aggregate
-    "q_etl_run_all",
-    "q_etl_incremental",
-    # r12: throwaway streaming checkpoints moved to tmpfs (ephemeral_ckpt)
-    "q_stateful_totals_live",
-    "q_stream_interval_join_live",
-    "q_watermark_latedrop",
-]
 
 _ORACLE_TABLES = (
     "region",
@@ -346,7 +88,7 @@ _CANON_CACHE: dict[str, QuerySpec] | None = None
 
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module; return the registry in driver-window order
+    """Import every query module; return the registry in import order
     with canonicalized oracles."""
     global _CANON_CACHE
     from politician_etl_project_spark.queries import (  # noqa: F401
@@ -369,17 +111,13 @@ def load_all() -> dict[str, QuerySpec]:
     )
 
     if _CANON_CACHE is None:
-        missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-        if missing:
-            raise RuntimeError(f"DRIVER_WINDOW names not in registry: {missing}")
-        ordered = {n: REGISTRY[n] for n in DRIVER_WINDOW}
-        ordered.update({n: s for n, s in REGISTRY.items() if n not in ordered})
-        canon = _canonicalize_all(ordered)
+        specs = dict(REGISTRY)
+        canon = _canonicalize_all(specs)
         if canon is None:
             # setup unavailable (no duckdb/testdata yet): serve raw this
             # time and RETRY on the next call rather than pinning
             # un-canonicalized oracles for the session
-            return ordered
+            return specs
         _CANON_CACHE = canon
     return dict(_CANON_CACHE)
 
@@ -389,6 +127,4 @@ __all__ = [
     "QuerySpec",
     "declared_query",
     "load_all",
-    "DRIVER_WINDOW",
-    "WINDOW_SENTINELS",
 ]

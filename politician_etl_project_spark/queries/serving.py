@@ -278,8 +278,8 @@ _FRAME_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 def domain_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The politician-domain tables AS A MATERIALIZED STORE (what a
-    migrating user actually has) — shared by q_metrics_bundle_e2e and
-    by bench.py's sum-of-parts comparison entry.  Partition columns are
+    migrating user actually has) — read by q_metrics_bundle_e2e and the
+    other serving queries.  Partition columns are
     cast back to bigint (parquet partition discovery infers int32).
 
     DataFrame handles are cached per (session, store): re-reading the

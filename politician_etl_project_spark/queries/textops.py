@@ -239,9 +239,9 @@ ORDER BY id_a, id_b
     "the synthetic corpus is pathologically dense — at sf0.1, 5k docs "
     "yield 7.5M candidates of which 2.8M pairs VERIFY at Jaccard>=0.8, "
     "so runtime there (~12 s compute) is the answer's volume, not plan "
-    "waste.  bench.py therefore times this query on a same-size corpus "
-    "at realistic 1-10% duplication density (tools/gen_sparse_docs.py, "
-    "BENCH_SF_OVERRIDE) where the measured cost is candidate-gen + "
+    "waste.  tools/isolate.py therefore times this query on a same-size "
+    "corpus at realistic 1-10% duplication density "
+    "(tools/gen_sparse_docs.py) where the measured cost is candidate-gen + "
     "verify; production corpora at high density use the capped twin "
     "(q_near_dup_pairs_capped) or go straight to clusters "
     "(q_dup_clusters).",
@@ -1760,11 +1760,10 @@ ORDER BY t.doc_id
     "segment is min(struct(doc_id, seg_idx)) under a plain groupBy — "
     "map-side combine collapses boilerplate-hot segments BEFORE the "
     "exchange, where the oracle's row_number window (fine at oracle "
-    "scale) would sort a 100 TB hot key on one task.  DIGEST-KEYED "
-    "since r11 (the operator default): the winner exchange carries a "
-    "16-byte MD5 + ids instead of segment text — the builder's own "
-    "sf0.5 sweep caught the direct form's winner exchange growing "
-    "4.17x on raw text, the fattest shuffle in the engine — and "
+    "scale) would sort a 100 TB hot key on one task.  DIGEST-KEYED: "
+    "the winner exchange carries a 16-byte MD5 + ids instead of segment "
+    "text — keyed on raw text, that exchange grew 4.17x on the sf0.5 "
+    "sweep's 5x step (SCALE.md), the fattest shuffle in the engine — and "
     "survivor text is re-derived row-locally by re-slicing each doc's "
     "own token array at the surviving indices.  operators/"
     "dedup.segment_dedup.",
@@ -1774,51 +1773,3 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return segment_dedup(docs, "doc_id", "text", seg_tokens=3).orderBy("doc_id")
-
-
-_SEGMENT_DEDUP_ORACLE = REGISTRY["q_segment_dedup"].oracle
-
-
-@declared_query(
-    "q_segment_dedup_direct",
-    oracle=_SEGMENT_DEDUP_ORACLE,
-    ops=("DEDUP-segment", "A14", "U2"),
-    doc="q_segment_dedup's STRING-KEYED twin (segment_dedup(key="
-    "'direct'), the pre-r11 default): the raw segment text is the "
-    "winner groupBy key — one fewer projection, fine at short segment "
-    "width on a small corpus, but its winner exchange is output-bound "
-    "on segment text at scale (4.17x growth on the sweep's 5x step, "
-    "SCALE.md), which is why the digest form is now the default.  "
-    "Shares q_segment_dedup's oracle verbatim — a green hash on BOTH "
-    "twins IS the proof the digest path loses nothing vs the direct "
-    "form.",
-)
-def q_segment_dedup_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from politician_etl_project_spark.operators.dedup import segment_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    return segment_dedup(docs, "doc_id", "text", seg_tokens=3, key="direct").orderBy(
-        "doc_id"
-    )
-
-
-@declared_query(
-    "q_segment_dedup_digest",
-    oracle=_SEGMENT_DEDUP_ORACLE,
-    ops=("DEDUP-segment", "A14", "U2"),
-    doc="The digest-keyed segment dedup under its HISTORICAL NAME "
-    "(driver-checked r6, benched every round since): when r11 made "
-    "the digest plan q_segment_dedup's default, this name kept its "
-    "exact pre-r11 computation and plan (segment_dedup(key='digest')) "
-    "— bench/oracle entries are never removed or renamed, so the "
-    "round-over-round per-query delta baseline stays unbroken.  Same "
-    "shared oracle as both twins; its plan is now identical to "
-    "q_segment_dedup's.",
-)
-def q_segment_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from politician_etl_project_spark.operators.dedup import segment_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    return segment_dedup(docs, "doc_id", "text", seg_tokens=3, key="digest").orderBy(
-        "doc_id"
-    )

@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``min(16g, MemTotal/2)`` in MiB: a fixed 16g heap ceiling sits
+    above physical memory on a host with less than 32 GiB of RAM.  Falls
+    back to 16g where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(16 * 1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "16g"
+
+
 def get_spark(app_name: str = "politician-etl-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Split-size governs scan parallelism: the default 128 MiB is right for
@@ -61,7 +75,7 @@ def get_spark(app_name: str = "politician-etl-spark") -> SparkSession:
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

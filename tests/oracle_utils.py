@@ -3,13 +3,15 @@
 Runs a declared query through Spark and its oracle SQL through DuckDB over
 the same parquet tables, canonicalizes values, and compares row count +
 column names + an order-insensitive multiset of rows (columns sorted by
-name — same scheme the driver describes in ``__spark_entry__``)."""
+name — same scheme the driver describes in ``__spark_entry__``).  Also
+holds pure-Python references for operators tested on hand-built frames."""
 
 from __future__ import annotations
 
 import datetime as dt
 import decimal
 import math
+import re
 
 import duckdb
 
@@ -104,3 +106,27 @@ def compare_df(sdf, oracle: str, sf_dir: str, name: str) -> None:
     if sc != dc:
         diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def segment_dedup_reference(docs, seg_tokens: int = 3) -> dict:
+    """Pure-Python keep-first segment dedup over ``(doc_id, text)`` pairs:
+    ``{doc_id: (n_segs, n_kept, kept_text)}``.  Tokens split like the
+    operator (trim spaces, split on whitespace runs); each distinct
+    segment survives only at its minimum ``(doc_id, seg_idx)``;
+    ``kept_text`` is None when nothing survives; NULL texts drop out."""
+    segs = {}
+    for doc_id, text in docs:
+        if text is not None:
+            toks = re.split(r"\s+", text.strip(" "))
+            segs[doc_id] = [
+                " ".join(toks[i : i + seg_tokens]) for i in range(0, len(toks), seg_tokens)
+            ]
+    winner: dict[str, tuple] = {}
+    for doc_id in sorted(segs):
+        for idx, seg in enumerate(segs[doc_id]):
+            winner.setdefault(seg, (doc_id, idx))
+    out = {}
+    for doc_id, ss in segs.items():
+        kept = [seg for idx, seg in enumerate(ss) if winner[seg] == (doc_id, idx)]
+        out[doc_id] = (len(ss), len(kept), " ".join(kept) if kept else None)
+    return out

@@ -235,7 +235,7 @@ def test_report_sql_matches_duckdb_oracles(spark, sf_dir):
         )
 
 
-def test_domain_store_equals_derivation(spark):
+def test_domain_store_equals_derivation(spark, sf_dir):
     """The materialized domain store must hold exactly the derived
     frames — schema (names, types, nullability-insensitive) and full
     row multiset per table.  Catches silent drift between
@@ -248,9 +248,8 @@ def test_domain_store_equals_derivation(spark):
         domain_frames,
     )
 
-    sf = "/root/testdata/sf0.001"
-    stored = domain_frames(spark, sf)
-    derived = derive_domain_frames(spark, sf)
+    stored = domain_frames(spark, sf_dir)
+    derived = derive_domain_frames(spark, sf_dir)
     assert set(stored) == set(_DOMAIN_TABLES) == set(derived)
     for name in _DOMAIN_TABLES:
         s_df, d_df = stored[name], derived[name]
@@ -261,4 +260,4 @@ def test_domain_store_equals_derivation(spark):
         s_rows = sorted(map(tuple, s_df.select(cols).collect()))
         d_rows = sorted(map(tuple, d_df.select(cols).collect()))
         assert s_rows == d_rows, f"{name}: stored rows diverged from derivation"
-        assert len(s_rows) > 0 or name in ("assignments",), f"{name}: empty at sf0.001"
+        assert len(s_rows) > 0 or name in ("assignments",), f"{name}: empty at {sf_dir}"

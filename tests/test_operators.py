@@ -1275,35 +1275,27 @@ def test_text_index_empty_docs_zero_length(spark, tmp_path):
     assert abs(stats["avgdl"] - 0.75) < 1e-12
 
 
-def test_segment_dedup_digest_equals_direct(spark):
-    """segment_dedup(key='digest') must reproduce the direct form
-    bit-for-bit — including reassembled survivor text — on a corpus
-    with cross-doc duplicate segments, fully-duplicate docs (NULL
-    kept_text), and ragged tail segments."""
+def test_segment_dedup_equals_python_reference(spark):
+    """segment_dedup must equal the pure-Python keep-first reference —
+    including reassembled survivor text — on a corpus with cross-doc
+    duplicate segments, fully-duplicate docs (NULL kept_text), and
+    ragged tail segments."""
     from politician_etl_project_spark.operators.dedup import segment_dedup
 
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g"),          # ragged tail seg "g"
-            (2, "a b c x y z"),            # first seg duplicates doc 1's
-            (3, "a b c d e f"),            # BOTH segs seen earlier -> NULL
-            (4, "x y z a b c q"),          # segments in different alignment
-            (5, "lone doc"),
-        ],
-        "doc_id bigint, text string",
-    )
-    direct = {
-        r["doc_id"]: tuple(r)
-        for r in segment_dedup(docs, key="direct").collect()
-    }
-    digest = {
-        r["doc_id"]: tuple(r)
-        for r in segment_dedup(docs, key="digest").collect()
-    }
-    assert direct == digest
-    assert direct[3][3] is None  # fully-duplicate doc reassembles to NULL
-    with pytest.raises(ValueError, match="key must be"):
-        segment_dedup(docs, key="sha")
+    from tests.oracle_utils import segment_dedup_reference
+
+    rows = [
+        (1, "a b c d e f g"),          # ragged tail seg "g"
+        (2, "a b c x y z"),            # first seg duplicates doc 1's
+        (3, "a b c d e f"),            # BOTH segs seen earlier -> NULL
+        (4, "x y z a b c q"),          # segments in different alignment
+        (5, "lone doc"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r["doc_id"]: tuple(r)[1:] for r in segment_dedup(docs).collect()}
+    assert got == segment_dedup_reference(rows)
+    assert got[1] == (3, 3, "a b c d e f g")  # ragged tail kept as a segment
+    assert got[3] == (2, 0, None)  # fully-duplicate doc reassembles to NULL
 
 
 def test_extend_text_index_equals_full_rebuild(spark, tmp_path):

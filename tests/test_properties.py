@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from politician_etl_project_spark.operators.skew import salted_agg, salted_broadcast_left
 from politician_etl_project_spark.operators.upsert import insert_if_absent, merge_keep
+from tests.oracle_utils import segment_dedup_reference
 
 rows_strategy = st.lists(
     st.tuples(
@@ -707,18 +708,6 @@ _seg_corpus = st.lists(
 )
 
 
-def _segment_dedup_model(texts, k=3):
-    """Brute-force keep-first model over (doc order, segment order)."""
-    seen = set()
-    out = {}
-    for doc_id, text in enumerate(texts):
-        w = text.split()
-        segs = [" ".join(w[i : i + k]) for i in range(0, len(w), k)]
-        kept = [s for s in segs if s not in seen and not seen.add(s)]
-        out[doc_id] = (len(segs), len(kept), " ".join(kept) if kept else None)
-    return out
-
-
 @given(texts=_seg_corpus, parts=st.sampled_from([1, 5]))
 @settings(**_SETTINGS)
 def test_segment_dedup_matches_python_model(spark, texts, parts):
@@ -734,7 +723,7 @@ def test_segment_dedup_matches_python_model(spark, texts, parts):
         r.doc_id: (r.n_segs, r.n_kept, r.kept_text)
         for r in segment_dedup(docs, seg_tokens=3).collect()
     }
-    assert got == _segment_dedup_model(texts, 3)
+    assert got == segment_dedup_reference(enumerate(texts), 3)
 
 
 # --- round-6: pure-numpy container codecs (no Spark jobs — pure python) -----
@@ -795,7 +784,7 @@ def test_ppm_roundtrip_property(vals, width):
     np.testing.assert_array_equal(img.reshape(-1), arr[: h * width * 3])
 
 
-# --- round-6: digest-keyed segment dedup equals the direct form -------------
+# --- segment dedup on whitespace-adversarial corpora ------------------------
 
 _corpus_strategy = st.lists(
     st.text(alphabet="ab x", min_size=0, max_size=24),  # tiny alphabet -> heavy dup rates
@@ -806,18 +795,18 @@ _corpus_strategy = st.lists(
 
 @given(texts=_corpus_strategy, seg=st.sampled_from([1, 2, 3]))
 @settings(**_SETTINGS)
-def test_segment_dedup_digest_equals_direct_property(spark, texts, seg):
-    """Hypothesis twin of the fixed-corpus equality test: on random
-    corpora with adversarial duplication/whitespace, the digest-keyed
-    winner exchange must reproduce the direct form bit-for-bit."""
+def test_segment_dedup_equals_python_reference_property(spark, texts, seg):
+    """Hypothesis twin of the fixed-corpus reference test: on random
+    corpora with adversarial duplication/whitespace (empty texts, runs
+    of spaces, leading/trailing blanks), the digest-keyed winner
+    exchange must reproduce the pure-Python keep-first reference."""
     from politician_etl_project_spark.operators.dedup import segment_dedup
 
     docs = spark.createDataFrame(
         list(enumerate(texts)) or [(0, "")], "doc_id bigint, text string"
     ).filter(F.lit(bool(texts)))
-    direct = sorted(map(tuple, segment_dedup(docs, seg_tokens=seg, key="direct").collect()))
-    digest = sorted(map(tuple, segment_dedup(docs, seg_tokens=seg, key="digest").collect()))
-    assert direct == digest
+    got = {r[0]: tuple(r)[1:] for r in segment_dedup(docs, seg_tokens=seg).collect()}
+    assert got == segment_dedup_reference(enumerate(texts), seg)
 
 
 @given(

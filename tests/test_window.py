@@ -1,187 +1,38 @@
-"""Guards on the driver verification window (queries/__init__.DRIVER_WINDOW).
+"""Registry bookkeeping guards: the docs that state the registry size,
+the oracle sweep log, and the names the committed correctness history
+refers to.
 
-The driver hash-verifies registry entries [:50] per round, so the window
-head is load-bearing evidence: a duplicate slot silently wastes a check,
-and a query that never rotates into the head is never driver-verified.
-These tests fail the moment either happens (round-3 verdict item 3).
+Query names recorded in ``history/CORRECTNESS_r*.json`` stay joinable:
+each is either still registered or listed in ``RETIRED`` with a
+registered successor, so no history row points at nothing.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 
-from politician_etl_project_spark.queries import DRIVER_WINDOW, load_all
+from politician_etl_project_spark.queries import load_all
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WINDOW = 50
+
+# Retired query name -> the registered query that computes the same rows.
+RETIRED = {
+    "q_segment_dedup_direct": "q_segment_dedup",
+    "q_segment_dedup_digest": "q_segment_dedup",
+}
 
 
-def _driver_checked_names() -> set[str]:
-    """Union of all query names that ever had a driver CORRECTNESS row."""
+def _history_checked_names() -> set[str]:
+    """Union of all query names in the committed correctness history."""
+    hist = os.path.join(REPO_ROOT, "history")
     names: set[str] = set()
-    for fn in sorted(os.listdir(REPO_ROOT)):
+    for fn in sorted(os.listdir(hist)):
         if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            with open(os.path.join(REPO_ROOT, fn)) as fh:
+            with open(os.path.join(hist, fn)) as fh:
                 names |= set(json.load(fh))
     return names
-
-
-def test_window_head_is_unique():
-    head = DRIVER_WINDOW[:WINDOW]
-    assert len(head) == len(set(head)), "duplicate slot wastes a driver check"
-
-
-def test_window_names_all_registered():
-    specs = load_all()
-    missing = [n for n in DRIVER_WINDOW if n not in specs]
-    assert not missing, f"DRIVER_WINDOW names not in registry: {missing}"
-
-
-def test_registry_leads_with_window_head():
-    """load_all must serve the window head as the first 50 entries —
-    that ordering IS what the driver consumes."""
-    specs = load_all()
-    assert list(specs)[:WINDOW] == DRIVER_WINDOW[:WINDOW]
-
-
-def test_every_never_checked_query_is_in_window_head():
-    """Every registered query lacking a driver CORRECTNESS row across
-    all recorded rounds must occupy a current-window slot (or there are
-    more such queries than slots — then the set must be EXACTLY the
-    head, rotating the backlog through).  Adding a query without
-    scheduling it fails here."""
-    specs = load_all()
-    never = [n for n in specs if n not in _driver_checked_names()]
-    head = set(DRIVER_WINDOW[:WINDOW])
-    if len(never) <= WINDOW:
-        out = [n for n in never if n not in head]
-        assert not out, f"never-driver-checked queries outside window head: {out}"
-    else:
-        assert all(n in never for n in head), (
-            "window head wastes slots on already-checked queries while a "
-            f"{len(never)}-query backlog exists"
-        )
-
-
-def _rounds_to_names() -> dict[int, set[str]]:
-    """Per recorded round, the set of query names it driver-checked."""
-    rounds: dict[int, set[str]] = {}
-    for fn in sorted(os.listdir(REPO_ROOT)):
-        if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            rnd = int(fn[len("CORRECTNESS_r") : -len(".json")])
-            with open(os.path.join(REPO_ROOT, fn)) as fh:
-                rounds[rnd] = set(json.load(fh))
-    return rounds
-
-
-def _effective_latest(head: list[str], rounds: dict[int, set[str]]) -> dict[str, int]:
-    """Per query, the most recent round with a driver CORRECTNESS row —
-    judged from the evidence that existed WHEN THE HEAD WAS COMPOSED.
-
-    Round-boundary awareness (r7 verdict #3, after the tripwire ended
-    rounds 6 AND 7 red through no code fault): the driver writes
-    CORRECTNESS_r{N}.json after the round's final commit, so right at a
-    boundary the newest file's names are exactly the not-yet-rotated
-    head — evidence the head itself just generated.  When the newest
-    round's name set is a subset of the current head, that file is
-    next round's input, not this head's composition evidence, and is
-    excluded.  A head that misses rotation for a full round does NOT
-    get a pass: its post-round file is again ⊆ head, but the
-    second-newest file now shows the same head names as fresh while
-    staler names wait outside — which still fails the stalest rule."""
-    if rounds:
-        newest = max(rounds)
-        if rounds[newest] <= set(head):
-            rounds = {r: v for r, v in rounds.items() if r != newest}
-    latest: dict[str, int] = {}
-    for rnd, names in rounds.items():
-        for name in names:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _staleness_offenders(
-    head: list[str],
-    sentinels: list[str],
-    all_names: list[str],
-    rounds: dict[int, set[str]],
-) -> list[str]:
-    """Verified, non-sentinel head slots holding FRESHER evidence than
-    some verified query left outside the head (empty == rotation ok)."""
-    latest = _effective_latest(head, rounds)
-    rotating = [n for n in head if n in latest and n not in sentinels]
-    outside = [n for n in all_names if n not in head and n in latest]
-    if not rotating or not outside:
-        return []
-    stalest_out = min(latest[n] for n in outside)
-    return [n for n in rotating if latest[n] > stalest_out]
-
-
-def test_window_head_prefers_stalest():
-    """The head must spend its slots on the STALEST driver evidence
-    (round-5 verdict item 1): aside from never-checked queries (covered
-    above) and the bounded sentinel list (code changed this round, so
-    their prior green is stale by definition), every verified head
-    slot must be no FRESHER than any verified query left outside the
-    head — judged boundary-aware (see _effective_latest).  A fresh name
-    occupying a slot while a staler one waits means the rotation
-    stopped working."""
-    from politician_etl_project_spark.queries import WINDOW_SENTINELS
-
-    assert len(WINDOW_SENTINELS) <= 10, "sentinel list must stay bounded"
-    head = DRIVER_WINDOW[:WINDOW]
-    offenders = _staleness_offenders(
-        head, WINDOW_SENTINELS, list(load_all()), _rounds_to_names()
-    )
-    assert not offenders, (
-        f"head holds fresher-than-necessary evidence {offenders} while "
-        "staler verified names wait outside"
-    )
-
-
-def test_staleness_check_is_boundary_aware():
-    """Simulates r7 verdict #3's 'done' condition: a post-round
-    correctness drop (newest file == the un-rotated head) leaves the
-    check green, while a genuine intra-round staleness violation —
-    fresh names parked in the head while staler ones wait outside,
-    visible in evidence predating the newest drop — still fails."""
-    head = [f"h{i}" for i in range(5)]
-    others = ["x1", "x2"]
-    names = head + others
-
-    # properly-rotated head (stale evidence) + boundary drop over it
-    rounds = {1: set(names), 2: set(others), 3: set(head)}
-    assert _staleness_offenders(head, [], names, rounds) == []
-
-    # head that SKIPPED rotation: r2 already verified h0/h1 yet they
-    # still occupy slots while r1-stale x1/x2 wait outside; the r3
-    # boundary drop (⊆ head) must not launder them
-    rounds = {1: set(names), 2: {"h0", "h1"}, 3: set(head)}
-    assert set(_staleness_offenders(head, [], names, rounds)) == {"h0", "h1"}
-
-    # sentinels are exempt (their code changed this round)
-    assert _staleness_offenders(head, ["h0", "h1"], names, rounds) == []
-
-    # a newest file NOT ⊆ head (head already rotated, names outside it
-    # got checked) counts as real evidence
-    rounds = {1: set(names), 2: set(others)}
-    assert _staleness_offenders(head, [], names, rounds) == []
-    rounds = {1: set(others), 2: set(head)}
-    assert set(_staleness_offenders(["h0", "x1"], [], names, rounds)) == {"h0"}
-
-
-def test_bench_exclusions_are_registered_and_reasoned():
-    """bench.py covers the registry minus BENCH_EXCLUDED; every
-    exclusion must name a real query and carry a non-trivial reason —
-    a stale name would silently shrink the no-silent-caps guarantee."""
-    import bench
-
-    specs = load_all()
-    for name, reason in bench.BENCH_EXCLUDED.items():
-        assert name in specs, f"BENCH_EXCLUDED names unknown query {name}"
-        assert len(reason) > 40, f"exclusion reason for {name} too thin"
-    assert len(bench.BENCH_EXCLUDED) <= 5, "exclusion list must stay short"
 
 
 def test_generated_docs_match_registry_count():
@@ -190,8 +41,6 @@ def test_generated_docs_match_registry_count():
     queries for a whole round).  Each generated doc embeds the registry
     size at generation time; a registry that grew without regenerating
     the docs fails here."""
-    import re
-
     n = len(load_all())
     checks = {
         "PLANS.md": r"\((\d+) queries\)",
@@ -216,8 +65,6 @@ def test_handwritten_docs_registry_counts():
     size or sit in a sentence explicitly marked as a snapshot
     ('registry snapshot at capture time' / 'N-query snapshot'), which
     is allowed to lag by construction."""
-    import re
-
     n = len(load_all())
     for doc in ("SCALE.md", "README.md", "EXAMPLES.md", "FIXTURES.md"):
         path = os.path.join(REPO_ROOT, doc)
@@ -235,127 +82,21 @@ def test_handwritten_docs_registry_counts():
             )
 
 
-def test_bench_summary_line_fits_driver_capture():
-    """The driver records only the LAST 2000 bytes of bench stdout; the
-    summary line must stay under that with the REAL registry's names and
-    worst-case float widths — and (r11 verdict #1, after the 34-entry
-    requeue-detail map squeezed the query map to 20 entries and PERF_r11
-    could compare only 9% of the registry) the per-query map must NEVER
-    drop below 40 entries, no matter how pathological the requeue load:
-    requeue detail collapses to counts and the name lists to samples
-    BEFORE the query map shrinks."""
-    import json
-
-    import bench
-
-    names = list(load_all()) + [
-        "etl_fec_500k",
-        "metrics_bundle_parts_sum",
-        "probe_scaling_cpu",
-        "probe_scaling_shuffle",
-    ]
-    times = {n: 12.345 for n in names}  # worst-case width: 6 chars each
-    out = {
-        "metric": "headline_query_suite_total",
-        "value": 999.999,
-        "unit": "sec",
-        "queries": times,
-        "sf": 0.1,
-        "etl_rows_out": 337810,
-        "etl_rows_in": 500000,
-        "timing_passes": 2,
-        "queries_benched": len(names),
-        "queries_not_benched": sorted(bench.BENCH_EXCLUDED),
-        "cpus_env": 32,
-        "default_parallelism": 32,
-        "shuffle_partitions": 32,
-        "master": "local[32]",
-        "total_excludes": [
-            "q_near_dup_pairs",
-            "metrics_bundle_parts_sum",
-            "probe_scaling_cpu",
-            "probe_scaling_shuffle",
-        ],
-        "load_avg_1m": 1.0,
-        "load_avg_start": 1.0,
-        "load_gate_ok": True,
-        # worst case: every name requeued (external contention all run)
-        "contended_requeued": sorted(times),
-        # worst case for the r10 delta requeue too: all names moved,
-        # each with a full detail record (the r11 failure mode)
-        "delta_requeued": sorted(times),
-        "delta_requeue_detail": {
-            n: {"original": 12.345, "remeasured": 12.345, "prev": 1.0, "adjudication": "variance"}
-            for n in sorted(times)
-        },
-        "delta_requeue_vs_round": 9,
-    }
-    line = bench.summary_line(out, times)
-    assert len(line) <= 1900, f"summary line {len(line)} bytes would be front-clipped"
-    parsed = json.loads(line)
-    cap = parsed.get("queries_truncated_to_slowest")
-    assert cap is not None and cap >= 40, f"query map truncated below the 40 floor: {cap}"
-    assert len(parsed["queries"]) >= 40
-    # worst-case requeue lists collapse to a sample + count, and the
-    # detail map to adjudication counts
-    assert parsed["contended_requeued_n"] == len(names)
-    assert len(parsed["contended_requeued"]) <= 4
-    assert parsed["delta_requeued_n"] == len(names)
-    assert len(parsed["delta_requeued"]) <= 4
-    assert parsed["delta_requeue_detail"] == {
-        "n_cleared": 0,
-        "n_variance": len(names),
-        "n_source_changed": 0,
-    }
-
-
-def test_bench_sidecar_uncapped_and_round_numbered(tmp_path, monkeypatch):
-    """r9 verdict #5: the full bench record must land in
-    BENCH_r{N}_full.json so no measurement is only recoverable from a
-    truncated stdout line — the sidecar keeps EVERY per-query time and
-    both requeue lists even when summary_line truncates, and its query
-    count matches queries_benched (+2 for the etl macro and the
-    bundle-parts twin that main() always appends)."""
-    import json
-
-    import bench
-
-    names = list(load_all()) + ["etl_fec_500k", "metrics_bundle_parts_sum"]
-    times = {n: 12.345 for n in names}
-    out = {
-        "queries": times,
-        "queries_benched": len(names) - 2,
-        "contended_requeued": sorted(times),
-        "delta_requeued": sorted(times),
-    }
-    monkeypatch.setattr(
-        bench, "next_round", lambda: 99
-    )  # don't depend on which BENCH_r*.json are committed
-    path = bench.write_sidecar(out, root=tmp_path)
-    assert path.name == "BENCH_r99_full.json"
-    data = json.loads(path.read_text())
-    assert len(data["queries"]) == data["queries_benched"] + 2
-    assert data["contended_requeued"] == sorted(times)  # uncapped
-    assert data["delta_requeued"] == sorted(times)
-    # r11 verdict #3: a later capture of the same round must NOT clobber
-    # the committed sidecar — it takes the next free counter suffix
-    assert bench.write_sidecar(out, root=tmp_path).name == "BENCH_r99_full.2.json"
-    assert bench.write_sidecar(out, root=tmp_path).name == "BENCH_r99_full.3.json"
-    assert json.loads((tmp_path / "BENCH_r99_full.json").read_text()) == data
-
-
 def test_every_driver_checked_name_still_registered():
-    """r11 verdict #8 (the f02721c near-miss, promoted to a test): a
-    query name that EVER appeared in a committed CORRECTNESS_r*.json is
-    driver history — renaming or deleting it reads as a disappearance
-    to the driver's oracle re-run and makes the round an automatic
-    REGRESSION.  Names may only be added."""
+    """Every query name in the committed correctness history is either
+    registered or a ``RETIRED`` key whose successor is registered, so
+    history rows stay joinable to a live query.  Deleting a query means
+    naming its successor here."""
     specs = load_all()
-    gone = sorted(_driver_checked_names() - set(specs))
+    history = _history_checked_names()
+    assert history, "history/CORRECTNESS_r*.json not found"
+    gone = sorted(n for n in history - set(specs) if RETIRED.get(n) not in specs)
     assert not gone, (
-        f"driver-verified query names missing from the registry: {gone} — "
-        "restore each under its historical name with its prior computation"
+        f"history query names neither registered nor retired: {gone} — "
+        "add each to RETIRED with its registered successor"
     )
+    stale = sorted(n for n in RETIRED if n in specs)
+    assert not stale, f"RETIRED names are still registered: {stale}"
 
 
 def test_sweep_log_matches_registry():
@@ -363,8 +104,6 @@ def test_sweep_log_matches_registry():
     per-round artifact — SCALE.md's sweep log must have its NEWEST
     entry at the current registry size, so growing the registry without
     re-running tools/sweep_oracle_sf01.py fails loudly."""
-    import re
-
     text = open(os.path.join(REPO_ROOT, "SCALE.md")).read()
     entries = re.findall(
         r"- (\d{4}-\d{2}-\d{2}): (\d+)/(\d+) hash-identical at sf0\.1 \(registry (\d+)",
@@ -378,102 +117,3 @@ def test_sweep_log_matches_registry():
         f"now has {n} queries — rerun tools/sweep_oracle_sf01.py and record it"
     )
     assert ok == total, f"newest sweep has failures: {ok}/{total}"
-    # r10 verdict #6: incremental (--changed-since) sweeps are allowed,
-    # but a FULL-registry sweep must be at most 2 rounds old.  Lines
-    # from r11 on carry a mode tag; if any tagged line exists, the
-    # newest full tag must be within 2 rounds of the newest tag of any
-    # mode (untagged legacy lines were all full sweeps and predate the
-    # tagged era, so they don't satisfy recency once tags exist).
-    tags = re.findall(r"\[(full|changed-since-r\d+) r(\d+)", text)
-    if tags:
-        latest_round = max(int(r) for _, r in tags)
-        fulls = [int(r) for m, r in tags if m == "full"]
-        assert fulls, "sweep log has incremental entries but no tagged full sweep"
-        assert latest_round - max(fulls) <= 2, (
-            f"newest full sweep is r{max(fulls)} but the log reaches "
-            f"r{latest_round} — run a full sweep (no --changed-since)"
-        )
-
-
-def test_bench_delta_movers_selection():
-    """The delta requeue (r9 verdict #1) must flag exactly the >1.25x
-    movers vs the previous round and ignore names the prior round never
-    measured."""
-    import bench
-
-    prev = {"queries": {"a": 1.0, "b": 2.0, "c": 4.0}}
-    times = {"a": 1.26, "b": 2.4, "c": 4.99, "new_query": 9.0}
-    assert bench._delta_movers(times, prev) == ["a"]
-    assert bench._delta_movers(times, None) == []
-
-
-def test_bench_prev_baseline_merges_round_captures(tmp_path, monkeypatch):
-    """r10 verdict #1: a round can commit TWO captures (the driver's
-    possibly-contended artifact and the builder's clean sidecar); the
-    delta baseline must be the per-query MIN across both, so a
-    contended driver number can't manufacture phantom movers the same
-    round's clean capture disproves — and an unparseable newest round
-    must fall back to the previous one."""
-    import json
-
-    import bench
-
-    # the loader derives the root from __file__ — point it at tmp_path
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"queries": {"a": 3.50, "b": 1.0}, "value": 4.5})
-    )
-    (tmp_path / "BENCH_r07_full.json").write_text(
-        json.dumps({"queries": {"a": 2.29, "c": 0.5}, "value": 2.79})
-    )
-    prev = bench._load_prev_bench()
-    assert prev["_round"] == 7
-    assert prev["_artifacts_merged"] == 2
-    assert prev["queries"] == {"a": 2.29, "b": 1.0, "c": 0.5}
-    # unparseable newest round falls back
-    (tmp_path / "BENCH_r08.json").write_text("{clipped and broken")
-    prev = bench._load_prev_bench()
-    assert prev["_round"] == 7
-
-
-def test_bench_mover_adjudication(monkeypatch):
-    """Every surviving >1.25x mover must carry a variance|source_changed
-    tag (r10 verdict #2): untouched-since-prev-artifact source reads
-    `variance`, newer source reads `source_changed`, and a remeasure
-    that lands back under 1.25x reads `cleared`."""
-    import bench
-
-    detail = {
-        "untouched": {"original": 3.5, "remeasured": 3.4, "prev": 2.0},
-        "touched": {"original": 3.5, "remeasured": 3.4, "prev": 2.0},
-        "recovered": {"original": 3.5, "remeasured": 2.1, "prev": 2.0},
-    }
-    ts = {"BENCH": 1000, "untouched": 900, "touched": 1100}
-
-    def fake_ts(paths):
-        key = "BENCH" if any("BENCH_r" in p for p in paths) else None
-        if key is None:
-            key = "untouched" if any("untouched" in p for p in paths) else "touched"
-        return ts[key]
-
-    class Spec:
-        def __init__(self, marker):
-            self.fn = lambda *a: None
-            self._marker = marker
-
-    specs = {n: Spec(n) for n in detail}
-    import inspect as _inspect
-
-    monkeypatch.setattr(bench, "_source_commit_ts", fake_ts)
-    monkeypatch.setattr(
-        _inspect,
-        "getfile",
-        lambda fn: str(
-            bench.Path(bench.__file__).resolve().parent
-            / ("untouched.py" if fn is specs["untouched"].fn else "touched.py")
-        ),
-    )
-    bench._adjudicate_movers(detail, {"_round": 7}, specs)
-    assert detail["recovered"]["adjudication"] == "cleared"
-    assert detail["untouched"]["adjudication"] == "variance"
-    assert detail["touched"]["adjudication"] == "source_changed"

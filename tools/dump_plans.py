@@ -1,14 +1,14 @@
 """Dump `.explain("formatted")` output for named declared queries into
 text files — the judge-facing evidence for plan-shape claims
-(plans/r11/<query>_before.txt / _after.txt).
+(history/plans/r11/<query>_before.txt / _after.txt).
 
-Run: python tools/dump_plans.py --out plans/r11 --suffix before q_pagerank ...
+Run: python tools/dump_plans.py --out history/plans/r11 --suffix before q_pagerank ...
 Flags: --sf DIR (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1).
 
 Note: a query whose builder itself runs actions (stored-index builds,
 fixed-point loops) executes those while the plan is being constructed;
 the dumped plan is the FINAL returned frame's physical plan, matching
-what the bench's collect() executes.
+what a timed collect() executes.
 """
 
 from __future__ import annotations

@@ -36,7 +36,6 @@ QUERIES = [
     "q_triangle_count",      # degree-oriented wedge joins
     "q_time_travel",         # manifest reads across three versions
     "q_segment_dedup",       # corpus keep-first segment aggregate
-    "q_segment_dedup_direct",  # string-keyed twin (text winner exchange)
     "q_url_canonicalize",    # regexp-chain map + canonical-key shuffle
     "q_bigram_lm_score",     # in-row zip + model joins
     "q_stats_prune",         # manifest min/max file skipping
@@ -51,7 +50,7 @@ QUERIES = [
 # (sf0.001 / 0.01 / 0.1 / synthesized 0.5 — tools/gen_bigdocs.py): the
 # stored-index serving tiers whose 100-TB story is "probe cost flat in
 # corpus size", plus the brute-force baselines they are compared against
-# and the segment-dedup pair (digest vs direct growth).
+# and segment dedup.
 SERVING_QUERIES = [
     "q_bm25_topk",             # BM25 corpus-scan baseline
     "q_bm25_indexed",          # BM25 stored inverted index (should stay flat)
@@ -60,8 +59,7 @@ SERVING_QUERIES = [
     "q_ann_ivf",               # stored IVF index, n_probe lists
     "q_pq_rerank",             # PQ candidates -> exact re-rank serving
     "q_dedup_exact",           # fingerprint groupBy (data-bound reference line)
-    "q_segment_dedup",         # direct form: winner exchange carries text
-    "q_segment_dedup_direct",  # direct form: text winner exchange
+    "q_segment_dedup",         # digest-keyed winner exchange
     "q_url_canonicalize",      # pure-expression map + canonical-key shuffle
     "q_media_decode_png",      # zlib codec, worker-spread mapInPandas:
     #                            data-bound by construction; the sweep
@@ -133,33 +131,30 @@ def main() -> None:
             t["ratio_0.5/0.1"] = round(t["sf0.5"] / t["sf0.1"], 2)
     out["serving_tiers_4pt"] = serving
 
-    # --- wide-segment dedup: direct vs digest (r5 verdict item 3) ----------
-    # At the declared queries' 3-token width a segment is already
-    # digest-sized, so the two forms tie; the digest form's claim is for
-    # LONG segments (paragraph dedup), where the direct form's winner
-    # exchange carries the full segment text.  Measure both at 40-token
+    # --- wide-segment dedup (r5 verdict item 3) -----------------------------
+    # At the declared query's 3-token width a segment is already
+    # digest-sized; paragraph dedup has LONG segments, where the winner
+    # exchange must still carry only digests + ids.  Measure 40-token
     # segments on the two largest corpora.
     from politician_etl_project_spark.catalog import load_table
     from politician_etl_project_spark.operators.dedup import segment_dedup
 
-    wide: dict[str, dict[str, float]] = {}
+    wide: dict[str, float] = {}
     for sf in [SFS[2], sf05]:
         key = Path(sf).name.replace("spark_graft_", "")
         docs = load_table(spark, sf, "documents")
-        for form in ("direct", "digest"):
-            segment_dedup(docs, seg_tokens=40, key=form).collect()  # warm
+        segment_dedup(docs, seg_tokens=40).collect()  # warm
+        spark.catalog.clearCache()
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            segment_dedup(docs, seg_tokens=40).collect()
+            sec = time.perf_counter() - t0
+            best = sec if best is None else min(best, sec)
             spark.catalog.clearCache()
-            best = None
-            for _ in range(3):
-                t0 = time.perf_counter()
-                segment_dedup(docs, seg_tokens=40, key=form).collect()
-                sec = time.perf_counter() - t0
-                best = sec if best is None else min(best, sec)
-                spark.catalog.clearCache()
-            wide.setdefault(f"segment_dedup_w40_{form}", {})[key] = round(best, 3)
-    for name, t in wide.items():
-        if t.get("sf0.1"):
-            t["ratio_0.5/0.1"] = round(t["sf0.5"] / t["sf0.1"], 2)
+        wide[key] = round(best, 3)
+    if wide.get("sf0.1"):
+        wide["ratio_0.5/0.1"] = round(wide["sf0.5"] / wide["sf0.1"], 2)
     out["wide_segment_dedup_w40"] = wide
     print(json.dumps(out, indent=1))
     spark.stop()

@@ -9,71 +9,29 @@ multiset of canonicalized stringified rows vs the query's DuckDB oracle
 (float accumulation order, skew-cap boundaries, watermark terciles, LSH
 bucket caps) would surface if it existed.
 
-Run:  python tools/sweep_oracle_sf01.py                  (full, ~15-25 min)
-      python tools/sweep_oracle_sf01.py --changed-since 10   (incremental)
+Run:  python tools/sweep_oracle_sf01.py        (~15-25 min)
 Emits one JSON line:
-  {"sweep": "oracle_sf0.1", "mode": ..., "n": N, "ok": K, "rows_only": R,
+  {"sweep": "oracle_sf0.1", "n": N, "ok": K, "rows_only": R,
    "fails": [...], "sec": S}
-and a dated one-line summary suitable for SCALE.md's "Correctness at
-10x" table.  tests/test_window.py tripwires the recorded sweep count
-against the registry size the same way it tripwires the generated docs,
-and additionally requires a FULL sweep within the last 2 rounds.
-
-``--changed-since N`` (r10 verdict #6: two full sweeps cost ~44 min per
-round and the cost grows with the registry) sweeps only (a) the current
-50-slot driver window head — the rotation's own fresh-evidence set —
-plus (b) every query whose declaring module changed since round N's
-committed CORRECTNESS artifact (git diff + worktree status, so
-uncommitted edits count).  The module-level granularity is deliberately
-coarse: one edited query re-sweeps its whole file.  Run the full
-registry every 2nd round at minimum; the SCALE.md tag (`[full rN]` /
-`[changed-since-rM rN, K selected]`) is what the tripwire audits.
+and a dated one-line summary for SCALE.md's "Correctness at 10x" log.
+tests/test_window.py tripwires the newest logged sweep against the
+registry size the same way it tripwires the generated docs.
 """
 
 from __future__ import annotations
 
-import argparse
 import datetime
 import json
-import subprocess
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-REPO = Path(__file__).resolve().parents[1]
 SF = "/root/testdata/sf0.1"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def _changed_files_since(round_n: int) -> set[str] | None:
-    """Repo-relative paths changed since round N's committed CORRECTNESS
-    artifact (diff base = the commit that last touched it), unioned with
-    the worktree's uncommitted modifications.  None = base not found
-    (caller falls back to a full sweep)."""
-    artifact = f"CORRECTNESS_r{round_n:02d}.json"
-    base = subprocess.run(
-        ["git", "log", "-1", "--format=%H", "--", artifact],
-        cwd=REPO, capture_output=True, text=True,
-    ).stdout.strip()
-    if not base:
-        return None
-    diff = subprocess.run(
-        ["git", "diff", "--name-only", f"{base}..HEAD"],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    status = subprocess.run(
-        ["git", "status", "--porcelain"], cwd=REPO, capture_output=True, text=True
-    )
-    changed = set(diff.stdout.split())
-    for line in status.stdout.splitlines():
-        parts = line.split()
-        if parts:
-            changed.add(parts[-1])
-    return changed
 
 
 def canon(v) -> str:
@@ -86,40 +44,12 @@ def canon(v) -> str:
 
 
 def main() -> int:
-    import inspect
-
     import duckdb
 
-    from politician_etl_project_spark.queries import DRIVER_WINDOW, load_all
+    from politician_etl_project_spark.queries import load_all
     from politician_etl_project_spark.session import get_spark
 
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--changed-since", type=int, default=None, metavar="ROUND")
-    args = ap.parse_args()
-
     specs = load_all()
-    registry_n = len(specs)
-    mode = "full"
-    if args.changed_since is not None:
-        changed = _changed_files_since(args.changed_since)
-        if changed is None:
-            print(
-                json.dumps({"warn": f"no CORRECTNESS_r{args.changed_since:02d} commit; full sweep"}),
-                file=sys.stderr,
-            )
-        else:
-            head = set(DRIVER_WINDOW[:50])
-            keep = {}
-            for name, spec in specs.items():
-                try:
-                    rel = str(Path(inspect.getfile(spec.fn)).resolve().relative_to(REPO))
-                except (TypeError, ValueError):
-                    rel = None
-                if name in head or (rel and rel in changed):
-                    keep[name] = spec
-            specs = keep
-            mode = f"changed-since-r{args.changed_since}"
-
     spark = get_spark("sweep-sf01")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__
@@ -159,27 +89,17 @@ def main() -> int:
             print(f"{name}: FAIL {str(ex)[:300]}", flush=True)
     out = {
         "sweep": "oracle_sf0.1",
-        "mode": mode,
-        "n": registry_n,
-        "selected": len(specs),
+        "n": len(specs),
         "ok": ok,
         "rows_only": rows_only,
         "fails": fails,
         "sec": round(time.time() - t_all, 1),
     }
     print(json.dumps(out))
-    import bench
-
-    this_round = bench.next_round()
     today = datetime.date.today().isoformat()
-    tag = (
-        f"[full r{this_round}]"
-        if mode == "full"
-        else f"[{mode} r{this_round}, {len(specs)} selected]"
-    )
     print(
         f"SCALE.md line: - {today}: {ok}/{ok + len(fails)} hash-identical at sf0.1 "
-        f"(registry {registry_n}, {rows_only} rows-only, {out['sec']}s) {tag}"
+        f"(registry {len(specs)}, {rows_only} rows-only, {out['sec']}s)"
     )
     spark.stop()
     return 1 if fails else 0

@@ -5,11 +5,14 @@ conflict handling and appending to ``update_log``).
 
 The reference runs four pandas scripts sequentially against Postgres.
 Here the whole flow is a DAG of DataFrame jobs over a parquet
-:class:`Warehouse`, with the reference's three conflict policies
-(update-wins / first-wins / append) supplied by
-``operators.upsert.merge_keep`` and surrogate keys assigned
-deterministically (row_number over natural keys — SURVEY §7 hard-parts
-1-2).
+:class:`Warehouse`.  Each loader only transforms its source and hands
+the batch to :meth:`Warehouse.upsert`; how a table is written lives in
+one place, ``operators.upsert.ParquetUpsertTable.upsert``: the
+reference's conflict policies (update-wins / first-wins) as a
+deterministic key-dedup merge, one row per natural key from the first
+write on (the reference's UNIQUE constraints), and for the three
+dimensions a surrogate id that is dense on the first load and never
+moves afterwards (SURVEY §7 hard-parts 1-2).
 
 Fact tables carry their natural keys (congress_id, bill_key,
 fec_filing_id) alongside the surrogate ints, so id resolution is a
@@ -28,16 +31,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from politician_etl_project_spark.operators.upsert import (
-    ParquetUpsertTable,
-    dedup_keys,
-    log_update,
-    merge_keep,
-    stable_ids,
-)
+from politician_etl_project_spark.operators.upsert import ParquetUpsertTable, log_update
 from politician_etl_project_spark.sources import bills_xml, committees_yaml, fec, members, votes_json
 
 
@@ -62,13 +59,17 @@ class Warehouse:
         "committee_assignments": ["politician_id", "committee_id", "congress"],  # models.py:147
         "update_log": ["log_id"],
     }
+    # surrogate ids the fact tables reference; each table assigns its own
+    IDS = {"politicians": "politician_id", "donors": "donor_id", "bills": "bill_id"}
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.tables = {
-            name: ParquetUpsertTable(spark, os.path.join(root, name), keys)
+            name: ParquetUpsertTable(
+                spark, os.path.join(root, name), keys, id_col=self.IDS.get(name)
+            )
             for name, keys in self.KEYS.items()
         }
 
@@ -107,16 +108,13 @@ class Warehouse:
             self.tables["update_log"].path
         )
 
-
-def _dense_ids(df: DataFrame, order_cols: list[str], id_col: str) -> DataFrame:
-    """Deterministic surrogate ids (S18): row_number over the natural-key
-    order via the prefix-bucketed two-level plan (operators.upsert.
-    surrogate_ids) — no single-task global sort.  First load only:
-    incremental loads go through ``stable_ids`` so previously-published
-    ids never move."""
-    from politician_etl_project_spark.operators.upsert import surrogate_ids
-
-    return surrogate_ids(df, order_cols, id_col)
+    def upsert(self, name: str, fresh: DataFrame, update_wins: bool) -> DataFrame:
+        """One loader step's write: upsert ``fresh`` into table ``name``
+        under the table's own policy, log the table's row count to
+        ``update_log`` and return the published table."""
+        self.tables[name].upsert(fresh, update_wins=update_wins)
+        self.log(name, self.read(name).count())
+        return self.read(name)
 
 
 # Enrichment columns written by a later pass (link_fec_ids): a plain
@@ -137,34 +135,26 @@ def load_politicians(wh: Warehouse, records: list[dict]) -> DataFrame:
     )
     tbl = wh["politicians"]
     if tbl.exists():
-        prior = tbl.read()
-        id_map = prior.select("congress_id", "politician_id")
-        existing = prior.drop("politician_id")
+        existing = tbl.read().drop("politician_id")
         # schema evolution (S15 analog): later passes (link_fec_ids) widen
         # the dim; align fresh rows with typed nulls before the merge
         # sorted(): set iteration order is hash-salted per process, and
-        # this order becomes the written schema order AND merge_keep's
+        # this order becomes the written schema order AND the upsert's
         # value-column tie-break order — the byte-identical-replay
         # promise in the module docstring needs it deterministic
         for c in sorted(set(existing.columns) - set(fresh.columns)):
             fresh = fresh.withColumn(c, F.lit(None).cast(existing.schema[c].dataType))
-        merged = merge_keep(existing, fresh, ["congress_id"], update_wins=True)
         link_cols = [c for c in _POLITICIAN_LINK_COLS if c in existing.columns]
         if link_cols:
             old_links = existing.select(
                 "congress_id", *[F.col(c).alias(f"_old_{c}") for c in link_cols]
             )
-            merged = merged.join(old_links, "congress_id", "left")
+            fresh = fresh.join(old_links, "congress_id", "left")
             for c in link_cols:
-                merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"_old_{c}"))).drop(
+                fresh = fresh.withColumn(c, F.coalesce(F.col(c), F.col(f"_old_{c}"))).drop(
                     f"_old_{c}"
                 )
-        final = stable_ids(merged, id_map, ["congress_id"], "politician_id")
-    else:
-        final = _dense_ids(fresh, ["congress_id"], "politician_id")
-    tbl.overwrite(final)
-    wh.log("politicians", tbl.read().count())
-    return tbl.read()
+    return wh.upsert("politicians", fresh, update_wins=True)
 
 
 def link_fec_ids(wh: Warehouse, cn: DataFrame, ccl: DataFrame) -> DataFrame:
@@ -196,17 +186,7 @@ def load_bills(wh: Warehouse, billstatus_glob: str) -> DataFrame:
         )
     )
     fresh = fresh.join(pol, "sponsor_bioguide", "left").drop("sponsor_bioguide")
-    tbl = wh["bills"]
-    key = ["official_bill_number", "congress"]
-    if tbl.exists():
-        prior = tbl.read()
-        merged = merge_keep(prior.drop("bill_id"), fresh, key, update_wins=True)
-        final = stable_ids(merged, prior.select(*key, "bill_id"), key, "bill_id")
-    else:
-        final = _dense_ids(fresh, key, "bill_id")
-    tbl.overwrite(final)
-    wh.log("bills", tbl.read().count())
-    return tbl.read()
+    return wh.upsert("bills", fresh, update_wins=True)
 
 
 def load_cosponsors(wh: Warehouse, billstatus_glob: str) -> DataFrame:
@@ -224,15 +204,7 @@ def load_cosponsors(wh: Warehouse, billstatus_glob: str) -> DataFrame:
         .join(bills, ["official_bill_number", "congress"])
         .select("bill_id", "politician_id", "sponsorship_date", "is_original_cosponsor")
     )
-    tbl = wh["bill_cosponsors"]
-    merged = (
-        merge_keep(tbl.read(), fresh, ["bill_id", "politician_id"], update_wins=False)
-        if tbl.exists()
-        else dedup_keys(fresh, ["bill_id", "politician_id"])
-    )
-    tbl.overwrite(merged)
-    wh.log("bill_cosponsors", tbl.read().count())
-    return tbl.read()
+    return wh.upsert("bill_cosponsors", fresh, update_wins=False)
 
 
 def load_votes(wh: Warehouse, votes_glob: str) -> DataFrame:
@@ -240,16 +212,7 @@ def load_votes(wh: Warehouse, votes_glob: str) -> DataFrame:
     broadcast, first-wins upsert (ingest_votes.py:82-178)."""
     exploded = votes_json.explode_votes(votes_json.read_vote_files(wh.spark, votes_glob))
     fresh = votes_json.resolve_vote_ids(exploded, wh.read("politicians"), wh.read("bills"))
-    tbl = wh["votes"]
-    keys = Warehouse.KEYS["votes"]
-    merged = (
-        merge_keep(tbl.read(), fresh, keys, update_wins=False)
-        if tbl.exists()
-        else dedup_keys(fresh, keys)
-    )
-    tbl.overwrite(merged)
-    wh.log("votes", tbl.read().count())
-    return tbl.read()
+    return wh.upsert("votes", fresh, update_wins=False)
 
 
 def load_donations(wh: Warehouse, itcont_path: str) -> tuple[DataFrame, DataFrame]:
@@ -270,40 +233,17 @@ def load_donations(wh: Warehouse, itcont_path: str) -> tuple[DataFrame, DataFram
     # execute twice, once per table write
     raw = fec.transform_donations(fec.read_itcont(spark, itcont_path), target).persist()
 
-    donors_fresh = fec.build_donors(raw).drop("donor_id")
-    dtbl = wh["donors"]
-    if dtbl.exists():
-        prior = dtbl.read()
-        donors_merged = merge_keep(
-            prior.drop("donor_id"), donors_fresh, ["donor_source_key"], update_wins=False
-        )
-        donors_final = stable_ids(
-            donors_merged, prior.select("donor_source_key", "donor_id"), ["donor_source_key"], "donor_id"
-        )
-    else:
-        donors_final = _dense_ids(donors_fresh, ["donor_source_key"], "donor_id")
-    dtbl.overwrite(donors_final)
-    wh.log("donors", dtbl.read().count())
-
-    donor_ids = wh.read("donors").select(
-        F.col("donor_source_key").alias("donor_uid"), "donor_id"
-    )
+    donors = wh.upsert("donors", fec.build_donors(raw), update_wins=False)
+    donor_ids = donors.select(F.col("donor_source_key").alias("donor_uid"), "donor_id")
     pol_ids = F.broadcast(pol.select("fec_committee_id", "politician_id"))
     facts = (
         raw.join(pol_ids, "fec_committee_id")
         .join(donor_ids, "donor_uid")
         .select("politician_id", "donor_id", "amount", "date", "fec_filing_id")
     )
-    ftbl = wh["donations"]
-    merged = (
-        merge_keep(ftbl.read(), facts, ["fec_filing_id"], update_wins=False)
-        if ftbl.exists()
-        else dedup_keys(facts, ["fec_filing_id"])
-    )
-    ftbl.overwrite(merged)
-    wh.log("donations", ftbl.read().count())
+    donations = wh.upsert("donations", facts, update_wins=False)
     raw.unpersist()
-    return wh.read("donors"), wh.read("donations")
+    return donors, donations
 
 
 def load_committees(
@@ -316,17 +256,9 @@ def load_committees(
     Congress's history instead of adding to it."""
     spark = wh.spark
     flat = committees_yaml.flatten_committees(committees_yaml.committees_df(spark, committee_docs))
-    ctbl = wh["committees"]
-    # first load DEDUPS like every other loader: a joint committee in
-    # both chamber YAML feeds coalesces to one committee_id and must
-    # persist once (the one-row-per-key invariant upsert relies on)
-    merged = (
-        merge_keep(ctbl.read(), flat, ["committee_id"], update_wins=True)
-        if ctbl.exists()
-        else dedup_keys(flat, ["committee_id"])
-    )
-    ctbl.overwrite(merged)
-    wh.log("committees", ctbl.read().count())
+    # a joint committee in both chamber YAML feeds coalesces to one
+    # committee_id and must persist once, first load included
+    wh.upsert("committees", flat, update_wins=True)
 
     mem = committees_yaml.memberships_df(spark, membership_doc)
     pol = F.broadcast(wh.read("politicians").select(F.col("congress_id").alias("bioguide"), "politician_id"))
@@ -338,15 +270,7 @@ def load_committees(
         "party",
         F.lit(congress).alias("congress"),
     )
-    atbl = wh["committee_assignments"]
-    keys = Warehouse.KEYS["committee_assignments"]
-    amerged = (
-        merge_keep(atbl.read(), fresh, keys, update_wins=True)
-        if atbl.exists()
-        else dedup_keys(fresh, keys)
-    )
-    atbl.overwrite(amerged)
-    wh.log("committee_assignments", atbl.read().count())
+    wh.upsert("committee_assignments", fresh, update_wins=True)
 
 
 def run_all(

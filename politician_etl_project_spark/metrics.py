@@ -76,7 +76,7 @@ def financial_metrics(
     ).orderBy(F.desc("total"))
     # group by donor_id and KEEP it: donor identity is
     # NAME|ZIP|EMPLOYER, so two distinct "JOHN SMITH"s must not merge
-    # into one inflated top-donor row (same discipline as scope_metrics),
+    # into one inflated top-donor row (same discipline as scope_report_sql),
     # and downstream rankers need donor_id as the final tiebreak so two
     # same-name same-total donors get deterministic ranks
     top_donors = base.groupBy("donor_id", "name", "donor_type").agg(
@@ -360,164 +360,6 @@ def bill_cosponsors(
     return _paged(enriched, pred, ["politician_id"], skip, limit)
 
 
-# --- scope-variant metric bundles (chamber / party / congress / multi) ------
-
-
-def scope_metrics(
-    tables: dict[str, DataFrame],
-    ids: list[int] | None = None,
-    chamber: str | None = None,
-    party: str | None = None,
-    congress: int | None = None,
-) -> dict[str, DataFrame]:
-    """The shared engine behind the reference's four scope endpoints
-    (app/metrics.py:133-243 multi-politician, :245-334 chamber, :336-425
-    party, :427-519 congress): pick a politician set, then aggregate
-    donations / bills / cosponsorships / votes over it.
-
-    Where the reference runs ~8 sequential ORM queries per scope — each
-    re-filtering by a driver-side ``IN (ids...)`` list — the politician
-    set here is a broadcast semi-join against each fact (no id list ever
-    leaves the cluster), and each breakdown+total pair collapses into a
-    single aggregation (conditional sums; grouping-sets rollup for the
-    votes total).  Scale: facts are filtered by the broadcast semi-join
-    FIRST, so each bundle reads a politician-pruned slice (bucket layout
-    on politician_id keeps it shuffle-free), and the congress filter on
-    bills/votes is a broadcast bill-id semi-join."""
-    pols = tables["politicians"]
-    pred = F.lit(True)
-    if ids is not None:
-        pred = pred & F.col("politician_id").isin([int(i) for i in ids])
-    if chamber is not None:
-        pred = pred & (F.col("chamber") == chamber.capitalize())
-    if party is not None:
-        pred = pred & (F.col("party") == party)
-    scope = pols.filter(pred)
-    pol_ids = scope.select("politician_id")
-
-    roster = scope.select(
-        "politician_id",
-        F.concat_ws(" ", "first_name", "last_name").alias("name"),
-        "party",
-        "state",
-        "chamber",
-    ).orderBy("politician_id")
-    n_politicians = scope.agg(F.count("*").alias("total_politicians"))
-
-    dons = tables["donations"].join(F.broadcast(pol_ids), "politician_id", "left_semi")
-    donations_total = dons.agg(
-        F.coalesce(F.sum("amount"), F.lit(0).cast("decimal(12,2)")).alias("total_amount"),
-        F.count("*").alias("n_donations"),
-    )
-    with_type = dons.join(
-        F.broadcast(tables["donors"].select("donor_id", "name", "donor_type")), "donor_id"
-    )
-    donations_by_type = (
-        with_type.filter(F.col("donor_type").isNotNull())
-        .groupBy("donor_type")
-        .agg(F.sum("amount").alias("total"))
-        .orderBy("donor_type")
-    )
-    # donor_id kept for the same reason as financial_metrics: it is the
-    # documented final rank tiebreak for same-name same-total donors
-    top_donors = (
-        with_type.groupBy("donor_id", "name", "donor_type")
-        .agg(F.sum("amount").alias("total_donated"))
-        .orderBy(F.desc("total_donated"), F.asc("name"), F.asc("donor_id"))
-        .limit(10)
-    )
-
-    bills = tables["bills"]
-    sponsored = bills.join(
-        F.broadcast(pol_ids.withColumnRenamed("politician_id", "sponsor_id")),
-        "sponsor_id",
-        "left_semi",
-    )
-    if congress is not None:
-        sponsored = sponsored.filter(F.col("congress") == congress)
-    bills_sponsored = sponsored.agg(F.count("*").alias("sponsored"))
-
-    cos = tables["bill_cosponsors"].join(F.broadcast(pol_ids), "politician_id", "left_semi")
-    votes = tables["votes"].join(F.broadcast(pol_ids), "politician_id", "left_semi")
-    if congress is not None:
-        in_congress = F.broadcast(
-            bills.filter(F.col("congress") == congress).select("bill_id")
-        )
-        cos = cos.join(in_congress, "bill_id", "left_semi")
-        votes = votes.join(in_congress, "bill_id", "left_semi")
-    # coalesce to 0 — same empty-scope NULL-sum hazard legislative_metrics
-    # had (an all-Senate scope with a congress that has no cosponsorships)
-    cosponsored = cos.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("is_original_cosponsor"), 1).otherwise(0)), F.lit(0)
-        ).alias("cosponsored_original"),
-        F.coalesce(
-            F.sum(F.when(~F.col("is_original_cosponsor"), 1).otherwise(0)), F.lit(0)
-        ).alias("cosponsored_later"),
-        F.count("*").alias("total_cosponsored"),
-    )
-    # rollup: per-position rows AND the grand total in one aggregation
-    votes_by_position = (
-        votes.withColumn("position", F.coalesce("vote_position", F.lit("Unknown")))
-        .rollup("position")
-        .agg(F.count("*").alias("n"), F.grouping("position").alias("_total"))
-        .select(
-            F.when(F.col("_total") == 1, F.lit("TOTAL")).otherwise(F.col("position")).alias(
-                "vote_position"
-            ),
-            "n",
-        )
-        .orderBy("vote_position")
-    )
-    return {
-        "politicians": roster,
-        "n_politicians": n_politicians,
-        "donations_total": donations_total,
-        "donations_by_type": donations_by_type,
-        "top_donors": top_donors,
-        "bills_sponsored": bills_sponsored,
-        "cosponsored": cosponsored,
-        "votes_by_position": votes_by_position,
-    }
-
-
-def chamber_metrics(
-    tables: dict[str, DataFrame], chamber: str, congress: int | None = None
-) -> dict[str, DataFrame]:
-    """app/metrics.py:245-334 GET /metrics/chamber/{chamber}."""
-    return scope_metrics(tables, chamber=chamber, congress=congress)
-
-
-def party_metrics(
-    tables: dict[str, DataFrame],
-    party: str,
-    congress: int | None = None,
-    chamber: str | None = None,
-) -> dict[str, DataFrame]:
-    """app/metrics.py:336-425 GET /metrics/party/{party}."""
-    return scope_metrics(tables, party=party, chamber=chamber, congress=congress)
-
-
-def congress_metrics(
-    tables: dict[str, DataFrame],
-    congress_number: int,
-    chamber: str | None = None,
-    party: str | None = None,
-) -> dict[str, DataFrame]:
-    """app/metrics.py:427-519 GET /metrics/congress/{congress_number}."""
-    return scope_metrics(tables, chamber=chamber, party=party, congress=congress_number)
-
-
-def multi_politician_metrics(
-    tables: dict[str, DataFrame], ids: list[int], congress: int | None = None
-) -> dict[str, DataFrame]:
-    """app/metrics.py:133-243 GET /metrics/politicians (batch compare).
-    ``politicians`` in the result is the found subset; callers diff it
-    against the requested ids for the reference's missing_politician_ids
-    field."""
-    return scope_metrics(tables, ids=ids, congress=congress)
-
-
 _REPORT_SQL = """
 WITH base AS (
   SELECT /*+ BROADCAST(n) */ d.donor_id, d.amount, d.date, n.name, n.donor_type
@@ -735,8 +577,10 @@ def scope_report_sql(
     answers GET /metrics/chamber/{chamber} (and party / congress / multi,
     app/metrics.py:133-519) with ~8 sequential ORM queries per request,
     each re-filtering a driver-side ``IN (ids...)`` list; here every
-    ``scope_metrics`` part unions into one plan that shares the
-    politician-scope semi-join across every fact.  SQL text for the same
+    part (roster, donations, sponsored and cosponsored bills, votes)
+    unions into one plan that shares the politician-scope semi-join
+    across every fact — a broadcast LEFT SEMI, so no fact is shuffled
+    (plan-asserted in tests/test_metrics_oracle.py).  SQL text for the same
     reason as ``politician_report_sql`` (the DataFrame-API plan of the
     ~8-branch union cost ~0.6 s of py4j calls per request).
 

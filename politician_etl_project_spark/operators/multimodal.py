@@ -735,16 +735,6 @@ def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
 
-def _last_nonzero(blocks: np.ndarray, lo: int, hi: int) -> list:
-    """(by, bx, 64) coefficient grid -> nested (by, bx) Python lists of
-    the index RELATIVE TO ``lo`` of the last nonzero coefficient in the
-    zigzag slice [lo..hi], -1 when the slice is all zero — ONE
-    vectorized pass replacing a per-block np.nonzero in the encode
-    loops."""
-    m = blocks[:, :, lo : hi + 1] != 0
-    return np.where(m.any(-1), m.shape[-1] - 1 - np.argmax(m[:, :, ::-1], -1), -1).tolist()
-
-
 def _encode_dc_only(
     bw: _JpegBitWriter, dc: int, pred: int, dc_codes: dict[int, tuple[int, int]]
 ) -> int:
@@ -867,20 +857,6 @@ def _mag_fields(v: np.ndarray, s: np.ndarray) -> np.ndarray:
     negative, masked to s bits (the scalar encoders' fused-mag rule)."""
     full = (np.int64(1) << s) - 1
     return np.where(v > 0, v, v + full) & full
-
-
-def _encode_scan_fields(
-    bw: _JpegBitWriter,
-    blocks: np.ndarray,
-    comp: np.ndarray,
-    dc_tabs: list[tuple[np.ndarray, np.ndarray]] | None,
-    ac_tabs: list[tuple[np.ndarray, np.ndarray]] | None,
-    lo: int = 1,
-    hi: int = 63,
-) -> None:
-    codes, lens, _ = _scan_fields(blocks, comp, dc_tabs, ac_tabs, lo, hi)
-    if codes.size:
-        bw.write_fields(codes, lens)
 
 
 def _scan_fields(

@@ -109,7 +109,12 @@ class ParquetUpsertTable:
     partitions containing incoming keys are read (partition-pruned scan,
     plan-asserted in tests/test_storage.py) and rewritten (dynamic
     partition overwrite) — at 100 TB an incremental batch touching one
-    congress/day rewrites that slice, not the table."""
+    congress/day rewrites that slice, not the table.
+
+    With ``id_col`` the table owns a surrogate id beside its natural
+    ``keys`` (S18): ``upsert`` assigns dense ids on the first write and
+    keeps every published id on later ones (:func:`stable_ids`); an id
+    column in the incoming batch is ignored."""
 
     def __init__(
         self,
@@ -117,11 +122,13 @@ class ParquetUpsertTable:
         path: str,
         keys: list[str],
         partition_cols: list[str] | None = None,
+        id_col: str | None = None,
     ):
         self.spark = spark
         self.path = path
         self.keys = keys
         self.partition_cols = list(partition_cols or [])
+        self.id_col = id_col
         # The partition-scoped MERGE reads only partitions the batch
         # touches, so a merge key must never move between partitions —
         # otherwise the same key could live in a touched AND an untouched
@@ -136,6 +143,10 @@ class ParquetUpsertTable:
                 "a key changing partitions would silently duplicate under "
                 "partition-scoped MERGE"
             )
+        # stable ids read the whole prior key -> id map; a partition-scoped
+        # MERGE reads only the touched slice, so it could reissue an id
+        if id_col is not None and self.partition_cols:
+            raise ValueError("id_col cannot be combined with partition_cols")
         self._recover()
 
     def _recover(self) -> None:
@@ -171,17 +182,33 @@ class ParquetUpsertTable:
         self._swap_write(df)
 
     def upsert(self, df: DataFrame, update_wins: bool = True) -> None:
+        if self.id_col is not None:
+            df = df.drop(self.id_col)
         if not self.exists():
             # enforce one-row-per-key from the FIRST write: in-batch
             # duplicate keys written raw would survive forever under
             # partition-scoped MERGE (later batches never re-read
-            # untouched partitions to heal them — hypothesis-caught)
-            self._swap_write(dedup_keys(df, self.keys))
+            # untouched partitions to heal them — hypothesis-caught), and
+            # a duplicate key given two ids keeps both through every
+            # later stable_ids join
+            first = dedup_keys(df, self.keys)
+            if self.id_col is not None:
+                first = stable_ids(first, None, self.keys, self.id_col)
+            self._swap_write(first)
             return
         if self.partition_cols:
             self._merge_partitions(df, update_wins)
             return
-        merged = merge_keep(self.read(), df, self.keys, update_wins=update_wins)
+        if self.id_col is None:
+            merged = merge_keep(self.read(), df, self.keys, update_wins=update_wins)
+        else:
+            prior = self.read()
+            merged = stable_ids(
+                merge_keep(prior.drop(self.id_col), df, self.keys, update_wins=update_wins),
+                prior.select(*self.keys, self.id_col),
+                self.keys,
+                self.id_col,
+            )
         self._swap_write(merged)
 
     def _touched_existing(self, df: DataFrame) -> DataFrame:

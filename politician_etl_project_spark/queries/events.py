@@ -915,7 +915,8 @@ ORDER BY user_id
     "which strictly increases — must equal the global aggregate "
     "exactly.  Exactness is by construction: cents accumulate in "
     "int64, so batch split and accumulation order cannot perturb the "
-    "hash (the float twin user_running_totals keeps pytest coverage).  "
+    "hash (tests/test_streaming.py checks the same operator on a "
+    "four-file split).  "
     "Reference analog: the donor-totals dict the update scripts carry "
     "across chunks (scripts/update_donations.py:237).  Scale: state is "
     "one 16-byte tuple per user, Arrow-batched; the memory sink is a "

@@ -856,7 +856,29 @@ def ensure_etl_fixtures() -> str:
     return d
 
 
-_ETL_WH_PATH = os.path.join(tempfile.gettempdir(), "spark_graft_etl_wh_v1")
+def _etl_warehouse_path(kind: str, fixture_dir: str) -> str:
+    """Where a built ETL fixture warehouse is cached: keyed on the staged
+    inputs AND an md5 of the code that builds it (the loaders, the upsert
+    table, the source parsers and this module), so a warehouse written by
+    older code is never served as this code's output."""
+    import glob
+    import hashlib
+
+    from politician_etl_project_spark.catalog import tmp_cache_key
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    builders = [
+        os.path.join(pkg, "etl.py"),
+        os.path.join(pkg, "operators", "upsert.py"),
+        *sorted(glob.glob(os.path.join(pkg, "sources", "*.py"))),
+        os.path.abspath(__file__),
+    ]
+    h = hashlib.md5()
+    for path in builders:
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    key = tmp_cache_key(fixture_dir, version=h.hexdigest())
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_etl_{kind}_{key}")
 
 
 def _ensure_etl_warehouse(spark: SparkSession) -> str:
@@ -880,7 +902,7 @@ def _ensure_etl_warehouse(spark: SparkSession) -> str:
             membership_doc=_ETL_MEMBERSHIPS,
         )
 
-    return ensure_built_dir(_ETL_WH_PATH, _build)
+    return ensure_built_dir(_etl_warehouse_path("wh", d), _build)
 
 
 _ETL_ORACLE = """
@@ -1161,9 +1183,6 @@ def ensure_etl2_fixtures() -> str:
     return d
 
 
-_ETL_INC_PATH = os.path.join(tempfile.gettempdir(), "spark_graft_etl_wh_inc_v1")
-
-
 def _ensure_etl_incremental_warehouse(spark: SparkSession) -> str:
     """Day-1 run_all, then the day-2 refresh re-running the individual
     loaders exactly as the reference's scripts are re-run daily."""
@@ -1194,7 +1213,7 @@ def _ensure_etl_incremental_warehouse(spark: SparkSession) -> str:
         etl.load_donations(wh, os.path.join(d2, "itcont.txt"))
         etl.load_committees(wh, _ETL_COMMITTEE_DOCS, _ETL2_MEMBERSHIPS)
 
-    return ensure_built_dir(_ETL_INC_PATH, _build)
+    return ensure_built_dir(_etl_warehouse_path("wh_inc", d2), _build)
 
 
 _ETL_INC_ORACLE = """

@@ -260,12 +260,6 @@ class SnapshotTable:
             )
         return out
 
-    def current_op(self) -> str | None:
-        """The op label of the live version (None before the first
-        commit)."""
-        cur = self.current_version()
-        return None if cur is None else self._manifest(cur)["op"]
-
     # -- per-sink replay markers --------------------------------------------
 
     def sink_marker(self, sink: str):

@@ -17,7 +17,7 @@ from politician_etl_project_spark.streaming.pipelines import (
     incremental_upsert_stream,
     interval_join_stream,
     session_counts,
-    user_running_totals,
+    user_running_totals_exact,
     windowed_totals,
 )
 
@@ -29,6 +29,6 @@ __all__ = [
     "session_counts",
     "dedup_stream",
     "interval_join_stream",
-    "user_running_totals",
+    "user_running_totals_exact",
     "incremental_upsert_stream",
 ]

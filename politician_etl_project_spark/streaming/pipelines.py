@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -130,51 +129,6 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-_USER_TOTALS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-_USER_STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-
-
-def _accumulate_user(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-user running totals carried in the state store across
-    micro-batches; emits the updated totals every batch the user appears
-    in (update-mode semantics)."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [total]})
-
-
-def user_running_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    lifetime event count + value sum (D5/T5-style accumulator the
-    reference keeps in driver dicts, app/metrics.py:571-576 — here it is
-    distributed, Arrow-batched, and checkpointed)."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _accumulate_user,
-            outputStructType=_USER_TOTALS_SCHEMA,
-            stateStructType=_USER_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def interval_join_stream(
     views: DataFrame,
     purchases: DataFrame,
@@ -247,51 +201,6 @@ def incremental_upsert_stream(
             table.upsert(batch_df, update_wins=False)
 
     run_foreach_batch(events, _apply, checkpoint_dir=checkpoint_dir)
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user accumulator as :func:`user_running_totals`, on
-    the Spark 4 ``transformWithStateInPandas`` API (StatefulProcessor +
-    typed ValueState).  The modern surface matters at scale: typed state
-    cells support per-state TTL, multiple independent states per key,
-    timers, and schema evolution of state — none of which the legacy
-    ``applyInPandasWithState`` blob state offers.  Requires the RocksDB
-    state-store provider (tests set it; a real cluster should run RocksDB
-    anyway for state larger than executor heap) and the ``protobuf``
-    package for the Python↔JVM state protocol — absent in this container,
-    so the equivalence test import-skips (the legacy-API twin
-    :func:`user_running_totals` is fully tested here)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _USER_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=_USER_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def dedup_ingest_stream(
@@ -618,12 +527,14 @@ def _accumulate_user_exact(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Integer-cents twin of :func:`_accumulate_user`: the value sum is
-    accumulated as ``floor(value*100 + 0.5)`` per row in int64, so the
-    lifetime total is EXACT and independent of both batch split and
-    accumulation order — the property that lets the driver hash-compare
-    the stream's final state against a plain SQL aggregate (float
-    accumulation order would differ between pandas and the engines)."""
+    """Per-user running totals carried in the state store across
+    micro-batches, emitted every batch the user appears in (update-mode
+    semantics).  The value sum is accumulated as ``floor(value*100 +
+    0.5)`` per row in int64, so the lifetime total is EXACT and
+    independent of both batch split and accumulation order — the
+    property that lets the driver hash-compare the stream's final state
+    against a plain SQL aggregate (float accumulation order would differ
+    between pandas and the engines)."""
     import numpy as np
 
     n, cents = state.get if state.exists else (0, 0)
@@ -637,11 +548,14 @@ def _accumulate_user_exact(
 
 
 def user_running_totals_exact(events: DataFrame) -> DataFrame:
-    """applyInPandasWithState accumulator with an exact integer-cents
-    total (see :func:`_accumulate_user_exact`) — the oracle-checkable
-    D5 witness: per-user state carried across micro-batches, emitted in
-    update mode each batch the user appears in; the last emission per
-    user equals the batch GROUP BY exactly."""
+    """Custom stateful operator via applyInPandasWithState: per-user
+    lifetime event count + exact integer-cents value sum (the D5/T5-style
+    accumulator the reference keeps in driver dicts, app/metrics.py:571-576
+    — here distributed, Arrow-batched and checkpointed; see
+    :func:`_accumulate_user_exact`).  The oracle-checkable D5 witness:
+    per-user state carried across micro-batches, emitted in update mode
+    each batch the user appears in; the last emission per user equals
+    the batch GROUP BY exactly."""
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(

@@ -96,11 +96,10 @@ MEMBERSHIPS = {
 }
 
 
-@pytest.fixture(scope="module")
-def staging(tmp_path_factory):
-    d = tmp_path_factory.mktemp("staging")
-    (d / "xml").mkdir()
-    (d / "xml" / "hr123.xml").write_text(BILL_XML)
+def _stage(d, bill_files=("hr123.xml",)):
+    (d / "xml").mkdir(parents=True)
+    for name in bill_files:
+        (d / "xml" / name).write_text(BILL_XML)
     (d / "votes").mkdir()
     (d / "votes" / "v1").mkdir()
     (d / "votes" / "v1" / "data.json").write_text(json.dumps(VOTE_DOC))
@@ -110,11 +109,16 @@ def staging(tmp_path_factory):
     return d
 
 
-def _run(spark, staging, root):
+@pytest.fixture(scope="module")
+def staging(tmp_path_factory):
+    return _stage(tmp_path_factory.mktemp("staging"))
+
+
+def _run(spark, staging, root, members=MEMBERS):
     wh = etl.Warehouse(spark, str(root))
     return etl.run_all(
         wh,
-        member_records=MEMBERS,
+        member_records=members,
         billstatus_glob=str(staging / "xml" / "*.xml"),
         votes_glob=str(staging / "votes" / "*" / "data.json"),
         itcont_path=str(staging / "itcont.txt"),
@@ -202,6 +206,27 @@ def test_idempotent_rerun(spark, staging, wh):
     _run(spark, staging, wh.root)  # replay the same staging input
     after = _snapshot(wh)
     assert before == after
+
+
+def test_first_load_keeps_one_row_per_key(spark, tmp_path):
+    """A first batch that repeats one member record (another state) and
+    carries one billstatus file twice: the dims and the cosponsor fact
+    hold one row per natural key (the reference's UNIQUE constraints),
+    and replaying the batch leaves every table unchanged.  Two ids for
+    one key would survive forever — every later stable_ids join keeps
+    both."""
+    d = _stage(tmp_path / "staging", bill_files=("hr123.xml", "hr123_copy.xml"))
+    members = MEMBERS + [dict(MEMBERS[0], state="New York")]
+    wh = _run(spark, d, tmp_path / "wh", members=members)
+    counts = {}
+    for name in ("politicians", "bills", "bill_cosponsors"):
+        df = wh.read(name)
+        counts[name] = df.count()
+        assert counts[name] == df.select(*wh.KEYS[name]).distinct().count(), name
+    assert counts == {"politicians": 2, "bills": 1, "bill_cosponsors": 1}
+    before = _snapshot(wh)
+    _run(spark, d, wh.root, members=members)
+    assert _snapshot(wh) == before
 
 
 def test_incremental_update_wins_and_first_wins(spark, staging, wh):

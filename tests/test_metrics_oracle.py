@@ -195,12 +195,30 @@ def test_pagination_vs_duckdb(wh, duck):
     assert got == want
 
 
-def test_scope_metrics_chamber_vs_duckdb(wh, duck):
+def _scope_report(wh, **scope):
+    """``metrics.scope_report_sql`` on the fixture warehouse, grouped by
+    (section, metric) into ``[(label, value), ...]``."""
     tables = {n: wh.read(n) for n in wh.KEYS if n != "update_log"}
-    out = metrics.chamber_metrics(tables, "house")  # lowercase in, capitalized match
+    out: dict[tuple[str, str], list[tuple]] = {}
+    for r in metrics.scope_report_sql(tables, view_prefix="mo_", **scope).collect():
+        out.setdefault((r.section, r.metric), []).append((r.label, r.value))
+    return out
+
+
+def _values(report, section, *metric_names):
+    """One row of the named scalar metrics, canonicalized like ``_duck``."""
+    return [tuple(_canon(report[(section, m)][0][1]) for m in metric_names)]
+
+
+def _labeled(report, section, metric):
+    return sorted((_canon(label), _canon(v)) for label, v in report.get((section, metric), []))
+
+
+def test_scope_metrics_chamber_vs_duckdb(wh, duck):
+    out = _scope_report(wh, chamber="house")  # lowercase in, capitalized match
 
     ids_sql = "SELECT politician_id FROM politicians WHERE chamber = 'House'"
-    got = _rows(out["donations_total"], ["total_amount", "n_donations"])
+    got = _values(out, "financial", "total_amount", "n_donations")
     want = _duck(
         duck,
         f"SELECT COALESCE(SUM(amount),0), COUNT(*) FROM donations WHERE politician_id IN ({ids_sql})",
@@ -208,7 +226,7 @@ def test_scope_metrics_chamber_vs_duckdb(wh, duck):
     )
     assert got == want
 
-    got = _rows(out["donations_by_type"], ["donor_type", "total"])
+    got = _labeled(out, "financial", "by_type_total")
     want = _duck(
         duck,
         f"""SELECT dn.donor_type, SUM(d.amount) FROM donations d JOIN donors dn USING (donor_id)
@@ -217,11 +235,11 @@ def test_scope_metrics_chamber_vs_duckdb(wh, duck):
     )
     assert got == want
 
-    got = _rows(out["bills_sponsored"], ["sponsored"])
+    got = _values(out, "legislative", "sponsored")
     want = _duck(duck, f"SELECT COUNT(*) FROM bills WHERE sponsor_id IN ({ids_sql})", 1)
     assert got == want
 
-    got = _rows(out["votes_by_position"], ["vote_position", "n"])
+    got = _labeled(out, "voting", "position_n")
     want = _duck(
         duck,
         f"""SELECT COALESCE(vote_position,'Unknown'), COUNT(*) FROM votes
@@ -234,9 +252,10 @@ def test_scope_metrics_chamber_vs_duckdb(wh, duck):
 
 
 def test_scope_metrics_congress_filter_vs_duckdb(wh, duck):
-    tables = {n: wh.read(n) for n in wh.KEYS if n != "update_log"}
-    out = metrics.congress_metrics(tables, 119)
-    got = _rows(out["cosponsored"], ["cosponsored_original", "cosponsored_later", "total_cosponsored"])
+    out = _scope_report(wh, congress=119)
+    got = _values(
+        out, "legislative", "cosponsored_original", "cosponsored_later", "total_cosponsored"
+    )
     want = _duck(
         duck,
         """SELECT SUM(CASE WHEN is_original_cosponsor THEN 1 ELSE 0 END),
@@ -246,24 +265,31 @@ def test_scope_metrics_congress_filter_vs_duckdb(wh, duck):
         3,
     )
     assert got == want
-    got = _rows(out["bills_sponsored"], ["sponsored"])
+    got = _values(out, "legislative", "sponsored")
     want = _duck(duck, "SELECT COUNT(*) FROM bills WHERE congress = 119 AND sponsor_id IS NOT NULL", 1)
     assert got == want
 
 
 def test_multi_politician_metrics_vs_duckdb(wh, duck):
-    tables = {n: wh.read(n) for n in wh.KEYS if n != "update_log"}
     ids = [r.politician_id for r in wh.read("politicians").collect()]
-    out = metrics.multi_politician_metrics(tables, ids)
-    got = _rows(out["top_donors"], ["name", "donor_type", "total_donated"])
-    want = _duck(
-        duck,
-        """SELECT dn.name, dn.donor_type, SUM(d.amount) FROM donations d JOIN donors dn USING (donor_id)
-           GROUP BY dn.donor_id, dn.name, dn.donor_type ORDER BY 3 DESC, 1 LIMIT 10""",
-        3,
+    out = _scope_report(wh, ids=ids)
+    # the report labels each top-donor row with the donor name only
+    got = sorted(
+        (_canon(label), _canon(v))
+        for (_, metric), rows in out.items() if metric.startswith("top_donor_")
+        for label, v in rows
+    )
+    want = sorted(
+        (name, total)
+        for name, _type, total in _duck(
+            duck,
+            """SELECT dn.name, dn.donor_type, SUM(d.amount) FROM donations d JOIN donors dn USING (donor_id)
+               GROUP BY dn.donor_id, dn.name, dn.donor_type ORDER BY 3 DESC, 1 LIMIT 10""",
+            3,
+        )
     )
     assert got == want
-    assert _rows(out["n_politicians"], ["total_politicians"]) == [(len(ids),)]
+    assert _values(out, "scope", "n_politicians") == [(len(ids),)]
 
 
 def test_list_endpoints_vs_duckdb(wh, duck):
@@ -330,7 +356,7 @@ def test_bill_navigation_vs_duckdb(wh, duck):
 
 
 def test_scope_metrics_semi_joins_broadcast(wh):
-    """Every fact in a scope bundle is reduced by a broadcast LEFT SEMI
+    """Every fact in a scope report is reduced by a broadcast LEFT SEMI
     against the politician id set — the scan-side pushdown that keeps a
     100 TB fact read politician-pruned (never a sort-merge shuffle of
     the full fact)."""
@@ -338,14 +364,21 @@ def test_scope_metrics_semi_joins_broadcast(wh):
     import io
 
     tables = {n: wh.read(n) for n in wh.KEYS if n != "update_log"}
-    out = metrics.chamber_metrics(tables, "House", congress=119)
-    for frame in ("donations_total", "bills_sponsored", "cosponsored", "votes_by_position"):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            out[frame].explain("formatted")
-        plan = buf.getvalue()
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, f"{frame}:\n{plan}"
-        assert "SortMergeJoin" not in plan, f"{frame} shuffles the fact:\n{plan}"
+    out = metrics.scope_report_sql(tables, chamber="House", congress=119, view_prefix="mo_")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain("formatted")
+    plan = buf.getvalue()
+    assert "SortMergeJoin" not in plan, f"the report shuffles a fact:\n{plan}"
+    # formatted-plan node details: "(n) BroadcastHashJoin ..." then its
+    # "Join type:" line; every semi join must be a broadcast one
+    semi_nodes = [
+        node for node in plan.split("\n\n(")
+        if "Join type: LeftSemi" in node
+    ]
+    assert semi_nodes, plan
+    for node in semi_nodes:
+        assert node.split("\n", 1)[0].split(") ", 1)[1].startswith("BroadcastHashJoin"), node
 
 
 def test_filtered_donations_explicit_none_ignored(wh):

@@ -220,6 +220,13 @@ def test_partition_cols_must_be_subset_of_keys(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="subset of keys"):
         ParquetUpsertTable(spark, str(tmp_path / "bad"), keys=["k"], partition_cols=["congress"])
+    # stable surrogate ids need the whole key -> id map, which a
+    # partition-scoped MERGE never reads
+    with _pytest.raises(ValueError, match="id_col"):
+        ParquetUpsertTable(
+            spark, str(tmp_path / "bad2"), keys=["k", "congress"],
+            partition_cols=["congress"], id_col="k_id",
+        )
 
 
 def test_compact_counts_partitioned_files(spark, tmp_path):

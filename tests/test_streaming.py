@@ -20,7 +20,7 @@ from politician_etl_project_spark.streaming import (
     incremental_upsert_stream,
     run_to_memory,
     session_counts,
-    user_running_totals,
+    user_running_totals_exact,
     windowed_totals,
 )
 
@@ -159,10 +159,11 @@ def test_dedup_stream_exactly_once(spark, staged_events, tmp_path):
 def test_user_running_totals_state(spark, staged_events, tmp_path):
     """applyInPandasWithState accumulator: with maxFilesPerTrigger=1 each
     user's totals are emitted once per micro-batch they appear in; the
-    *last* emission per user must equal the batch groupBy."""
+    *last* emission per user must equal the batch groupBy, with the
+    value sum in exact integer cents."""
     stream = events_stream(spark, staged_events, max_files_per_trigger=1)
     got = run_to_memory(
-        user_running_totals(stream),
+        user_running_totals_exact(stream),
         "state_sink",
         output_mode="update",
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -170,18 +171,18 @@ def test_user_running_totals_state(spark, staged_events, tmp_path):
     # memory sink in update mode appends each emission; last row per user wins
     last: dict[int, tuple] = {}
     for r in got:
-        last[r["user_id"]] = (r["n_events"], r["total_value"])
+        last[r["user_id"]] = (r["n_events"], r["total_cents"])
     expected = {
-        r["user_id"]: (r["n"], r["total"])
+        r["user_id"]: (r["n"], r["cents"])
         for r in _batch_events(spark)
         .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint")).alias("cents"),
+        )
         .collect()
     }
-    assert set(last) == set(expected)
-    for uid, (n, total) in expected.items():
-        assert last[uid][0] == n
-        assert abs(last[uid][1] - total) < 1e-6
+    assert last == expected
 
 
 def test_incremental_upsert_foreachbatch(spark, staged_events, tmp_path):
@@ -295,51 +296,6 @@ def test_foreachbatch_merge_into_partitioned_table(spark, tmp_path):
     got = sorted(tuple(r) for r in tbl.read().select("k", "congress", "v").collect())
     assert got == [(1, 118, 10), (2, 119, 21), (3, 119, 30)]
     assert set(os.listdir(str(tmp_path / "tbl" / "congress=118"))) == files_118
-
-
-def test_user_running_totals_transform_with_state(spark, staged_events, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API) must produce
-    the same final per-user totals as the legacy applyInPandasWithState
-    accumulator and the batch groupBy."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state protocol needs protobuf "
-        "(not shipped in this container; operator runs on a real cluster)",
-    )
-    from politician_etl_project_spark.streaming.pipelines import user_running_totals_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = events_stream(spark, staged_events, max_files_per_trigger=1)
-        got = run_to_memory(
-            user_running_totals_tws(stream),
-            "tws_sink",
-            output_mode="update",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    last: dict[int, tuple] = {}
-    for r in got:
-        last[r["user_id"]] = (r["n_events"], r["total_value"])
-    expected = {
-        r["user_id"]: (r["n"], r["total"])
-        for r in _batch_events(spark)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for uid, (n, total) in expected.items():
-        assert last[uid][0] == n
-        assert abs(last[uid][1] - total) < 1e-6
 
 
 def test_dedup_ingest_stream(spark, tmp_path):

@@ -89,7 +89,7 @@ MANUAL = {
            "tests/test_etl.py (full-suite)"),
     "D1": ("functions/scalar.py normalize_name/parse_last_first — native-first policy (SURVEY D1)",
            "tests/test_sources.py::test_member_transform, test_fuzzy_link"),
-    "D5": ("streaming/pipelines.py:user_running_totals (applyInPandasWithState custom state)",
+    "D5": ("streaming/pipelines.py:user_running_totals_exact (applyInPandasWithState custom state)",
            "tests/test_streaming.py::test_user_running_totals_state"),
 }
 

@@ -14,6 +14,11 @@ write on (the reference's UNIQUE constraints), and for the three
 dimensions a surrogate id that is dense on the first load and never
 moves afterwards (SURVEY §7 hard-parts 1-2).
 
+Each rewrite publishes the table's schema file beside its data and
+counts the rows it writes (``DataFrame.observe``), so the ``update_log``
+row and the loaders' dimension reads (``Warehouse.read``) cost no job of
+their own: a batch's jobs are the ones that move its rows.
+
 Fact tables carry their natural keys (congress_id, bill_key,
 fec_filing_id) alongside the surrogate ints, so id resolution is a
 re-runnable broadcast join, never a stateful counter — that is what makes
@@ -104,16 +109,14 @@ class Warehouse:
         return table
 
     def log(self, table_name: str, n: int, notes: str | None = None) -> None:
-        log_update(self.spark, None, table_name, n, notes=notes).write.mode("append").parquet(
-            self.tables["update_log"].path
-        )
+        log_update(self.spark, self.tables["update_log"], table_name, n, notes=notes)
 
     def upsert(self, name: str, fresh: DataFrame, update_wins: bool) -> DataFrame:
         """One loader step's write: upsert ``fresh`` into table ``name``
-        under the table's own policy, log the table's row count to
-        ``update_log`` and return the published table."""
-        self.tables[name].upsert(fresh, update_wins=update_wins)
-        self.log(name, self.read(name).count())
+        under the table's own policy, log the table's row count (counted
+        by the rewrite itself) to ``update_log`` and return the published
+        table (a read pinned to its schema file: no job)."""
+        self.log(name, self.tables[name].upsert(fresh, update_wins=update_wins))
         return self.read(name)
 
 

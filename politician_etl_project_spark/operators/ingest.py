@@ -66,6 +66,7 @@ from politician_etl_project_spark.operators.dedup import (
     lsh_bucket_drops,
     minhash_signature_from,
 )
+from politician_etl_project_spark.schemas import local_frame
 
 _N_HASHES = 4
 _ROWS_PER_BAND = 2
@@ -140,57 +141,61 @@ class DedupIngestTable:
         for t in ("fps", "bands"):
             shutil.rmtree(f"{self.path}/{t}", ignore_errors=True)
         enriched = _with_fp(corpus, self.id_col, self.text_col)
-        self._append(enriched, overwrite=True)
-
-    def _append(self, enriched: DataFrame, overwrite: bool = False) -> None:
-        """Write survivor rows into both tables.  Incremental mode is
-        INSERT-IF-ABSENT by id within only the batch's partitions (two
-        pruned anti-joins, O(batch)): combined with the self-exclusion
-        in the ingest probes, an at-least-once replay that finds a doc
-        half-indexed (fps written, bands not — or the reverse) completes
-        exactly the missing table instead of double-appending or
-        dropping the doc as a dup of itself.
-
-        Rows are repartitioned BY the partition column before the write
-        so each ``fpp=``/``bkp=`` directory receives exactly one file
-        per write (each prefix hashes to one shuffle task) — without
-        this, every upstream scan partition emits a sliver into every
-        prefix it touches and the store accumulates thousands of tiny
-        files whose listing dominated the probe cost (r10 verdict #1:
-        the 4.8-7.6s page-cache-sensitive day band).  After the write,
-        the prefix manifest is refreshed (one root listing) so probes
-        never list directories at all."""
-        mode = "overwrite" if overwrite else "append"
-        if enriched.isEmpty():
-            return
-        fps_rows = enriched.select(self.id_col, "fp", "fpp")
-        band_rows = _bands_of(enriched, self.id_col)
-        if not overwrite:
-            # re-ground the manifests before the insert-if-absent probes:
-            # a crash between a prior append's data writes and its
-            # manifest refresh leaves the manifest stale, and a stale
-            # manifest here would hide existing rows from the anti-join
-            # (double-append on replay) — one root listing each heals it
-            for table in ("fps", "bands"):
-                self._refresh_manifest(table)
-            fpp = [r["fpp"] for r in fps_rows.select("fpp").distinct().collect()]
-            fps_rows = fps_rows.join(
-                self._pruned("fps", "fpp", fpp).select(self.id_col),
-                self.id_col,
-                "left_anti",
+        if not enriched.isEmpty():
+            self._write(
+                enriched.select(self.id_col, "fp", "fpp"),
+                _bands_of(enriched, self.id_col),
+                "overwrite",
             )
-            bkp = [r["bkp"] for r in band_rows.select("bkp").distinct().collect()]
-            band_rows = band_rows.join(
-                self._pruned("bands", "bkp", bkp).select(self.id_col).distinct(),
-                self.id_col,
-                "left_anti",
+
+    def _append(self, enriched: DataFrame, fpp: list[str], bkp: list[str]) -> None:
+        """Write survivor rows into both tables, INSERT-IF-ABSENT by id
+        within only the batch's partitions (two pruned anti-joins,
+        O(batch)): combined with the self-exclusion in the ingest
+        probes, an at-least-once replay that finds a doc half-indexed
+        (fps written, bands not — or the reverse) completes exactly the
+        missing table instead of double-appending or dropping the doc
+        as a dup of itself.
+
+        ``fpp``/``bkp`` are the ingest's own prefix IN-lists, taken over
+        the whole batch: a superset of the survivors' prefixes (the
+        dedup stages only remove documents), so the pruned slices hold
+        every stored row a survivor could clash with, and no job is
+        spent listing the survivors' prefixes again."""
+        # re-ground the manifests before the insert-if-absent probes:
+        # a crash between a prior append's data writes and its manifest
+        # refresh leaves the manifest stale, and a stale manifest here
+        # would hide existing rows from the anti-join (double-append on
+        # replay) — one root listing each heals it
+        for table in ("fps", "bands"):
+            self._refresh_manifest(table)
+        fps_rows = enriched.select(self.id_col, "fp", "fpp").join(
+            self._pruned("fps", "fpp", fpp).select(self.id_col), self.id_col, "left_anti"
+        )
+        band_rows = _bands_of(enriched, self.id_col).join(
+            self._pruned("bands", "bkp", bkp).select(self.id_col).distinct(),
+            self.id_col,
+            "left_anti",
+        )
+        self._write(fps_rows, band_rows, "append")
+
+    def _write(self, fps_rows: DataFrame, band_rows: DataFrame, mode: str) -> None:
+        """Rows are repartitioned BY the partition column (into the
+        session parallelism, so AQE cannot coalesce ~256 directories
+        into one writing task) before the write, so each ``fpp=``/
+        ``bkp=`` directory receives exactly one file per write (each
+        prefix hashes to one shuffle task) — without this, every
+        upstream scan partition emits a sliver into every prefix it
+        touches and the store accumulates thousands of tiny files whose
+        listing dominated the probe cost (r10 verdict #1: the 4.8-7.6s
+        page-cache-sensitive day band).  After the write, the prefix
+        manifest is refreshed (one root listing) so probes never list
+        directories at all."""
+        n = self.spark.sparkContext.defaultParallelism
+        for rows, table, col in ((fps_rows, "fps", "fpp"), (band_rows, "bands", "bkp")):
+            rows.repartition(n, F.col(col)).write.partitionBy(col).mode(mode).parquet(
+                f"{self.path}/{table}"
             )
-        fps_rows.repartition(F.col("fpp")).write.partitionBy("fpp").mode(mode).parquet(
-            f"{self.path}/fps"
-        )
-        band_rows.repartition(F.col("bkp")).write.partitionBy("bkp").mode(mode).parquet(
-            f"{self.path}/bands"
-        )
         for table in ("fps", "bands"):
             self._refresh_manifest(table)
 
@@ -260,7 +265,7 @@ class DedupIngestTable:
         live = self._live_prefixes(table)
         hit = sorted(set(prefixes) & set(live)) if live is not None else []
         if not hit:  # store absent, or the batch touches no stored prefix
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         root = f"{self.path}/{table}"
         return (
             self.spark.read.option("basePath", root)
@@ -468,11 +473,13 @@ class DedupIngestTable:
             n_in = sum(counts.values())
 
             # write survivor state (insert-if-absent — see _append)
-            if not dry_run:
+            if not dry_run and counts.get("n_ingested", 0):
                 self._append(
                     survivors.filter(F.col("_stage") == "n_ingested").drop(
                         "_bn", "_ns", "_stage"
-                    )
+                    ),
+                    fpp,
+                    bkp,
                 )
             return IngestReport(
                 n_in=n_in,

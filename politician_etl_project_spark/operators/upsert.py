@@ -22,12 +22,14 @@ write-temp-then-swap so a failed job never corrupts the table.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _INCOMING = 0
 _EXISTING = 1
@@ -98,6 +100,23 @@ def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) 
     return existing.unionByName(fresh)
 
 
+SCHEMA_FILE = "_schema.json"
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and map value nullable: the schema
+    a parquet read reports for data written with ``t``."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
 class ParquetUpsertTable:
     """A tiny managed-table abstraction over a parquet directory with the
     reference's three write modes: append (S11), upsert (S12/S13 via
@@ -114,7 +133,19 @@ class ParquetUpsertTable:
     With ``id_col`` the table owns a surrogate id beside its natural
     ``keys`` (S18): ``upsert`` assigns dense ids on the first write and
     keeps every published id on later ones (:func:`stable_ids`); an id
-    column in the incoming batch is ignored."""
+    column in the incoming batch is ignored.
+
+    Every rewrite publishes the table's schema beside its data, in
+    ``_schema.json`` (the underscore keeps it out of Spark's file index,
+    like ``_SUCCESS``), staged with the data so both swap in together.
+    ``read`` pins that schema and starts no job; without it (a table
+    written by older code) every ``spark.read.parquet`` runs a footer
+    job to infer one.  An append or a MERGE whose rows do not fit the
+    published schema is refused, as ``SnapshotTable.append`` refuses it:
+    a read pinned to a stale schema would null the divergent columns.
+    A full rewrite counts its rows as it writes them
+    (``DataFrame.observe``), so ``upsert`` returns the table's row count
+    without another job."""
 
     def __init__(
         self,
@@ -172,16 +203,62 @@ class ParquetUpsertTable:
                 return True
         return False
 
+    def published_schema(self) -> StructType | None:
+        """The published schema, or None when the table has no schema
+        file (never written, or written by older code)."""
+        try:
+            with open(os.path.join(self.path, SCHEMA_FILE)) as fh:
+                return StructType.fromJson(json.load(fh))
+        except (OSError, ValueError):
+            return None
+
+    def _published(self, df: DataFrame) -> StructType:
+        """The schema a parquet read reports for ``df`` written here:
+        all nullable, partition columns last."""
+        fields = [f for f in df.schema if f.name not in self.partition_cols]
+        fields += [df.schema[c] for c in self.partition_cols]
+        return _as_nullable(StructType(fields))
+
+    def _write_schema(self, root: str, df: DataFrame) -> None:
+        fd, tmp = tempfile.mkstemp(dir=root, prefix="_schema_", suffix=".tmp")
+        with os.fdopen(fd, "w") as fh:
+            fh.write(self._published(df).json())
+        os.replace(tmp, os.path.join(root, SCHEMA_FILE))
+
+    def _check_fits(self, df: DataFrame) -> None:
+        """Refuse rows that would land beside the published files with
+        another shape (column names and types; order and nullability
+        are free — parquet columns resolve by name)."""
+        want = self.published_schema()
+        if want is None:
+            return
+        got = self._published(df)
+        if {f.name: f.dataType for f in got} != {f.name: f.dataType for f in want}:
+            raise ValueError(
+                f"rows {got.simpleString()} do not match the schema of "
+                f"{self.path}, {want.simpleString()}; use overwrite() for "
+                "schema changes"
+            )
+
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        schema = self.published_schema()
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path)
 
     def append(self, df: DataFrame) -> None:
+        self._check_fits(df)
+        first = not self.exists()
         df.write.mode("append").parquet(self.path)
+        if first:
+            self._write_schema(self.path, df)
 
-    def overwrite(self, df: DataFrame) -> None:
-        self._swap_write(df)
+    def overwrite(self, df: DataFrame) -> int:
+        return self._swap_write(df)
 
-    def upsert(self, df: DataFrame, update_wins: bool = True) -> None:
+    def upsert(self, df: DataFrame, update_wins: bool = True) -> int | None:
+        """Returns the rows written: the table's row count after a full
+        rewrite, None after a partition-scoped MERGE (it writes only the
+        touched slice, so the table's size is not observed)."""
         if self.id_col is not None:
             df = df.drop(self.id_col)
         if not self.exists():
@@ -194,11 +271,10 @@ class ParquetUpsertTable:
             first = dedup_keys(df, self.keys)
             if self.id_col is not None:
                 first = stable_ids(first, None, self.keys, self.id_col)
-            self._swap_write(first)
-            return
+            return self._swap_write(first)
         if self.partition_cols:
             self._merge_partitions(df, update_wins)
-            return
+            return None
         if self.id_col is None:
             merged = merge_keep(self.read(), df, self.keys, update_wins=update_wins)
         else:
@@ -209,7 +285,7 @@ class ParquetUpsertTable:
                 self.keys,
                 self.id_col,
             )
-        self._swap_write(merged)
+        return self._swap_write(merged)
 
     def _touched_existing(self, df: DataFrame) -> DataFrame:
         """The existing rows the MERGE must consider: only partitions the
@@ -244,6 +320,7 @@ class ParquetUpsertTable:
         merged = merge_keep(
             self._touched_existing(df), df, self.keys, update_wins=update_wins
         )
+        self._check_fits(merged)
         staging = tempfile.mkdtemp(prefix="upsert-slice-", dir=os.path.dirname(self.path) or ".")
         try:
             # materialize BEFORE overwriting: the merged plan reads the very
@@ -275,18 +352,22 @@ class ParquetUpsertTable:
         self._swap_write(self.read().coalesce(target_files))
         return before
 
-    def _swap_write(self, df: DataFrame) -> None:
-        """Atomic-enough publish: write staging, rename live aside to
-        `.old`, rename staging into place, then drop `.old`.  A crash at
-        any point leaves either the old table live or recoverable from
-        `.old` (``_recover``) — never a window where the published path is
-        simply gone (the old version rmtree'd the live dir first)."""
+    def _swap_write(self, df: DataFrame) -> int:
+        """Atomic-enough publish: write staging (data, then its schema
+        file), rename live aside to `.old`, rename staging into place,
+        then drop `.old`.  A crash at any point leaves either the old
+        table live or recoverable from `.old` (``_recover``) — never a
+        window where the published path is simply gone (the old version
+        rmtree'd the live dir first).  Returns the rows written, counted
+        by the write job itself."""
         staging = tempfile.mkdtemp(prefix="upsert-", dir=os.path.dirname(self.path) or ".")
+        written = Observation()
         try:
-            writer = df.write.mode("overwrite")
+            writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
             if self.partition_cols:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(staging)
+            self._write_schema(staging, df)
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -299,6 +380,7 @@ class ParquetUpsertTable:
         # drop the session FileStatusCache entry for this path — readers
         # created after the swap must list the new part files
         self.spark.catalog.refreshByPath(self.path)
+        return written.get["rows"]
 
 
 def surrogate_ids(
@@ -378,20 +460,27 @@ def stable_ids(
     sorting before existing rows used to renumber everything after it).
 
     The id map is dimension-sized; the join broadcasts under AQE when
-    small and degrades to a key shuffle when not — no collect."""
+    small and degrades to a key shuffle when not.  The max id is a
+    one-row aggregate broadcast into the same plan — no collect, so no
+    job of its own."""
     if old_ids is None:
         return surrogate_ids(df, keys, id_col)
     old = old_ids.select(*keys, id_col)
-    max_id = old.agg(F.max(id_col).alias("m")).first()["m"] or 0
+    max_id = F.broadcast(
+        old.agg(F.coalesce(F.max(id_col), F.lit(0)).cast("bigint").alias("_sid_max"))
+    )
     joined = df.join(old, keys, "left")
     # BIGINT on both branches (an old int-typed map widens on read):
     # int ids wrap past 2^31-1 at the billion-row scale documented here
     kept = joined.filter(F.col(id_col).isNotNull()).withColumn(
         id_col, F.col(id_col).cast("bigint")
     )
-    fresh = surrogate_ids(
-        joined.filter(F.col(id_col).isNull()).drop(id_col), keys, id_col
-    ).withColumn(id_col, (F.col(id_col) + F.lit(max_id)).cast("bigint"))
+    fresh = (
+        surrogate_ids(joined.filter(F.col(id_col).isNull()).drop(id_col), keys, id_col)
+        .crossJoin(max_id)
+        .withColumn(id_col, (F.col(id_col) + F.col("_sid_max")).cast("bigint"))
+        .drop("_sid_max")
+    )
     return kept.unionByName(fresh)
 
 

@@ -466,7 +466,7 @@ def q_src_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_fixtures()
     # members_json_df: JVM file scan of the staged page, NOT the
-    # driver-side createDataFrame route (members_df) — row-equality of
+    # driver-side local-relation route (members_df) — row-equality of
     # the two paths is pinned in tests/test_sources.py
     out = members.transform_members(
         members.members_json_df(spark, os.path.join(FIXTURE_DIR, "members.json")),
@@ -859,8 +859,9 @@ def ensure_etl_fixtures() -> str:
 def _etl_warehouse_path(kind: str, fixture_dir: str) -> str:
     """Where a built ETL fixture warehouse is cached: keyed on the staged
     inputs AND an md5 of the code that builds it (the loaders, the upsert
-    table, the source parsers and this module), so a warehouse written by
-    older code is never served as this code's output."""
+    table, the source parsers with the schemas and local-frame helper they
+    use, and this module), so a warehouse written by older code is never
+    served as this code's output."""
     import glob
     import hashlib
 
@@ -870,6 +871,7 @@ def _etl_warehouse_path(kind: str, fixture_dir: str) -> str:
     builders = [
         os.path.join(pkg, "etl.py"),
         os.path.join(pkg, "operators", "upsert.py"),
+        os.path.join(pkg, "schemas.py"),
         *sorted(glob.glob(os.path.join(pkg, "sources", "*.py"))),
         os.path.abspath(__file__),
     ]

@@ -10,6 +10,9 @@ oracle comparison is hash-exact (SURVEY §7 hard-part 5).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -206,3 +209,29 @@ MEMBER = StructType(
         StructField("terms", StructType([StructField("item", ArrayType(MEMBER_TERM))])),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation`` (``LocalTableScan``): the
+    rows reach the JVM as one Arrow table.  ``createDataFrame`` of a
+    Python list plans ``Scan ExistingRDD`` instead, and every job over
+    that scan starts Python workers only to deserialize the rows
+    (seconds of executor time for a few hundred member records).
+
+    ``rows`` are tuples in ``schema``'s column order, nested structs as
+    tuples too; ``schema`` is a StructType or a DDL string.  Gives the
+    schema and rows of ``spark.createDataFrame(rows, schema)``
+    (tests/test_sources.py)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table)

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
+from politician_etl_project_spark.schemas import local_frame
+
 SUBCOMMITTEE = StructType(
     [StructField("name", StringType()), StructField("thomas_id", StringType())]
 )
@@ -48,7 +50,8 @@ MEMBERSHIP = StructType(
 
 def committees_df(spark: SparkSession, docs: Iterable[dict[str, Any]]) -> DataFrame:
     """Driver-parsed YAML dicts → typed DataFrame (S8: driver fetch +
-    createDataFrame; the flatten runs distributed)."""
+    an Arrow ``LocalRelation``, :func:`~politician_etl_project_spark.
+    schemas.local_frame`; the flatten runs distributed)."""
     rows = [
         (
             d.get("name"),
@@ -61,7 +64,7 @@ def committees_df(spark: SparkSession, docs: Iterable[dict[str, Any]]) -> DataFr
         )
         for d in docs
     ]
-    return spark.createDataFrame(rows, COMMITTEE_RAW)
+    return local_frame(spark, rows, COMMITTEE_RAW)
 
 
 def flatten_committees(raw: DataFrame) -> DataFrame:
@@ -105,7 +108,7 @@ def memberships_df(spark: SparkSession, doc: dict[str, Any]) -> DataFrame:
             rows.append(
                 (cid, m.get("name"), m.get("bioguide"), m.get("rank"), m.get("title"), m.get("party"))
             )
-    return spark.createDataFrame(rows, MEMBERSHIP)
+    return local_frame(spark, rows, MEMBERSHIP)
 
 
 def committee_hierarchy(committees: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from politician_etl_project_spark.functions.scalar import parse_last_first
-from politician_etl_project_spark.schemas import MEMBER
+from politician_etl_project_spark.schemas import MEMBER, local_frame
 
 # 50 states + DC + territories, as the reference hardcodes
 # (ingest_politicians.py:31-51).
@@ -38,14 +38,15 @@ STATE_ABBR = {
 
 
 def members_df(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """API page records (driver-fetched, S5) → typed DataFrame.  At real
-    scale the id-partitioned fetch would run via mapInPandas over an id
-    DataFrame (SURVEY S5 note)."""
+    """API page records (driver-fetched, S5) → typed DataFrame, a
+    ``LocalRelation`` built through Arrow (:func:`~politician_etl_project_spark.
+    schemas.local_frame`).  At real scale the id-partitioned fetch would
+    run via mapInPandas over an id DataFrame (SURVEY S5 note)."""
     def _year(t: dict, year_key: str, date_key: str):
         # terms carry either integer years (startYear/endYear) or ISO
         # date strings (start/end); the schema is IntegerType, so the
         # date form MUST be parsed to its year — passing the raw string
-        # through crashes createDataFrame on the first such record
+        # through fails the Arrow conversion on the first such record
         y = t.get(year_key)
         if y is None:
             y = t.get(date_key)
@@ -68,18 +69,18 @@ def members_df(spark: SparkSession, records: list[dict]) -> DataFrame:
         )
         for r in records
     ]
-    return spark.createDataFrame(rows, MEMBER)
+    return local_frame(spark, rows, MEMBER)
 
 
 def members_json_df(spark: SparkSession, path: str) -> DataFrame:
     """Engine-native twin of :func:`members_df`: a fetched member page
     saved as JSON is SCANNED by the JVM JSON reader instead of being
-    flattened driver-side and shipped through ``createDataFrame`` — the
-    Python-RDD route launches a Python worker per partition just to
-    deserialize a handful of rows (measured seconds per action at 32
-    default slices), while a schema'd file scan is a plain JVM job.  At
-    scale the staged pages are many files and this is the only layout
-    that parallelizes.
+    flattened driver-side.  Both routes are cheap for one page —
+    ``members_df`` ships its rows as one Arrow ``LocalRelation``, which
+    starts no Python worker — but only this one never holds the records
+    in the driver: at scale the staged pages are many files, and a
+    schema'd file scan splits them across tasks while a local relation
+    is bounded by driver memory.
 
     The per-term year coercion (integer startYear/endYear OR ISO
     start/end strings — the API emits both shapes) is the same rule as
@@ -111,9 +112,7 @@ def members_json_df(spark: SparkSession, path: str) -> DataFrame:
 
 
 def state_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(k, v) for k, v in STATE_ABBR.items()], "state_name string, state_abbr string"
-    )
+    return local_frame(spark, list(STATE_ABBR.items()), "state_name string, state_abbr string")
 
 
 def transform_members(members: DataFrame, states: DataFrame) -> DataFrame:

@@ -30,6 +30,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# a throwaway checkpoint holds offset/commit logs and state-store
+# snapshots: MBs per stateful stream, so a tmpfs with less room than this
+# is treated as full
+TMPFS_FLOOR_BYTES = 256 << 20
+
+
 def ephemeral_ckpt_base() -> str | None:
     """Base directory for THROWAWAY stream checkpoints (r12, guide §6):
     a checkpoint that is deleted when the run ends buys nothing from
@@ -39,13 +45,18 @@ def ephemeral_ckpt_base() -> str | None:
     /tmp to tmpfs.  Durable checkpoints (caller-passed paths) are
     untouched.  Override with $SPARK_GRAFT_EPHEMERAL_CKPT_DIR (point it
     at reliable storage to make even throwaway runs resumable); returns
-    None (tempfile's default) when no tmpfs is available."""
+    None (tempfile's default) when no tmpfs is available, or when
+    ``/dev/shm`` has less than ``TMPFS_FLOOR_BYTES`` free — a full tmpfs
+    would fail the stream's first checkpoint write, while disk only
+    costs the fsyncs."""
     import os
 
     base = os.environ.get("SPARK_GRAFT_EPHEMERAL_CKPT_DIR")
     if base:
         return base
-    return "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    if os.access("/dev/shm", os.W_OK) and shutil.disk_usage("/dev/shm").free >= TMPFS_FLOOR_BYTES:
+        return "/dev/shm"
+    return None
 
 
 def _ephemeral_ckpt(prefix: str = "ckpt-") -> str:

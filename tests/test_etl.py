@@ -6,7 +6,9 @@ update semantics."""
 from __future__ import annotations
 
 import json
+import os
 import textwrap
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -299,23 +301,85 @@ def test_surrogate_ids_stable_under_early_sorting_key(spark, staging, wh):
 
 def test_swap_write_crash_recovery(spark, tmp_path):
     """_swap_write: a crash after the live dir is renamed aside must be
-    recoverable — the next ParquetUpsertTable sees the old contents."""
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
+    recoverable — the next ParquetUpsertTable sees the old contents,
+    read under the old schema file (the schema publishes with its data,
+    so a recovered table never pairs one version's files with another's
+    schema)."""
+    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE, ParquetUpsertTable
 
     path = str(tmp_path / "tbl")
     tbl = ParquetUpsertTable(spark, path, ["k"])
     tbl.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
     # simulate dying between "rename live aside" and "publish staging"
-    import os
-
     os.replace(path, path + ".old")
     assert not os.path.isdir(path)
     tbl2 = ParquetUpsertTable(spark, path, ["k"])  # recovery runs in __init__
     assert tbl2.exists()
+    assert os.path.isfile(os.path.join(path, SCHEMA_FILE))
+    assert tbl2.published_schema().simpleString() == "struct<k:int,v:string>"
     assert [tuple(r) for r in tbl2.read().collect()] == [(1, "a")]
-    # a crash AFTER publish leaves main + .old: recovery keeps main, drops .old
-    tbl2.overwrite(spark.createDataFrame([(2, "b")], "k int, v string"))
+    # a crash AFTER publish leaves main + .old: recovery keeps main (a
+    # new shape, so a schema file left from the old version would show),
+    # drops .old
+    tbl2.overwrite(spark.createDataFrame([(2, 3, "b")], "k int, w bigint, v string"))
     os.makedirs(path + ".old", exist_ok=True)
     tbl3 = ParquetUpsertTable(spark, path, ["k"])
     assert not os.path.isdir(path + ".old")
-    assert [tuple(r) for r in tbl3.read().collect()] == [(2, "b")]
+    assert tbl3.published_schema().simpleString() == "struct<k:int,w:bigint,v:string>"
+    assert [tuple(r) for r in tbl3.read().collect()] == [(2, 3, "b")]
+
+
+def _jobs_started(spark, action) -> int:
+    """Spark jobs ``action()`` starts, counted in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warehouse_reads_pin_published_schema(spark, staging, tmp_path):
+    """Every table ``run_all`` writes publishes its schema file, and
+    ``Warehouse.read`` pins it: the same schema a footer-inferring read
+    reports, at zero jobs (an inferring read starts one)."""
+    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE
+
+    wh = _run(spark, staging, tmp_path / "wh")
+    for name in wh.KEYS:
+        path = wh[name].path
+        assert os.path.isfile(os.path.join(path, SCHEMA_FILE)), name
+        assert _jobs_started(spark, lambda: wh.read(name).schema) == 0, name
+        assert wh.read(name).schema == spark.read.parquet(path).schema, name
+    # the probe itself sees the job an inferring read starts
+    assert _jobs_started(spark, lambda: spark.read.parquet(wh["bills"].path)) == 1
+
+
+def _logged_counts(wh) -> dict[str, int]:
+    """Each table's latest row-count entry in update_log (link-pass
+    entries log linked rows, not the table size)."""
+    log = wh.read("update_log").filter(F.col("notes").isNull())
+    return {
+        r.table_name: r.n
+        for r in log.groupBy("table_name")
+        .agg(F.max_by("records_updated", "last_update").alias("n"))
+        .collect()
+    }
+
+
+def test_update_log_counts_are_table_rows(spark, staging, tmp_path):
+    """The count the rewrite observes is the table's row count: after the
+    first load and after an incremental batch (a new member beside the
+    replayed bills, votes and donations), each table's latest
+    update_log entry equals a count of the published table."""
+    wh = _run(spark, staging, tmp_path / "wh")
+    logged = _logged_counts(wh)
+    assert set(logged) == set(wh.KEYS) - {"update_log"}
+    assert logged == {n: wh.read(n).count() for n in logged}
+    new_member = dict(MEMBERS[1], bioguideId="A000001", name="Aardvark, Alice")
+    _run(spark, staging, wh.root, members=MEMBERS + [new_member])
+    logged = _logged_counts(wh)
+    assert logged == {n: wh.read(n).count() for n in logged}
+    assert logged["politicians"] == 3

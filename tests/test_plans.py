@@ -582,3 +582,42 @@ def test_etl_lifecycle_queries_read_stored_warehouse(spark, specs):
         assert "Scan csv" not in plan and "Scan text" not in plan, (
             f"{name} re-runs ingest at read time"
         )
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_side_rows_plan_local_scans(spark, tmp_path, monkeypatch):
+    """Driver-side rows reach the plan as a LocalTableScan, never as a
+    Scan ExistingRDD whose every job starts Python workers to
+    deserialize them: the member transform, and the store slices an
+    ingest into an empty DedupIngestTable joins against."""
+    from politician_etl_project_spark.operators.ingest import DedupIngestTable
+    from politician_etl_project_spark.sources import members
+
+    from tests.test_sources import MEMBER_RECORDS
+
+    pols = members.transform_members(
+        members.members_df(spark, MEMBER_RECORDS), members.state_lookup(spark)
+    )
+    plan = _executed_plan(pols)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    slices = []
+    pruned = DedupIngestTable._pruned
+
+    def spy(self, table, part_col, prefixes):
+        df = pruned(self, table, part_col, prefixes)
+        slices.append(_executed_plan(df))
+        return df
+
+    monkeypatch.setattr(DedupIngestTable, "_pruned", spy)
+    batch_path = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [(1, "one fresh incoming document"), (2, "another fresh incoming text")],
+        "doc_id bigint, text string",
+    ).write.parquet(batch_path)
+    report = DedupIngestTable(spark, str(tmp_path / "idx")).ingest(spark.read.parquet(batch_path))
+    assert report.n_ingested == 2
+    assert slices and all("LocalTableScan" in p and "ExistingRDD" not in p for p in slices), slices

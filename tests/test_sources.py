@@ -715,3 +715,57 @@ def test_paginate_partitioned_missing_items_key_fails_loudly(spark):
         spark, empty_page_fetch, "bills", total_items=9, page_size=3, n_partitions=2
     )
     assert sorted(json.loads(r["item_json"])["n"] for r in ok.collect()) == [0, 6]
+
+
+# ---------------------------------------------------------------------------
+# Driver-side rows as local relations (schemas.local_frame)
+# ---------------------------------------------------------------------------
+
+
+def _local_frame_cases():
+    from politician_etl_project_spark.operators.ingest import DedupIngestTable
+    from politician_etl_project_spark.schemas import MEMBER
+
+    fps, bands = (DedupIngestTable._SCHEMAS[t].format(id="doc_id") for t in ("fps", "bands"))
+    return {
+        "member": (
+            MEMBER,
+            [
+                ("K000383", "King, Angus", "Independent", "Maine", ([("Senate", 2013, None)],)),
+                ("P000197", None, None, "California", ([("House", 1987, 2023), (None, None, 2025)],)),
+                ("X000001", "Mononym", "Republican", None, ([],)),
+                ("Y000002", "Nobody", None, None, (None,)),
+                (None, None, None, None, None),
+            ],
+        ),
+        "committee_raw": (
+            committees_yaml.COMMITTEE_RAW,
+            [
+                ("Agriculture", "house", "HSAG", "HSAG", None, "http://ag", [("Forestry", "15"), (None, "22")]),
+                ("Finance", "senate", "SSFI", None, "SSFI", None, []),
+                (None, None, None, None, None, None, None),
+            ],
+        ),
+        "membership": (
+            committees_yaml.MEMBERSHIP,
+            [("HSAG", "John Smith", "A000001", 1, "Chair", "majority"), ("HSAG", None, "B000002", None, None, None)],
+        ),
+        "fps": (fps, [(1, "ab12", "xab"), (2, None, None)]),
+        "bands": (bands, [(0, "k0", 1, ["a", "b"], "xk0"), (1, None, 2, [], None), (2, "k2", None, None, "xk2")]),
+    }
+
+
+@pytest.mark.parametrize("case", ["member", "committee_raw", "membership", "fps", "bands"])
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "zero_rows"])
+def test_local_frame_equals_create_dataframe(spark, case, empty):
+    """The Arrow local relation is the createDataFrame frame: same
+    schema (nullability included) and same rows, NULLs and nested
+    arrays of structs included, and zero rows."""
+    from politician_etl_project_spark.schemas import local_frame
+
+    schema, rows = _local_frame_cases()[case]
+    rows = [] if empty else rows
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()

@@ -939,3 +939,48 @@ def test_compaction_maintenance_store_physics(spark):
         f for f in os.listdir(os.path.join(path, "data")) if f.endswith(".parquet")
     )
     assert on_disk == sorted(man["files"])
+
+
+def test_upsert_table_without_schema_file_still_reads(spark, tmp_path):
+    """A table written before schema files existed reads by inference,
+    and its next rewrite publishes one."""
+    import os
+
+    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE, ParquetUpsertTable
+
+    path = str(tmp_path / "legacy")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
+    tbl = ParquetUpsertTable(spark, path, ["k"])
+    assert tbl.published_schema() is None
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]
+    assert tbl.upsert(spark.createDataFrame([(2, "c")], "k int, v string")) == 2
+    assert os.path.isfile(os.path.join(path, SCHEMA_FILE))
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "c")]
+
+
+def test_upsert_table_refuses_rows_of_another_shape(spark, tmp_path):
+    """Rows added beside the published files must fit the schema file —
+    a read pinned to a stale schema would silently null the divergent
+    columns (the SnapshotTable.append contract).  A different column
+    order fits (parquet resolves columns by name); an extra column, a
+    changed type or a MERGE whose merged rows change a type are refused
+    before any file is written, and ``overwrite`` changes the shape."""
+    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
+
+    tbl = ParquetUpsertTable(spark, str(tmp_path / "t"), ["k"])
+    tbl.append(spark.createDataFrame([(1, "a")], "k int, v string"))  # first append publishes
+    assert tbl.published_schema().simpleString() == "struct<k:int,v:string>"
+    tbl.append(spark.createDataFrame([("b", 2)], "v string, k int"))
+    for row, bad in (((3, "c", 1.5), "k int, v string, x double"), ((3, 4), "k int, v bigint"), ((3,), "k int")):
+        with pytest.raises(ValueError, match="do not match the schema"):
+            tbl.append(spark.createDataFrame([row], bad))
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]
+
+    part = ParquetUpsertTable(spark, str(tmp_path / "p"), ["k", "c"], partition_cols=["c"])
+    part.upsert(spark.createDataFrame([(1, "a", 5)], "k int, v string, c int"))
+    with pytest.raises(ValueError, match="do not match the schema"):
+        part.upsert(spark.createDataFrame([(2, 7, 5)], "k int, v bigint, c int"))
+    assert [tuple(r) for r in part.read().collect()] == [(1, "a", 5)]
+
+    tbl.overwrite(spark.createDataFrame([(9, 1.5)], "k int, x double"))
+    assert [tuple(r) for r in tbl.read().collect()] == [(9, 1.5)]

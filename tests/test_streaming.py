@@ -915,3 +915,32 @@ def test_transform_with_state_matches_apply_in_pandas(spark, staged_events):
         )
     )
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, expected.collect()))
+
+
+def test_ephemeral_checkpoints_leave_a_full_tmpfs(monkeypatch):
+    """Throwaway checkpoints go to /dev/shm only while it has room: a
+    nearly full tmpfs would fail the first checkpoint write, so the base
+    falls back to tempfile's default directory (None)."""
+    import collections
+    import os
+
+    from politician_etl_project_spark.streaming import sources
+
+    monkeypatch.delenv("SPARK_GRAFT_EPHEMERAL_CKPT_DIR", raising=False)
+    monkeypatch.setattr(os, "access", lambda path, mode: path == "/dev/shm")
+    usage = collections.namedtuple("usage", "total used free")
+    gib = 1 << 30
+
+    def disk_usage(free):
+        def fake(path):
+            assert path == "/dev/shm"
+            return usage(16 * gib, 16 * gib - free, free)
+
+        return fake
+
+    monkeypatch.setattr(sources.shutil, "disk_usage", disk_usage(4096))
+    assert sources.ephemeral_ckpt_base() is None
+    monkeypatch.setattr(sources.shutil, "disk_usage", disk_usage(8 * gib))
+    assert sources.ephemeral_ckpt_base() == "/dev/shm"
+    monkeypatch.setenv("SPARK_GRAFT_EPHEMERAL_CKPT_DIR", "/elsewhere")
+    assert sources.ephemeral_ckpt_base() == "/elsewhere"

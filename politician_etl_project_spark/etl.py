@@ -84,30 +84,6 @@ class Warehouse:
     def read(self, name: str) -> DataFrame:
         return self.tables[name].read()
 
-    # hot key per fact table: the column every serving-layer bundle
-    # filters/groups/joins on (metrics.py); bucketing on it makes those
-    # plans Exchange-free — the scale analog of the reference's
-    # politician_id/bill_id indexes (sql/creations.sql:174-176)
-    BUCKET_KEYS = {
-        "donations": ["politician_id"],
-        "votes": ["politician_id"],
-        "bill_cosponsors": ["politician_id"],
-    }
-
-    def bucketize(self, name: str, n_buckets: int = 8) -> str:
-        """Materialize a warehouse table as a bucketed managed table
-        (``wh_<name>``) clustered on its hot key.  Serving queries that
-        group by or join on that key then plan with zero Exchange on the
-        fact side (assert-tested in tests/test_storage.py); at 100 TB
-        this is the difference between re-shuffling 4.6M donations per
-        dashboard refresh and reading co-located buckets."""
-        from politician_etl_project_spark.storage import write_bucketed
-
-        keys = self.BUCKET_KEYS[name]
-        table = f"wh_{name}"
-        write_bucketed(self.read(name), table, keys, n_buckets=n_buckets, sort_cols=keys)
-        return table
-
     def log(self, table_name: str, n: int, notes: str | None = None) -> None:
         log_update(self.spark, self.tables["update_log"], table_name, n, notes=notes)
 

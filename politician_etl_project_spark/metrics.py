@@ -8,140 +8,29 @@ GET /politicians/{id} (``politician_report_sql``) and the chamber / party
 statement each, returning a long-format ``(section, metric, label,
 value)`` frame, checked against the independent DuckDB oracles in
 queries/serving.py.  Where the reference issues ~8 sequential ORM queries
-per endpoint, each hitting Postgres, the per-endpoint bundles here
-collapse into a handful of multi-aggregate DataFrame jobs:
+per endpoint, each hitting Postgres, each report here is one plan:
 
-- split counts are one pass with ``sum(when(...))`` (A6) instead of two
+- split counts are one pass with conditional sums (A6) instead of two
   filtered ``COUNT(*)`` round-trips (``app/metrics.py:77-78``);
 - percent-of-total is a window over the grouped frame (A10) instead of a
   Python post-pass (``app/metrics.py:58-60``);
-- the dynamic filter dict becomes composed ``Column`` predicates (P3) —
-  no f-string SQL splicing (the injection bug class of
-  ``app/app.py:99-108`` is designed out).
+- list endpoints compose their filter dicts into ``Column`` predicates
+  (P3), and the reports inline only validated ints and a fixed
+  vocabulary — no caller string is spliced into SQL (the injection bug
+  class of ``app/app.py:99-108`` is designed out).
 
-Scale: every bundle filters the fact by politician FIRST (pushdown to the
-scan), joins broadcast dims, and aggregates into tiny frames — the same
-access pattern the reference hand-tunes with indexes
-(``sql/creations.sql:174-176``); here partition/bucket layout on
-``politician_id`` plays that role.
+Scale: the detail report is grouped by politician, so a store can hold
+it precomputed per politician and serve a request as a pruned read of
+one ``politician_id`` partition (queries/serving.py); without a store
+the same SQL runs over a one-id spine, and every fact scan filters by
+politician first — the access pattern the reference hand-tunes with
+indexes (``sql/creations.sql:174-176``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _filtered_donations(donations: DataFrame, filters: dict | None) -> DataFrame:
-    """P3: dynamic predicate builder over the donations fact
-    (app/app.py:94-117) — composed Columns, default everything."""
-    pred = F.lit(True)
-    f = filters or {}
-    # .get(...) is not None, NOT key membership: an API layer forwarding
-    # optional params as explicit Nones would otherwise build
-    # `col >= NULL` and silently return empty metrics (same guard
-    # paginate_donations uses)
-    if f.get("politician_id") is not None:
-        pred = pred & (F.col("politician_id") == f["politician_id"])
-    if f.get("min_amount") is not None:
-        pred = pred & (F.col("amount") >= f["min_amount"])
-    if f.get("max_amount") is not None:
-        pred = pred & (F.col("amount") <= f["max_amount"])
-    if f.get("since") is not None:
-        pred = pred & (F.col("date") >= f["since"])
-    return donations.filter(pred)
-
-
-def financial_metrics(
-    donations: DataFrame, donors: DataFrame, filters: dict | None = None
-) -> dict[str, DataFrame]:
-    """The reference's most-traveled path (app/metrics.py:49-67,
-    app/app.py:120-195): scalar total, by-type breakdown with pct-of-total,
-    top-10 donors, monthly timeline — 4 small frames over one filtered
-    fact."""
-    base = _filtered_donations(donations, filters).join(
-        F.broadcast(donors.select("donor_id", "name", "donor_type")), "donor_id"
-    )
-    total = base.agg(
-        F.coalesce(F.sum("amount"), F.lit(0).cast("decimal(12,2)")).alias("total_donations"),
-        F.count("*").alias("n_donations"),
-        F.countDistinct("donor_id").alias("n_donors"),
-    )
-    by_type = base.groupBy(
-        F.coalesce("donor_type", F.lit("Unknown")).alias("donor_type")
-    ).agg(F.sum("amount").alias("total"), F.count("*").alias("n"))
-    by_type = by_type.withColumn(
-        "pct",
-        (F.col("total") * 100 / F.sum("total").over(Window.partitionBy())).cast("decimal(5,2)"),
-    ).orderBy(F.desc("total"))
-    # group by donor_id and KEEP it: donor identity is
-    # NAME|ZIP|EMPLOYER, so two distinct "JOHN SMITH"s must not merge
-    # into one inflated top-donor row (same discipline as scope_report_sql),
-    # and downstream rankers need donor_id as the final tiebreak so two
-    # same-name same-total donors get deterministic ranks
-    top_donors = base.groupBy("donor_id", "name", "donor_type").agg(
-        F.sum("amount").alias("total_donated")
-    ).orderBy(F.desc("total_donated"), F.asc("name"), F.asc("donor_id")).limit(10)
-    timeline = (
-        base.groupBy(
-            F.date_format(F.date_trunc("month", "date"), "yyyy-MM").alias("month"), "donor_type"
-        )
-        .agg(F.sum("amount").alias("total"))
-        .orderBy("month", "donor_type")
-    )
-    return {"total": total, "by_type": by_type, "top_donors": top_donors, "timeline": timeline}
-
-
-def legislative_metrics(
-    bills: DataFrame, cosponsors: DataFrame, politician_id: int
-) -> dict[str, DataFrame]:
-    """app/metrics.py:70-78: sponsored count, cosponsored split
-    original/later (ONE pass via conditional agg), recent sponsored
-    bills."""
-    sponsored = bills.filter(F.col("sponsor_id") == politician_id)
-    n_sponsored = sponsored.agg(F.count("*").alias("n_sponsored"))
-    # coalesce to 0: SUM over an empty group is NULL, but a politician
-    # with zero cosponsorships has 0 originals, not unknown (round-8:
-    # caught by the SQL-variant equivalence sweep at politician 149,
-    # whose cosponsor slice is empty at sf0.001 — the oracle always
-    # said 0)
-    cos = cosponsors.filter(F.col("politician_id") == politician_id).agg(
-        F.count("*").alias("n_cosponsored"),
-        F.coalesce(
-            F.sum(F.when(F.col("is_original_cosponsor"), 1).otherwise(0)), F.lit(0)
-        ).alias("n_original"),
-        F.coalesce(
-            F.sum(F.when(~F.col("is_original_cosponsor"), 1).otherwise(0)), F.lit(0)
-        ).alias("n_joined_later"),
-    )
-    recent = (
-        sponsored.select("official_bill_number", "congress", "title", "date_introduced")
-        .orderBy(F.desc("date_introduced"), "official_bill_number")
-        .limit(10)
-    )
-    return {"sponsored": n_sponsored, "cosponsored": cos, "recent_bills": recent}
-
-
-def voting_metrics(
-    votes: DataFrame, bills: DataFrame, politician_id: int
-) -> dict[str, DataFrame]:
-    """app/metrics.py:81-93: position breakdown + recent votes enriched
-    with bill info (J2 broadcast)."""
-    mine = votes.filter(F.col("politician_id") == politician_id)
-    breakdown = (
-        mine.groupBy(F.coalesce("vote_position", F.lit("Unknown")).alias("vote_position"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("vote_position")
-    )
-    recent = (
-        mine.join(
-            F.broadcast(bills.select("bill_id", "official_bill_number", "title")), "bill_id"
-        )
-        .select("date", "vote_position", "official_bill_number", "title")
-        .orderBy(F.desc("date"), "official_bill_number")
-        .limit(20)
-    )
-    return {"breakdown": breakdown, "recent_votes": recent}
 
 
 def committee_metrics(
@@ -257,8 +146,7 @@ def paginate_donations(
     donations: DataFrame, filters: dict | None = None, skip: int = 0, limit: int = 100
 ) -> tuple[DataFrame, int]:
     """app/main.py:210-254 GET /donations: politician/donor/amount-range
-    filters.  Equality predicates push to the scan; at scale the
-    politician_id filter rides the bucket layout (Warehouse.BUCKET_KEYS)."""
+    filters.  Equality predicates push to the scan."""
     f = filters or {}
     pred = _eq_filters(f, ("politician_id", "donor_id"))
     if f.get("min_amount") is not None:
@@ -361,106 +249,161 @@ def bill_cosponsors(
 
 
 _REPORT_SQL = """
-WITH base AS (
-  SELECT /*+ BROADCAST(n) */ d.donor_id, d.amount, d.date, n.name, n.donor_type
+WITH spine AS ({spine}),
+base AS (
+  SELECT /*+ BROADCAST(n) */ d.politician_id, d.donor_id, d.amount, d.date,
+         n.name, n.donor_type
   FROM {p}donations d JOIN {p}donors n USING (donor_id)
-  WHERE d.politician_id = {pid}
+  LEFT SEMI JOIN spine s ON d.politician_id = s.politician_id
+),
+fin AS (
+  SELECT politician_id, SUM(amount) AS total, COUNT(*) AS n,
+         COUNT(DISTINCT donor_id) AS n_donors
+  FROM base GROUP BY politician_id
 ),
 bt AS (
-  SELECT COALESCE(donor_type, 'Unknown') AS dt, SUM(amount) AS total, COUNT(*) AS n
-  FROM base GROUP BY COALESCE(donor_type, 'Unknown')
+  SELECT politician_id, COALESCE(donor_type, 'Unknown') AS dt,
+         SUM(amount) AS total, COUNT(*) AS n
+  FROM base GROUP BY politician_id, COALESCE(donor_type, 'Unknown')
 ),
 top AS (
-  SELECT name, donor_id, SUM(amount) AS td
-  FROM base GROUP BY donor_id, name, donor_type
-  ORDER BY td DESC, name, donor_id LIMIT 10
+  SELECT politician_id, name, td,
+         ROW_NUMBER() OVER (PARTITION BY politician_id
+                            ORDER BY td DESC, name, donor_id) AS rn
+  FROM (SELECT politician_id, donor_id, name, SUM(amount) AS td
+        FROM base GROUP BY politician_id, donor_id, name, donor_type)
 ),
 tl AS (
-  SELECT date_format(date, 'yyyy-MM') AS month, donor_type, SUM(amount) AS total
-  FROM base GROUP BY date_format(date, 'yyyy-MM'), donor_type
+  SELECT politician_id, date_format(date, 'yyyy-MM') AS month, donor_type,
+         SUM(amount) AS total
+  FROM base GROUP BY politician_id, date_format(date, 'yyyy-MM'), donor_type
 ),
-myb AS (SELECT * FROM {p}bills WHERE sponsor_id = {pid}),
-mycos AS (SELECT * FROM {p}cosponsors WHERE politician_id = {pid}),
-myv AS (SELECT * FROM {p}votes WHERE politician_id = {pid}),
+myb AS (
+  SELECT sponsor_id AS politician_id, official_bill_number, date_introduced,
+         ROW_NUMBER() OVER (PARTITION BY sponsor_id
+                            ORDER BY date_introduced DESC, official_bill_number) AS rn
+  FROM {p}bills b LEFT SEMI JOIN spine s ON b.sponsor_id = s.politician_id
+),
+cos AS (
+  SELECT politician_id, COUNT(*) AS n,
+         SUM(CASE WHEN is_original_cosponsor THEN 1 ELSE 0 END) AS n_original,
+         SUM(CASE WHEN is_original_cosponsor THEN 0 ELSE 1 END) AS n_later
+  FROM {p}cosponsors c LEFT SEMI JOIN spine s ON c.politician_id = s.politician_id
+  GROUP BY politician_id
+),
+myv AS (
+  SELECT v.politician_id, v.bill_id, v.date, v.vote_position
+  FROM {p}votes v LEFT SEMI JOIN spine s ON v.politician_id = s.politician_id
+),
 recent_votes AS (
-  SELECT /*+ BROADCAST(b) */ v.date, b.official_bill_number
-  FROM myv v JOIN {p}bills b USING (bill_id)
-  ORDER BY v.date DESC, b.official_bill_number LIMIT 20
+  SELECT politician_id, date, official_bill_number,
+         ROW_NUMBER() OVER (PARTITION BY politician_id
+                            ORDER BY date DESC, official_bill_number) AS rn
+  FROM (SELECT /*+ BROADCAST(b) */ v.politician_id, v.date, b.official_bill_number
+        FROM myv v JOIN {p}bills b USING (bill_id))
 )
-SELECT section, metric, label, value FROM (
-  SELECT 'financial' AS section, metric, '' AS label, value FROM (
-    SELECT stack(3,
-             'total_donations', CAST(COALESCE(SUM(amount), 0) AS DOUBLE),
-             'n_donations', CAST(COUNT(*) AS DOUBLE),
-             'n_donors', CAST(COUNT(DISTINCT donor_id) AS DOUBLE)
-           ) AS (metric, value)
-    FROM base)
-  UNION ALL
-  SELECT 'financial', metric, dt, value FROM (
-    SELECT dt, stack(3,
-             'by_type_total', total_d, 'by_type_n', n_d, 'by_type_pct', pct
-           ) AS (metric, value)
-    FROM (
-      SELECT dt, CAST(total AS DOUBLE) AS total_d, CAST(n AS DOUBLE) AS n_d,
-             floor(CAST(total AS DOUBLE) * 10000
-               / SUM(CAST(total AS DOUBLE)) OVER () + 0.5) / 100 AS pct
-      FROM bt))
-  UNION ALL
-  SELECT 'financial', format_string('top_donor_%02d',
-           ROW_NUMBER() OVER (ORDER BY td DESC, name, donor_id)),
-         name, CAST(td AS DOUBLE) FROM top
-  UNION ALL
-  SELECT 'financial', 'timeline', month || '|' || donor_type,
-         CAST(total AS DOUBLE) FROM tl
-  UNION ALL
-  SELECT 'legislative', 'n_sponsored', '', CAST(COUNT(*) AS DOUBLE) FROM myb
-  UNION ALL
-  SELECT 'legislative', metric, '' AS label, value FROM (
-    SELECT stack(3,
-             'n_cosponsored', CAST(COUNT(*) AS DOUBLE),
-             'n_original',
-             CAST(COALESCE(SUM(CASE WHEN is_original_cosponsor THEN 1 ELSE 0 END), 0) AS DOUBLE),
-             'n_joined_later',
-             CAST(COALESCE(SUM(CASE WHEN is_original_cosponsor THEN 0 ELSE 1 END), 0) AS DOUBLE)
-           ) AS (metric, value)
-    FROM mycos)
-  UNION ALL
-  SELECT 'legislative', format_string('recent_bill_%02d',
-           ROW_NUMBER() OVER (ORDER BY date_introduced DESC, official_bill_number)),
-         official_bill_number,
-         CAST(datediff(CAST(date_introduced AS DATE), DATE '1970-01-01') AS DOUBLE)
-  FROM (SELECT * FROM myb
-        ORDER BY date_introduced DESC, official_bill_number LIMIT 10)
-  UNION ALL
-  SELECT 'voting', 'position_n', COALESCE(vote_position, 'Unknown'),
-         CAST(COUNT(*) AS DOUBLE) FROM myv GROUP BY COALESCE(vote_position, 'Unknown')
-  UNION ALL
-  SELECT 'voting', format_string('recent_vote_%02d',
-           ROW_NUMBER() OVER (ORDER BY date DESC, official_bill_number)),
-         official_bill_number,
-         CAST(datediff(CAST(date AS DATE), DATE '1970-01-01') AS DOUBLE)
-  FROM recent_votes
-)
-ORDER BY section, metric, label
+SELECT s.politician_id, section, metric, '' AS label, value FROM (
+  SELECT s.politician_id, stack(7,
+           'financial', 'total_donations', CAST(COALESCE(f.total, 0) AS DOUBLE),
+           'financial', 'n_donations', CAST(COALESCE(f.n, 0) AS DOUBLE),
+           'financial', 'n_donors', CAST(COALESCE(f.n_donors, 0) AS DOUBLE),
+           'legislative', 'n_sponsored', CAST(COALESCE(b.n, 0) AS DOUBLE),
+           'legislative', 'n_cosponsored', CAST(COALESCE(c.n, 0) AS DOUBLE),
+           'legislative', 'n_original', CAST(COALESCE(c.n_original, 0) AS DOUBLE),
+           'legislative', 'n_joined_later', CAST(COALESCE(c.n_later, 0) AS DOUBLE)
+         ) AS (section, metric, value)
+  FROM spine s
+  LEFT JOIN fin f ON f.politician_id = s.politician_id
+  LEFT JOIN (SELECT politician_id, COUNT(*) AS n FROM myb GROUP BY politician_id) b
+    ON b.politician_id = s.politician_id
+  LEFT JOIN cos c ON c.politician_id = s.politician_id
+) s
+UNION ALL
+SELECT politician_id, 'financial', metric, dt, value FROM (
+  SELECT politician_id, dt, stack(3,
+           'by_type_total', total_d, 'by_type_n', n_d, 'by_type_pct', pct
+         ) AS (metric, value)
+  FROM (
+    SELECT politician_id, dt, CAST(total AS DOUBLE) AS total_d, CAST(n AS DOUBLE) AS n_d,
+           floor(CAST(total AS DOUBLE) * 10000
+             / SUM(CAST(total AS DOUBLE)) OVER (PARTITION BY politician_id) + 0.5) / 100
+             AS pct
+    FROM bt))
+UNION ALL
+SELECT politician_id, 'financial', format_string('top_donor_%02d', rn), name,
+       CAST(td AS DOUBLE)
+FROM top WHERE rn <= 10
+UNION ALL
+SELECT politician_id, 'financial', 'timeline', month || '|' || donor_type,
+       CAST(total AS DOUBLE)
+FROM tl
+UNION ALL
+SELECT politician_id, 'legislative', format_string('recent_bill_%02d', rn),
+       official_bill_number,
+       CAST(datediff(CAST(date_introduced AS DATE), DATE '1970-01-01') AS DOUBLE)
+FROM myb WHERE rn <= 10
+UNION ALL
+SELECT politician_id, 'voting', 'position_n', COALESCE(vote_position, 'Unknown'),
+       CAST(COUNT(*) AS DOUBLE)
+FROM myv GROUP BY politician_id, COALESCE(vote_position, 'Unknown')
+UNION ALL
+SELECT politician_id, 'voting', format_string('recent_vote_%02d', rn),
+       official_bill_number,
+       CAST(datediff(CAST(date AS DATE), DATE '1970-01-01') AS DOUBLE)
+FROM recent_votes WHERE rn <= 20
 """
+
+_REPORT_COLS = ("section", "metric", "label", "value")
+
+
+def _report_sql(tables: dict[str, DataFrame], spine: str, view_prefix: str) -> DataFrame:
+    """``_REPORT_SQL`` over ``tables`` registered as temp views
+    ``{prefix}donations`` etc. (registration is idempotent and ~free),
+    for the politician ids ``spine`` selects."""
+    for name in ("donations", "donors", "bills", "cosponsors", "votes", "politicians"):
+        if name in tables:
+            tables[name].createOrReplaceTempView(f"{view_prefix}{name}")
+    spark = tables["donations"].sparkSession
+    return spark.sql(_REPORT_SQL.format(p=view_prefix, spine=spine.format(p=view_prefix)))
+
+
+def all_politician_reports_sql(tables: dict[str, DataFrame], view_prefix: str = "dom_") -> DataFrame:
+    """Every politician's detail report at once: ``_REPORT_SQL`` over the
+    spine of ids in ``tables["politicians"]``, as ``(politician_id,
+    section, metric, label, value)``.  A politician with no facts gets
+    the seven zero scalar rows; facts of ids outside the dim are not
+    reported.  queries/serving.py materializes this frame into the domain
+    store, partitioned by ``politician_id``, and serves each request as a
+    pruned read of it (``politician_report_sql``)."""
+    return _report_sql(tables, "SELECT politician_id FROM {p}politicians", view_prefix)
 
 
 def politician_report_sql(
     tables: dict[str, DataFrame], politician_id: int, view_prefix: str = "dom_"
 ) -> DataFrame:
     """The FULL politician-detail request (GET /politicians/{id}) as ONE
-    SQL statement / ONE action.  The reference serves it with ~8
+    action, returning ``(section, metric, label, value)`` ordered by
+    ``(section, metric, label)``.  The reference serves it with ~8
     SEQUENTIAL ORM queries (app/metrics.py:49-93 via app/main.py), each
-    a Postgres round trip; here the financial, legislative and voting
-    sections land in one unioned long-format frame ``(section, metric,
-    label, value)``, so Spark schedules the branches' stages
-    concurrently inside a single collect (SURVEY §3.2).
+    a Postgres round trip.
 
-    SQL text rather than composed DataFrame calls: building the same
+    Served read: when ``tables`` holds ``politician_report`` (the
+    precomputed ``all_politician_reports_sql`` frame, partitioned by
+    ``politician_id`` — queries/serving.domain_frames opens it), the
+    request is a pruned read of that one politician's partition, sorted
+    within its single partition: one Spark job.  An id outside the
+    politicians dim has no partition, so the served read returns no rows
+    (the reference's 404).
+
+    Live path: without a stored report (``etl.Warehouse`` tables, test
+    fixtures) the same ``_REPORT_SQL`` text runs over a one-id spine, so
+    its semi joins put the ``politician_id`` / ``sponsor_id`` predicate
+    on every fact scan, and the request aggregates only that
+    politician's rows.  An id with no facts gets the seven zero scalar
+    rows.  SQL text rather than composed DataFrame calls: building the
     ~14-branch union through the DataFrame API cost ~0.55 s of py4j
     round trips per request at sf0.1, while one SQL string parses and
-    analyzes in one JVM call — the right shape for a serving path where
-    the query text is fixed and only parameters vary.
+    analyzes in one JVM call.
 
     Determinism contract (oracle-grade): every list-shaped part gets an
     explicit total order — top donors by (total desc, name, donor_id),
@@ -469,18 +412,20 @@ def politician_report_sql(
     pct-of-total uses the engine-portable half-up formula
     ``floor(x*10000/total + 0.5)/100`` instead of DECIMAL division,
     whose rounding mode differs across engines.  Values are DOUBLE;
-    dates surface as epoch days.  tests/test_metrics.py checks it
-    against the DuckDB oracle of q_metrics_bundle_e2e at several
-    politician ids.
-
-    ``tables`` are registered as temp views ``{prefix}donations`` etc.
-    (registration is idempotent and ~free); the caller passes the
-    MATERIALIZED domain frames so fact scans partition-prune on
-    politician_id."""
-    spark = tables["donations"].sparkSession
-    for name in ("donations", "donors", "bills", "cosponsors", "votes"):
-        tables[name].createOrReplaceTempView(f"{view_prefix}{name}")
-    return spark.sql(_REPORT_SQL.format(p=view_prefix, pid=int(politician_id)))
+    dates surface as epoch days.  tests/test_metrics.py checks the
+    served read against the DuckDB oracle of q_metrics_bundle_e2e, and
+    the stored report against the live path for every politician."""
+    pid = int(politician_id)
+    stored = tables.get("politician_report")
+    if stored is not None:
+        return (
+            stored.filter(F.col("politician_id") == pid)
+            .select(*_REPORT_COLS)
+            .coalesce(1)
+            .sortWithinPartitions("section", "metric", "label")
+        )
+    live = _report_sql(tables, f"SELECT {pid} AS politician_id", view_prefix)
+    return live.select(*_REPORT_COLS).orderBy("section", "metric", "label")
 
 
 _SCOPE_SQL = """

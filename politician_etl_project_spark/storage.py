@@ -1,23 +1,18 @@
-"""Physical-layout storage layer: partitioned and bucketed managed tables
-(SURVEY §4 "DB indexes → partitioning/bucketing instead"; §7 scale
-levers: "partition by date/congress, bucketing on join keys").
-
-Two layout tools Spark gives a 100 TB lake in place of secondary
-indexes:
+"""Physical-layout storage layer: partitioned parquet and versioned
+snapshot tables (SURVEY §4 "DB indexes → partitioning/bucketing
+instead"; §7 scale levers: "partition by date/congress").
 
 - **Partition pruning** (`write_partitioned`): directory-partitioned
   parquet; equality/range predicates on the partition column skip whole
   directories at planning time (shows as ``PartitionFilters`` in
   explain).  The reference's file layout by year
   (``data/2024/``, scripts/ingest_bulk_donations.py:18-21) and congress
-  filters are exactly this.
-- **Shuffle-free joins** (`write_bucketed`): ``bucketBy`` on the join
-  key writes co-clustered files; two tables bucketed the same way join
-  with ZERO Exchange on either side — the hand-tuned equivalent of the
-  reference pre-sorting both sides of its pandas merges.
-
-Both are assert-tested in tests/test_storage.py by inspecting the
-physical plan, not just the results.
+  filters are exactly this, and the served politician-detail report is
+  laid out the same way on ``politician_id`` (queries/serving.py).
+  Assert-tested in tests/test_storage.py by inspecting the physical
+  plan, not just the results.
+- **Snapshot versioning** (`SnapshotTable`): manifest-based versions
+  with time travel, per-file column stats and compaction.
 """
 
 from __future__ import annotations
@@ -85,41 +80,6 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> No
     """Directory-partitioned parquet; readers get partition pruning for
     free on `partition_cols` predicates."""
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed managed table (requires the session catalog — bucketing
-    metadata lives in the metastore, not plain parquet).  Sorting within
-    buckets additionally enables shuffle-AND-sort-free sort-merge
-    joins."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join_ready(spark: SparkSession, left: str, right: str) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planner elides
-    both Exchanges (verify via explain)."""
-    return spark.table(left).join(spark.table(right), _bucket_key(spark, left))
-
-
-def _bucket_key(spark: SparkSession, table: str) -> list[str]:
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    for row in desc:
-        if row.col_name == "Bucket Columns":
-            return [c.strip(" `") for c in row.data_type.strip("[]").split(",")]
-    raise ValueError(f"{table} is not bucketed")
 
 
 # ---------------------------------------------------------------------------

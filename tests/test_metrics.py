@@ -34,51 +34,47 @@ def _pid(wh, bioguide):
     )
 
 
+def _report(wh, pid) -> dict:
+    """``politician_report_sql`` over the warehouse tables (the live
+    path: no stored report) as ``{(section, metric, label): value}``."""
+    tables = {name: wh.read(name) for name in ("donations", "donors", "bills", "votes")}
+    tables["cosponsors"] = wh.read("bill_cosponsors")
+    rows = metrics.politician_report_sql(tables, pid).collect()
+    return {(r["section"], r["metric"], r["label"]): r["value"] for r in rows}
+
+
 def test_financial_bundle(wh):
-    king = _pid(wh, "K000383")
-    out = metrics.financial_metrics(
-        wh.read("donations"), wh.read("donors"), {"politician_id": king}
-    )
-    total = out["total"].collect()[0]
-    assert str(total.total_donations) == "375.50"
-    assert total.n_donations == 2 and total.n_donors == 2
-    by_type = {r.donor_type: r for r in out["by_type"].collect()}
-    assert set(by_type) == {"PAC", "Individual"}
-    assert str(by_type["PAC"].total) == "250.00"
-    assert float(by_type["PAC"].pct) == pytest.approx(66.58, abs=0.01)
-    top = out["top_donors"].collect()
-    assert top[0].name == "LOBSTER PAC"
-    months = {r.month for r in out["timeline"].collect()}
+    rep = _report(wh, _pid(wh, "K000383"))
+    assert rep[("financial", "total_donations", "")] == 375.50
+    assert rep[("financial", "n_donations", "")] == 2
+    assert rep[("financial", "n_donors", "")] == 2
+    by_type = {label for (s, m, label) in rep if m == "by_type_total"}
+    assert by_type == {"PAC", "Individual"}
+    assert rep[("financial", "by_type_total", "PAC")] == 250.00
+    assert rep[("financial", "by_type_pct", "PAC")] == pytest.approx(66.58, abs=0.01)
+    assert ("financial", "top_donor_01", "LOBSTER PAC") in rep
+    months = {label.split("|")[0] for (s, m, label) in rep if m == "timeline"}
     assert months == {"2024-01", "2024-02"}
 
 
 def test_financial_filters(wh):
-    out = metrics.financial_metrics(
-        wh.read("donations"), wh.read("donors"), {"min_amount": 200}
-    )
-    assert str(out["total"].collect()[0].total_donations) == "750.00"  # 500 + 250
+    page, total = metrics.paginate_donations(wh.read("donations"), {"min_amount": 200})
+    assert total == 2
+    assert sum(r.amount for r in page.collect()) == 750  # 500 + 250
 
 
 def test_legislative_bundle(wh):
-    pelosi = _pid(wh, "P000197")
-    king = _pid(wh, "K000383")
-    out = metrics.legislative_metrics(wh.read("bills"), wh.read("bill_cosponsors"), pelosi)
-    assert out["sponsored"].collect()[0].n_sponsored == 1
-    cos = metrics.legislative_metrics(wh.read("bills"), wh.read("bill_cosponsors"), king)[
-        "cosponsored"
-    ].collect()[0]
-    assert (cos.n_cosponsored, cos.n_original, cos.n_joined_later) == (1, 1, 0)
-    recent = out["recent_bills"].collect()
-    assert recent[0].official_bill_number == "HR123"
+    pelosi = _report(wh, _pid(wh, "P000197"))
+    assert pelosi[("legislative", "n_sponsored", "")] == 1
+    assert ("legislative", "recent_bill_01", "HR123") in pelosi
+    king = _report(wh, _pid(wh, "K000383"))
+    assert [king[("legislative", m, "")] for m in ("n_cosponsored", "n_original", "n_joined_later")] == [1, 1, 0]
 
 
 def test_voting_bundle(wh):
-    pelosi = _pid(wh, "P000197")
-    out = metrics.voting_metrics(wh.read("votes"), wh.read("bills"), pelosi)
-    breakdown = {r.vote_position: r.n for r in out["breakdown"].collect()}
-    assert breakdown == {"Yea": 1}
-    recent = out["recent_votes"].collect()
-    assert recent[0].official_bill_number == "HR123" and recent[0].title == "Clean Water Act"
+    rep = _report(wh, _pid(wh, "P000197"))
+    assert {label: v for (s, m, label), v in rep.items() if m == "position_n"} == {"Yea": 1}
+    assert ("voting", "recent_vote_01", "HR123") in rep
 
 
 def test_committee_bundle(wh):
@@ -123,37 +119,30 @@ def test_pagination_endpoint(wh):
 
 def test_politician_report_one_request_consolidation(wh):
     """politician_report_sql = the whole politician-detail endpoint in
-    one frame: every section present, scalar metrics agreeing with the
-    individual bundles it consolidates."""
+    one frame: every section present, scalar metrics agreeing with
+    direct aggregates over the warehouse tables."""
     pid = _pid(wh, "P000197")
-    tables = {name: wh.read(name) for name in ("donations", "donors", "bills", "votes")}
-    tables["cosponsors"] = wh.read("bill_cosponsors")
-    rep = metrics.politician_report_sql(tables, pid)
-    rows = {(r["section"], r["metric"], r["label"]): r["value"] for r in rep.collect()}
+    rows = _report(wh, pid)
     assert {s for s, _, _ in rows} == {"financial", "legislative", "voting"}
 
-    fin = metrics.financial_metrics(
-        wh.read("donations"), wh.read("donors"), {"politician_id": pid}
+    mine = wh.read("donations").filter(F.col("politician_id") == pid)
+    assert rows[("financial", "n_donations", "")] == mine.count()
+    total = mine.agg(F.coalesce(F.sum("amount"), F.lit(0))).first()[0]
+    assert rows[("financial", "total_donations", "")] == float(total)
+    assert rows[("legislative", "n_sponsored", "")] == (
+        wh.read("bills").filter(F.col("sponsor_id") == pid).count()
     )
-    tot = fin["total"].first()
-    assert rows[("financial", "n_donations", "")] == float(tot["n_donations"])
-    assert rows[("financial", "total_donations", "")] == float(tot["total_donations"])
-    leg = metrics.legislative_metrics(wh.read("bills"), wh.read("bill_cosponsors"), pid)
-    assert rows[("legislative", "n_sponsored", "")] == float(
-        leg["sponsored"].first()["n_sponsored"]
-    )
-    vot = metrics.voting_metrics(wh.read("votes"), wh.read("bills"), pid)
-    brk = {r["vote_position"]: r["n"] for r in vot["breakdown"].collect()}
-    for pos, n in brk.items():
-        assert rows[("voting", "position_n", pos)] == float(n)
+    votes = wh.read("votes").filter(F.col("politician_id") == pid)
+    for r in votes.groupBy("vote_position").count().collect():
+        assert rows[("voting", "position_n", r["vote_position"])] == float(r["count"])
 
 
 def test_top_donor_tiebreak_is_donor_id(spark):
     """Round-8 advice: two DISTINCT donors sharing a name (possible —
     identity is NAME|ZIP|EMPLOYER) and an equal total must get
     deterministic ranks: the documented contract is (total desc, name,
-    donor_id), so top_donors keeps donor_id and the report's rank
-    window uses it as the final tiebreak."""
+    donor_id), so the report's top-donor rank window uses donor_id as
+    the final tiebreak."""
     donations = spark.createDataFrame(
         [
             (1, 10, 100.0, "2024-01-05"),
@@ -172,11 +161,6 @@ def test_top_donor_tiebreak_is_donor_id(spark):
         ],
         "donor_id int, name string, donor_type string",
     )
-    fin = metrics.financial_metrics(donations, donors, {"politician_id": 1})
-    top = fin["top_donors"].collect()
-    assert "donor_id" in fin["top_donors"].columns, "donor_id must survive for rank tiebreak"
-    assert [(r.donor_id, r.name) for r in top[:2]] == [(10, "JOHN SMITH"), (20, "JOHN SMITH")]
-
     bills = spark.createDataFrame(
         [],
         "bill_id int, sponsor_id int, official_bill_number string, "
@@ -203,7 +187,9 @@ def test_report_sql_matches_duckdb_oracles(spark, sf_dir):
     """The SQL serving reports against the independent DuckDB oracles of
     q_metrics_bundle_e2e / q_scope_metrics_e2e, filled in for other
     politicians and scopes than the registry's — including the empty
-    scope, whose votes TOTAL must still read 0."""
+    scope, whose votes TOTAL must still read 0.  The detail requests go
+    through domain_frames, so they check the served read of the stored
+    report."""
     from politician_etl_project_spark.queries.serving import (
         _ORACLE,
         _SCOPE_ORACLE,
@@ -212,6 +198,7 @@ def test_report_sql_matches_duckdb_oracles(spark, sf_dir):
     from tests.oracle_utils import compare_df
 
     frames = domain_frames(spark, sf_dir)
+    assert "politician_report" in frames  # so the detail requests are served reads
     for pid in (7, 3, 149):  # the registry's, another, the range edge
         compare_df(
             metrics.politician_report_sql(frames, pid),
@@ -235,6 +222,128 @@ def test_report_sql_matches_duckdb_oracles(spark, sf_dir):
         )
 
 
+def test_detail_request_is_one_job(spark, sf_dir):
+    """A detail request over the domain store is a pruned read of the
+    stored report: one Spark job (the live SQL ran 17 at sf0.1), its
+    rows in (section, metric, label) order."""
+    from politician_etl_project_spark.queries.serving import domain_frames
+
+    frames = domain_frames(spark, sf_dir)
+    rows = []
+    assert test_etl._jobs_started(spark, lambda: rows.extend(metrics.politician_report_sql(frames, 7).collect())) == 1
+    keys = [(r.section, r.metric, r.label) for r in rows]
+    assert keys and keys == sorted(keys)
+
+
+def test_stored_report_equals_live_sql(spark, sf_dir):
+    """The report the store build precomputes equals the live
+    per-request SQL for every politician in the dim, as one multiset of
+    (politician_id, section, metric, label, value) rows.  The requests
+    run four at a time: each is ~20 tiny jobs, so the job floor, not the
+    data, sets this test's time."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from politician_etl_project_spark.queries.serving import domain_frames
+
+    frames = domain_frames(spark, sf_dir)
+    live = {k: v for k, v in frames.items() if k != "politician_report"}
+    ids = [r.politician_id for r in frames["politicians"].collect()]
+    assert len(ids) == 149
+
+    def request(pid):
+        return [(pid, *r) for r in metrics.politician_report_sql(live, pid).collect()]
+
+    with ThreadPoolExecutor(4) as pool:
+        want = [row for rows in pool.map(request, ids) for row in rows]
+    cols = ["politician_id", "section", "metric", "label", "value"]
+    got = [tuple(r) for r in frames["politician_report"].select(cols).collect()]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
+def test_report_politician_without_facts_gets_zero_rows(spark):
+    """A politician in the dim with no facts gets the oracle's seven
+    zero scalar rows in the all-politicians report, the same rows the
+    live path returns for that id; facts of an id outside the dim are
+    not reported."""
+    donations = spark.createDataFrame(
+        [(1, 10, 5.0, "2024-01-05"), (99, 10, 7.0, "2024-01-06")],
+        "politician_id bigint, donor_id int, amount double, date_s string",
+    ).select(
+        "politician_id",
+        "donor_id",
+        F.col("amount").cast("decimal(12,2)").alias("amount"),
+        F.to_date("date_s").alias("date"),
+    )
+    tables = {
+        "donations": donations,
+        "donors": spark.createDataFrame([(10, "D", "PAC")], "donor_id int, name string, donor_type string"),
+        "bills": spark.createDataFrame(
+            [], "bill_id int, sponsor_id bigint, official_bill_number string, date_introduced date"
+        ),
+        "cosponsors": spark.createDataFrame([], "bill_id int, politician_id bigint, is_original_cosponsor boolean"),
+        "votes": spark.createDataFrame([], "politician_id bigint, bill_id int, date date, vote_position string"),
+        "politicians": spark.createDataFrame([(1,), (2,)], "politician_id bigint"),
+    }
+    rows = metrics.all_politician_reports_sql(tables).collect()
+    assert {r.politician_id for r in rows} == {1, 2}
+    zero = sorted((r.section, r.metric, r.label, r.value) for r in rows if r.politician_id == 2)
+    assert zero == sorted(
+        [("financial", m, "", 0.0) for m in ("total_donations", "n_donations", "n_donors")]
+        + [("legislative", m, "", 0.0) for m in ("n_sponsored", "n_cosponsored", "n_original", "n_joined_later")]
+    )
+    assert sorted(tuple(r) for r in metrics.politician_report_sql(tables, 2).collect()) == zero
+
+
+def test_served_read_of_unknown_id_is_empty(spark, sf_dir):
+    """An id outside the politicians dim has no partition in the stored
+    report, so the served read returns no rows (the reference's 404)."""
+    from politician_etl_project_spark.queries.serving import domain_frames
+
+    frames = domain_frames(spark, sf_dir)
+    assert metrics.politician_report_sql(frames, 9999).collect() == []
+
+
+def test_live_report_prunes_every_fact_scan(wh):
+    """Without a stored report the request runs over a one-id spine; its
+    semi joins must still put the id predicate on every fact scan —
+    politician_id on donations, cosponsors and votes, sponsor_id on the
+    sponsored-bills scan — so no request aggregates over all
+    politicians."""
+    import contextlib
+    import io
+
+    pid = _pid(wh, "P000197")
+    tables = {name: wh.read(name) for name in ("donations", "donors", "bills", "votes")}
+    tables["cosponsors"] = wh.read("bill_cosponsors")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        metrics.politician_report_sql(tables, pid).explain("formatted")
+    plan = buf.getvalue()
+    scans = [node for node in plan.split("\n\n(") if node.split("\n", 1)[0].endswith("Scan parquet ")]
+    fact_scans = sponsored = 0
+    for node in scans:
+        lines = node.splitlines()
+        output = next(ln for ln in lines if ln.startswith("Output"))
+        pushed = next(ln for ln in lines if ln.startswith("PushedFilters"))
+        if "politician_id" in output:
+            fact_scans += 1
+            assert f"EqualTo(politician_id,{pid})" in pushed, node
+        sponsored += f"EqualTo(sponsor_id,{pid})" in pushed
+    assert fact_scans >= 3 and sponsored >= 1, plan
+
+
+def test_domain_store_key_covers_report_sql(monkeypatch, sf_dir):
+    """The store holds the report's output, so its key covers the report
+    SQL text: an edited ``_REPORT_SQL`` builds a new store instead of
+    serving the old answers."""
+    from politician_etl_project_spark.queries.serving import domain_store_path
+
+    before = domain_store_path(sf_dir)
+    assert domain_store_path(sf_dir) == before
+    monkeypatch.setattr(metrics, "_REPORT_SQL", metrics._REPORT_SQL + "\n")
+    assert domain_store_path(sf_dir) != before
+
+
 def test_domain_store_equals_derivation(spark, sf_dir):
     """The materialized domain store must hold exactly the derived
     frames — schema (names, types, nullability-insensitive) and full
@@ -250,7 +359,10 @@ def test_domain_store_equals_derivation(spark, sf_dir):
 
     stored = domain_frames(spark, sf_dir)
     derived = derive_domain_frames(spark, sf_dir)
-    assert set(stored) == set(_DOMAIN_TABLES) == set(derived)
+    # the stored report is checked against the live SQL instead
+    # (test_stored_report_equals_live_sql): it is not a derived table
+    assert set(stored) == set(_DOMAIN_TABLES) | {"politician_report"}
+    assert set(_DOMAIN_TABLES) == set(derived)
     for name in _DOMAIN_TABLES:
         s_df, d_df = stored[name], derived[name]
         assert [(f.name, f.dataType) for f in s_df.schema.fields] == [

@@ -53,22 +53,36 @@ def _duck(con, sql, ncols):
     return sorted(tuple(_canon(v) for v in r) for r in con.execute(sql).fetchall())
 
 
+def _report(wh, pid) -> dict[str, list[tuple]]:
+    """``metrics.politician_report_sql`` on the fixture warehouse (the
+    live path), grouped by metric into ``[(label, value), ...]``."""
+    tables = {n: wh.read(n) for n in ("donations", "donors", "bills", "votes")}
+    tables["cosponsors"] = wh.read("bill_cosponsors")
+    out: dict[str, list[tuple]] = {}
+    for r in metrics.politician_report_sql(tables, pid).collect():
+        out.setdefault(r.metric, []).append((r.label, _canon(r.value)))
+    return {k: sorted(v) for k, v in out.items()}
+
+
 def test_financial_vs_duckdb(wh, duck):
     king = (
         wh.read("politicians").filter(F.col("congress_id") == "K000383").collect()[0].politician_id
     )
-    out = metrics.financial_metrics(wh.read("donations"), wh.read("donors"), {"politician_id": king})
+    rep = _report(wh, king)
 
-    got = _rows(out["total"], ["total_donations", "n_donations", "n_donors"])
+    got = [rep[m][0][1] for m in ("total_donations", "n_donations", "n_donors")]
     want = _duck(
         duck,
         f"""SELECT COALESCE(SUM(amount),0), COUNT(*), COUNT(DISTINCT donor_id)
             FROM donations WHERE politician_id = {king}""",
         3,
     )
-    assert got == want
+    assert [tuple(got)] == want
 
-    got = _rows(out["by_type"], ["donor_type", "total", "n", "pct"])
+    bt = {m: dict(rep[m]) for m in ("by_type_total", "by_type_n", "by_type_pct")}
+    got = sorted(
+        (dt, total, bt["by_type_n"][dt], bt["by_type_pct"][dt]) for dt, total in bt["by_type_total"].items()
+    )
     want = _duck(
         duck,
         f"""SELECT COALESCE(dn.donor_type,'Unknown') AS donor_type, SUM(d.amount) AS total,
@@ -81,19 +95,19 @@ def test_financial_vs_duckdb(wh, duck):
     )
     assert got == want
 
-    got = _rows(out["top_donors"], ["name", "donor_type", "total_donated"])
+    got = sorted((label, v) for m, rows in rep.items() if m.startswith("top_donor_") for label, v in rows)
     want = _duck(
         duck,
-        f"""SELECT name, donor_type, total FROM (
-              SELECT dn.donor_id, dn.name, dn.donor_type, SUM(d.amount) AS total
+        f"""SELECT name, total FROM (
+              SELECT dn.donor_id, dn.name, SUM(d.amount) AS total
               FROM donations d JOIN donors dn USING (donor_id)
               WHERE d.politician_id = {king}
-              GROUP BY 1, 2, 3 ORDER BY total DESC, dn.name, dn.donor_id LIMIT 10)""",
-        3,
+              GROUP BY 1, 2 ORDER BY total DESC, dn.name, dn.donor_id LIMIT 10)""",
+        2,
     )
     assert got == want
 
-    got = _rows(out["timeline"], ["month", "donor_type", "total"])
+    got = sorted(tuple(label.split("|")) + (v,) for label, v in rep["timeline"])
     want = _duck(
         duck,
         f"""SELECT strftime(date_trunc('month', d.date), '%Y-%m') AS month,
@@ -108,14 +122,13 @@ def test_financial_vs_duckdb(wh, duck):
 
 def test_legislative_vs_duckdb(wh, duck):
     sponsor = wh.read("bills").select("sponsor_id").filter("sponsor_id IS NOT NULL").collect()[0][0]
-    out = metrics.legislative_metrics(wh.read("bills"), wh.read("bill_cosponsors"), sponsor)
-    got = _rows(out["sponsored"], ["n_sponsored"])
+    got = [(_report(wh, sponsor)["n_sponsored"][0][1],)]
     want = _duck(duck, f"SELECT COUNT(*) FROM bills WHERE sponsor_id = {sponsor}", 1)
     assert got == want
 
     cos = wh.read("bill_cosponsors").select("politician_id").collect()[0][0]
-    out = metrics.legislative_metrics(wh.read("bills"), wh.read("bill_cosponsors"), cos)
-    got = _rows(out["cosponsored"], ["n_cosponsored", "n_original", "n_joined_later"])
+    rep = _report(wh, cos)
+    got = [tuple(rep[m][0][1] for m in ("n_cosponsored", "n_original", "n_joined_later"))]
     want = _duck(
         duck,
         f"""SELECT COUNT(*),
@@ -156,8 +169,7 @@ def test_voting_vs_duckdb(wh, duck):
     pelosi = (
         wh.read("politicians").filter(F.col("congress_id") == "P000197").collect()[0].politician_id
     )
-    out = metrics.voting_metrics(wh.read("votes"), wh.read("bills"), pelosi)
-    got = _rows(out["breakdown"], ["vote_position", "n"])
+    got = _report(wh, pelosi)["position_n"]
     want = _duck(
         duck,
         f"""SELECT COALESCE(vote_position,'Unknown'), COUNT(*)
@@ -384,10 +396,10 @@ def test_scope_metrics_semi_joins_broadcast(wh):
 def test_filtered_donations_explicit_none_ignored(wh):
     """An API layer forwarding optional params as explicit Nones must
     behave like absent filters — `col >= NULL` silently returned empty
-    metrics before the is-not-None guard."""
+    results before the is-not-None guard."""
     donations = wh.read("donations")
-    all_rows = metrics._filtered_donations(donations, None).count()
-    with_nones = metrics._filtered_donations(
-        donations, {"politician_id": None, "min_amount": None, "since": None}
-    ).count()
+    _, all_rows = metrics.paginate_donations(donations, None)
+    _, with_nones = metrics.paginate_donations(
+        donations, {"politician_id": None, "donor_id": None, "min_amount": None, "max_amount": None}
+    )
     assert with_nones == all_rows > 0

@@ -1,6 +1,6 @@
-"""Physical-layout tests: partition pruning and bucketed shuffle-free
-joins must be visible in the plan (SURVEY §4 — these replace the
-reference's DB indexes at scale)."""
+"""Physical-layout tests: partition pruning must be visible in the plan
+(SURVEY §4 — it replaces the reference's DB indexes at scale), and the
+snapshot/upsert tables and build-once stores keep their contracts."""
 
 from __future__ import annotations
 
@@ -29,7 +29,7 @@ def test_partition_pruning(spark, tmp_path):
     path = str(tmp_path / "orders_by_year")
     storage.write_partitioned(orders, path, ["order_year"])
 
-    df = storage.read_partitioned(spark, path).filter(F.col("order_year") == 1996)
+    df = spark.read.parquet(path).filter(F.col("order_year") == 1996)
     plan = _explain(df)
     # the year predicate must prune directories at planning time …
     assert "PartitionFilters" in plan
@@ -50,10 +50,10 @@ def test_partitioned_scan_reads_fewer_files(spark, tmp_path):
     storage.write_partitioned(orders, path, ["order_year"])
     # inputFiles() reports the unfiltered relation; the files actually
     # read by the pruned scan come from input_file_name() at execution
-    all_files = set(storage.read_partitioned(spark, path).inputFiles())
+    all_files = set(spark.read.parquet(path).inputFiles())
     pruned = {
         r[0]
-        for r in storage.read_partitioned(spark, path)
+        for r in spark.read.parquet(path)
         .filter(F.col("order_year") == 1996)
         .select(F.input_file_name())
         .distinct()
@@ -61,90 +61,6 @@ def test_partitioned_scan_reads_fewer_files(spark, tmp_path):
     }
     assert len(pruned) < len(all_files)
     assert all("order_year=1996" in f for f in pruned)
-
-
-@pytest.fixture()
-def bucketed_tables(spark):
-    orders = load_table(spark, SF_SMALL, "orders")
-    li = load_table(spark, SF_SMALL, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-    storage.write_bucketed(orders, "b_orders", ["o_orderkey"], n_buckets=4)
-    storage.write_bucketed(li, "b_lineitem", ["o_orderkey"], n_buckets=4)
-    yield "b_orders", "b_lineitem"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
-    left, right = bucketed_tables
-    joined = storage.bucketed_join_ready(spark, left, right)
-    plan = _explain(joined)
-    # co-bucketed tables join without shuffling either side
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" not in plan
-    assert "Exchange hashpartitioning" not in plan
-    # and the join result is correct
-    orders = load_table(spark, SF_SMALL, "orders")
-    li = load_table(spark, SF_SMALL, "lineitem")
-    expected = orders.join(li, orders.o_orderkey == li.l_orderkey).count()
-    assert joined.count() == expected
-
-
-def test_bucket_key_introspection(spark, bucketed_tables):
-    assert storage._bucket_key(spark, bucketed_tables[0]) == ["o_orderkey"]
-
-
-@pytest.fixture(scope="module")
-def bucketed_wh(spark, tmp_path_factory):
-    """ETL warehouse with its fact tables re-materialized bucketed on
-    politician_id (Warehouse.bucketize)."""
-    import json
-
-    from tests import test_etl
-
-    d = tmp_path_factory.mktemp("staging_bkt")
-    (d / "xml").mkdir()
-    (d / "xml" / "hr123.xml").write_text(test_etl.BILL_XML)
-    (d / "votes").mkdir()
-    (d / "votes" / "v1").mkdir()
-    (d / "votes" / "v1" / "data.json").write_text(json.dumps(test_etl.VOTE_DOC))
-    (d / "cn.txt").write_text(test_etl.CN)
-    (d / "ccl.txt").write_text(test_etl.CCL)
-    (d / "itcont.txt").write_text(test_etl.ITCONT)
-    wh = test_etl._run(spark, d, tmp_path_factory.mktemp("wh_bkt"))
-    tables = {name: wh.bucketize(name, n_buckets=4) for name in ("donations", "votes")}
-    yield wh, tables
-    for t in tables.values():
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_warehouse_bucketized_agg_no_exchange(spark, bucketed_wh):
-    """groupBy on the bucket key aggregates in place — no Exchange in the
-    plan; this is the per-politician metric-bundle access path."""
-    wh, tables = bucketed_wh
-    agg = spark.table(tables["donations"]).groupBy("politician_id").agg(F.sum("amount"))
-    assert "Exchange hashpartitioning" not in _explain(agg)
-    got = {r.politician_id: r[1] for r in agg.collect()}
-    want = {
-        r.politician_id: r[1]
-        for r in wh.read("donations").groupBy("politician_id").agg(F.sum("amount")).collect()
-    }
-    assert got == want
-
-
-def test_warehouse_bucketized_fact_fact_join_no_exchange(spark, bucketed_wh):
-    """donations ⋈ votes on politician_id: both sides co-bucketed, so the
-    join plans with zero Exchange — at warehouse scale the only fact-fact
-    join shape that survives 100x growth."""
-    wh, tables = bucketed_wh
-    joined = storage.bucketed_join_ready(spark, tables["donations"], tables["votes"])
-    assert "Exchange hashpartitioning" not in _explain(joined)
-    expected = (
-        wh.read("donations")
-        .select("politician_id")
-        .join(wh.read("votes").select("politician_id"), "politician_id")
-        .count()
-    )
-    assert joined.count() == expected
-    assert expected > 0
 
 
 def test_partition_scoped_merge(spark, tmp_path):

@@ -14,6 +14,8 @@ pushed into the scan by Catalyst (check ``PushedFilters`` in
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -39,12 +41,10 @@ def tmp_cache_key(sf_dir: str, *rel_files: str, version: str = "") -> str:
     of the ABSOLUTE sf_dir plus each named source file's (size, mtime)
     fingerprint — so a regenerated corpus rebuilds, identical corpora
     referenced by different relative paths share one cache, and the key
-    never depends on Python's per-process-salted hash().  Pass a
-    ``version`` token when the BUILD LOGIC (not just the data) can
-    change — bumping it invalidates caches built by old code.  Shared by the
-    analytics_ext tmp stores and the merge-replay table; the stored ANN
-    index caches (queries/vector._stored_index_path) follow the same
-    discipline with extra per-kind version terms."""
+    never depends on Python's per-process-salted hash().  ``version``
+    folds any further key material in; the engine's stores pass the
+    engine source digest through :func:`stored_path`, so a key never
+    depends on someone remembering to bump a token."""
     import hashlib
     import os
 
@@ -60,21 +60,59 @@ def tmp_cache_key(sf_dir: str, *rel_files: str, version: str = "") -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
-def ensure_built_dir(path: str, build) -> str:
-    """Build-once /tmp artifact discipline, shared by every stored-index /
-    tmp-store cache in the repo: if ``path`` exists it is served as-is;
-    otherwise ``build(staging_path)`` populates a process-unique staging
-    dir that is atomically renamed into place.
+@functools.cache
+def engine_digest() -> str:
+    """md5 over the path and text of every ``*.py`` file of this package,
+    read once per process (the code that runs cannot change after
+    import).  Any edit to the engine — a build function, a helper it
+    calls, a SQL string — changes every store key, so a store written by
+    other code is never served as this code's output."""
+    import hashlib
+    from pathlib import Path
 
-    The protocol (previously copy-pasted at five call sites with
-    drifting error handling):
+    root = Path(__file__).resolve().parent
+    h = hashlib.md5()
+    for path in sorted(root.rglob("*.py")):
+        h.update(path.relative_to(root).as_posix().encode() + b"\0")
+        h.update(path.read_bytes())
+    return h.hexdigest()
+
+
+def stored_path(kind: str, sf_dir: str, *inputs: str, params: str = "") -> str:
+    """Where the build-once store ``kind`` of ``sf_dir`` lives:
+    ``<tempdir>/spark_graft_<kind>_<key>``, the key covering the named
+    input files under ``sf_dir``, the build arguments ``params`` and the
+    engine source (:func:`engine_digest`).  The one rule every store of
+    the engine follows; computing it builds nothing."""
+    import os
+    import tempfile
+
+    key = tmp_cache_key(sf_dir, *inputs, version=params + "|" + engine_digest())
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_{key}")
+
+
+def stored_dir(kind: str, sf_dir: str, inputs: tuple[str, ...], build, params: str = "") -> str:
+    """The store :func:`stored_path` names, built by ``build(staging)`` on
+    first use and published through :func:`ensure_built_dir`."""
+    return ensure_built_dir(stored_path(kind, sf_dir, *inputs, params=params), build)
+
+
+def ensure_built_dir(path: str, build) -> str:
+    """Build-once /tmp artifact discipline under :func:`stored_dir`: if
+    ``path`` exists it is served as-is; otherwise ``build(staging_path)``
+    populates a process-unique staging dir that is atomically renamed
+    into place.  ``path`` must name its inputs and code (stored_path
+    does), since a published store is never rebuilt.
+
+    The protocol:
 
     - staging is suffixed with pid + random hex, so concurrent builders
       never share a half-written dir;
     - the staging dir is PRE-CREATED — a builder whose write emits no
       files (empty corpus) still publishes a valid empty artifact
       instead of failing the rename;
-    - a failed build removes its staging (no /tmp litter);
+    - a failed build removes its staging (no /tmp litter) and publishes
+      nothing;
     - a lost publish race (another process renamed first) is benign —
       ONLY if the destination actually exists; a real rename failure
       (EXDEV, permissions, stale parent) surfaces."""

@@ -360,13 +360,6 @@ def simhash16_from_hashes(hashes_col: str) -> Column:
     return F.expr(" + ".join(bit_terms)).cast("int")
 
 
-def simhash16(col: str = "text") -> Column:
-    """One-shot SimHash for single-use contexts; hot paths should
-    materialize :func:`token_hashes` in a withColumn first and use
-    :func:`simhash16_from_hashes`."""
-    return simhash16_from_hashes(_token_hashes_sql(col))
-
-
 def hamming16(a: str | Column, b: str | Column) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b

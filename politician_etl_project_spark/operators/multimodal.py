@@ -2620,59 +2620,6 @@ def pixel_stats(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(_extract, _PIXEL_STATS_SCHEMA)
 
 
-_RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("out_h", IntegerType()),
-        StructField("out_w", IntegerType()),
-        StructField("pixels", StringType()),  # csv of pooled means, row-major
-    ]
-)
-
-
-def resize_images(media: DataFrame, out_h: int = 2, out_w: int = 2) -> DataFrame:
-    """Average-pool resize of image payloads to (out_h × out_w) via
-    mapInPandas: decode to width×height, split into a grid, floor-mean
-    each cell.  Deterministic integer output so tests are exact."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "out_h": [], "out_w": [], "pixels": []}
-            for mid, payload, width, height in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                raw = decode_fake(payload)
-                # degenerate-payload guards (metadata can disagree with
-                # the bytes): pool only COMPLETE pixel rows, skip images
-                # with no complete row, and nearest-neighbor upsample an
-                # axis smaller than the target grid — array_split on such
-                # an axis yields empty cells and int(empty.mean()) would
-                # abort the whole job on one bad row
-                w = int(width) if width and width > 0 else 0
-                h = min(int(height), raw.size // w) if w else 0
-                if h < 1:
-                    continue
-                img = raw[: h * w].reshape(h, w)
-                if h < out_h:
-                    img = img[(np.arange(out_h) * h) // out_h, :]
-                if w < out_w:
-                    img = img[:, (np.arange(out_w) * w) // out_w]
-                rows = np.array_split(img, out_h, axis=0)
-                cells = [
-                    int(cell.mean()) for row in rows for cell in np.array_split(row, out_w, axis=1)
-                ]
-                out["media_id"].append(mid)
-                out["out_h"].append(out_h)
-                out["out_w"].append(out_w)
-                out["pixels"].append(",".join(map(str, cells)))
-            yield pd.DataFrame(out)
-
-    imgs = media.filter(F.col("kind") == "image").select(
-        "media_id", "payload", F.col("meta.width").alias("width"), F.col("meta.height").alias("height")
-    )
-    return imgs.mapInPandas(_resize, _RESIZE_SCHEMA)
-
-
 _FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -2695,8 +2642,6 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
                 arr = decode_fake(payload)
                 # clamp to COMPLETE frames actually present: metadata
                 # overstating the payload would otherwise abort reshape
-                # here while the UDTF tier silently sums a short slice —
-                # both tiers clamp identically so they can never drift
                 n = min(int(n_frames), arr.size // FRAME_BYTES)
                 arr = arr[: n * FRAME_BYTES]
                 frames = arr.reshape(-1, FRAME_BYTES) if n else arr.reshape(0, FRAME_BYTES)
@@ -2716,45 +2661,6 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
         "media_id", "payload", F.col("meta.n_frames").alias("n_frames")
     )
     return vids.mapInPandas(_frames, _FRAME_SCHEMA)
-
-
-def sample_frames_udtf(media: DataFrame, every: int = 2) -> DataFrame:
-    """`sample_frames` on Spark's FIRST-CLASS Python UDTF surface
-    (SURVEY D4 — `@udtf` + a SQL LATERAL join) instead of mapInPandas.
-
-    Same contract, different execution tier: the UDTF yields rows
-    per-input-row through the Python worker, which is the right shape
-    when per-row fan-out logic needs imperative state but row volume is
-    moderate; the Arrow-batched `sample_frames` stays the production
-    path for bulk decode (batch-columnar transfer, ~10-100x less
-    serialization).  Tested equal to `sample_frames` row-for-row
-    (tests/test_multimodal.py) — the two tiers must never drift."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="media_id bigint, frame_idx int, frame_sum int")
-    class _FrameSampler:
-        def eval(self, media_id, payload, n_frames, step):
-            arr = decode_fake(payload)
-            # same complete-frame clamp as sample_frames (drift guard)
-            n = min(int(n_frames), arr.size // FRAME_BYTES)
-            arr = arr[: n * FRAME_BYTES]
-            for i in range(0, n, int(step)):
-                frame = arr[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
-                yield int(media_id), int(i), int(frame.sum())
-
-    spark = media.sparkSession
-    spark.udtf.register("frame_sampler", _FrameSampler)
-    vids = media.filter(F.col("kind") == "video").select(
-        "media_id", "payload", F.col("meta.n_frames").alias("n_frames")
-    )
-    # bind the DataFrame as a parameter instead of a session-global temp
-    # view — concurrent callers on one SparkSession must not race on a
-    # shared view name
-    return spark.sql(
-        "SELECT s.media_id, s.frame_idx, s.frame_sum "
-        f"FROM {{vids}} v, LATERAL frame_sampler(v.media_id, v.payload, v.n_frames, {int(every)}) s",
-        vids=vids,
-    )
 
 
 # --- real-container round trip (encode + decode through mapInPandas) --------

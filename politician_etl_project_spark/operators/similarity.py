@@ -147,19 +147,6 @@ def ann_lsh(
     )
 
 
-# Per-kind algorithm versions: bump "lsh" when hyperplane_bits' plane
-# family changes, "ivf"/"pq" when their training logic changes — cached
-# indexes built by old code must not be probed by new code, and bumping
-# one family must not needlessly invalidate the others (round-3 advice).
-# They live HERE, next to the algorithms they version, so an edit to the
-# plane family / Lloyd loop / codebook training cannot miss the bump
-# (queries/vector.py imports these for its /tmp cache keys).
-INDEX_ALGO_VERSION = {"lsh": "1", "ivf": "1", "pq": "1"}
-# extended indexes are built with the SAME hyperplane family as plain
-# LSH, so their version COMPOSES lsh's — bumping "lsh" invalidates them
-INDEX_ALGO_VERSION["lshx"] = f"{INDEX_ALGO_VERSION['lsh']}.1"
-
-
 def _write_index_meta(path: str, meta: dict) -> None:
     """Params sidecar beside the index data (underscore-prefixed, so
     Spark's parquet discovery ignores it).  Probes check it so a

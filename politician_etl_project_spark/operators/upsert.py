@@ -83,23 +83,6 @@ def dedup_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
-    """S13 as a set operation: append only keys not already present
-    (left-anti against existing), deduping incoming on the key first.
-    The anti-join is NULL-SAFE: a NULL key present in existing blocks a
-    NULL-key incoming row, the same grouping semantics merge_keep's
-    window applies — a plain equality anti-join would re-append the
-    NULL-key row on every run."""
-    fresh = dedup_keys(incoming, keys)
-    exist_keys = existing.select(*keys).distinct()
-    cond = None
-    for k in keys:
-        c = fresh[k].eqNullSafe(exist_keys[k])
-        cond = c if cond is None else (cond & c)
-    fresh = fresh.join(exist_keys, cond, "left_anti")
-    return existing.unionByName(fresh)
-
-
 SCHEMA_FILE = "_schema.json"
 
 
@@ -507,18 +490,6 @@ def log_update(
     if table is not None:
         table.append(row)
     return row
-
-
-def latest_watermark(update_log: DataFrame, table_name: str):
-    """T1/A13: last successful update timestamp for a table (reference
-    ORDER BY last_update DESC LIMIT 1 where status='success',
-    scripts/update_donations.py:52-65)."""
-    rows = (
-        update_log.filter((F.col("table_name") == table_name) & (F.col("status") == "success"))
-        .agg(F.max("last_update").alias("wm"))
-        .collect()
-    )
-    return rows[0].wm if rows else None
 
 
 def apply_changelog(

@@ -26,9 +26,10 @@ from politician_etl_project_spark.catalog import load_table
 from politician_etl_project_spark.queries.registry import declared_query
 
 
-# Shared fingerprint cache key (moved to catalog so queries/events.py's
-# merge-replay table uses the same idiom).
-from politician_etl_project_spark.catalog import tmp_cache_key as _tmp_key
+# Build-once stores are named by catalog.stored_dir; the stores that are
+# rewritten per call or held in the metastore (the ORC round trip, the
+# rollup, the bucketed tables) key on the input fingerprint alone.
+from politician_etl_project_spark.catalog import stored_dir, tmp_cache_key as _tmp_key
 
 
 
@@ -1083,15 +1084,14 @@ ORDER BY event_type
     "equivalent date predicate.",
 )
 def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    key = _tmp_key(sf_dir, "events.parquet")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_dpp_{key}")
     pf = ev.withColumn("event_date", F.to_date("ts"))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        pf.write.partitionBy("event_date").mode("overwrite").parquet(path)
+    path = stored_dir(
+        "dpp",
+        sf_dir,
+        ("events.parquet",),
+        lambda staging: pf.write.partitionBy("event_date").mode("overwrite").parquet(staging),
+    )
     # schema pinned from the logical frame: a store built from an EMPTY
     # events table has no footer to infer from (same hazard as
     # RollupStore._read_store)
@@ -1141,19 +1141,18 @@ ORDER BY lang
     "work, not data IO; partition-parallel.",
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    key = _tmp_key(sf_dir, "documents.parquet")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_evolve_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def _build(staging: str) -> None:
+        # two writes, one store: it is published only after both land
         d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
             "overwrite"
-        ).parquet(path)
+        ).parquet(staging)
         d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "lang", "n_chars").write.mode(
             "append"
-        ).parquet(path)
+        ).parquet(staging)
+
+    path = stored_dir("evolve", sf_dir, ("documents.parquet",), _build)
     merged = spark.read.option("mergeSchema", "true").schema(
         "doc_id bigint, lang string, n_chars bigint"
     ).parquet(path)
@@ -1825,14 +1824,7 @@ def _time_travel_path(spark: SparkSession, sf_dir: str) -> str:
     append — v1's files are referenced, not copied), v3 = copy-on-write
     upsert doubling o_totalprice for pre-1997 keys divisible by 5.
     Readers time-travel to any of the three."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir
     from politician_etl_project_spark.storage import SnapshotTable
-
-    key = _tmp_key(sf_dir, "orders.parquet", version="time-travel-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_snap_{key}")
 
     def _build(staging: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
@@ -1854,7 +1846,7 @@ def _time_travel_path(spark: SparkSession, sf_dir: str) -> str:
             keys=["o_orderkey"],
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("snap", sf_dir, ("orders.parquet",), _build)
 
 
 _TT_ORACLE = f"""
@@ -1931,14 +1923,7 @@ def _stats_prune_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once snapshot of orders laid out with repartitionByRange on
     o_orderkey and per-file min/max stats in the manifest (stats_cols) —
     the data-skipping layout a fact table carries at 100 TB."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir
     from politician_etl_project_spark.storage import SnapshotTable
-
-    key = _tmp_key(sf_dir, "orders.parquet", version="stats-prune-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_statsnap_{key}")
 
     def _build(staging: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -1946,7 +1931,7 @@ def _stats_prune_path(spark: SparkSession, sf_dir: str) -> str:
             orders.repartitionByRange(16, "o_orderkey")
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("statsnap", sf_dir, ("orders.parquet",), _build)
 
 
 _SP_ORACLE = "\nUNION ALL\n".join(
@@ -2011,14 +1996,7 @@ def _cdf_store_path(spark: SparkSession, sf_dir: str) -> str:
     and price doubled where key%5 == 0 — so the v1->v2 feed contains
     inserts (key%3=0), deletes (key%3=1) and updates (key%3=2, key%5=0),
     with the rest unchanged and therefore ABSENT."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir
     from politician_etl_project_spark.storage import SnapshotTable
-
-    key = _tmp_key(sf_dir, "orders.parquet", version="cdf-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_cdf_{key}")
 
     def _build(staging: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
@@ -2036,7 +2014,7 @@ def _cdf_store_path(spark: SparkSession, sf_dir: str) -> str:
             )
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("cdf", sf_dir, ("orders.parquet",), _build)
 
 
 _CDF_ORACLE = """
@@ -2111,14 +2089,7 @@ def _compaction_path(spark: SparkSession, sf_dir: str) -> str:
     a new version and ``vacuum(keep_last=1)`` reclaims every
     pre-compaction file and manifest.  Same idempotent staging+rename
     cache discipline as _time_travel_path."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir
     from politician_etl_project_spark.storage import SnapshotTable
-
-    key = _tmp_key(sf_dir, "orders.parquet", version="compaction-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_compact_{key}")
 
     def _build(staging: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
@@ -2130,7 +2101,7 @@ def _compaction_path(spark: SparkSession, sf_dir: str) -> str:
         t.compact(target_files=_COMPACT_TARGET)
         t.vacuum(keep_last=1)
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("compact", sf_dir, ("orders.parquet",), _build)
 
 
 _COMPACT_ORACLE = f"""

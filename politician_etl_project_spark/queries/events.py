@@ -503,8 +503,8 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _merge_replay_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once two-batch MERGE replay table (cache discipline of
-    queries/textops._ingest_index_path: keyed on the source fingerprint,
+    """Build-once two-batch MERGE replay table (a catalog.stored_dir
+    store: keyed on the source fingerprint and the engine source,
     staged + renamed so concurrent queries never read a half-written
     table).  Batch b0 = events with event_id %% 4 != 3; batch b1 = odd
     event_ids with value shifted +100 — the overlap (event_id %% 4 == 1)
@@ -514,14 +514,8 @@ def _merge_replay_path(spark: SparkSession, sf_dir: str) -> str:
     ParquetUpsertTable.upsert used by
     streaming.pipelines.incremental_upsert_stream's foreachBatch — this
     is the driver-checkable twin of that pytest-only path."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    key = tmp_cache_key(sf_dir, "events.parquet", version="merge-replay-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_merge_{key}")
 
     def _build(staging: str) -> None:
         events = load_table(spark, sf_dir, "events").select(
@@ -536,7 +530,7 @@ def _merge_replay_path(spark: SparkSession, sf_dir: str) -> str:
             update_wins=False,
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("merge", sf_dir, ("events.parquet",), _build)
 
 
 @declared_query(
@@ -698,6 +692,36 @@ def _pinned_state_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set(conf, prev)
 
 
+def _staged_chunks(spark: SparkSession, sf_dir: str, kind: str, split) -> str:
+    """Stage the events fixture as a streaming input of one parquet file
+    per chunk of ``split(events)``, in arrival order: file i is
+    ``chunk-00i.parquet`` with an mtime 50 s after file i-1's (the file
+    source orders by modification time), so maxFilesPerTrigger=1 reads
+    one chunk per micro-batch.  A build-once store (catalog.stored_dir):
+    staged once and reused, and a torn staging attempt is never read."""
+    import os
+    import shutil
+    import time
+
+    from politician_etl_project_spark.catalog import stored_dir
+
+    def _build(staging: str) -> None:
+        chunks = split(load_table(spark, sf_dir, "events"))
+        now = time.time()
+        write = os.path.join(staging, "write")
+        os.makedirs(os.path.join(staging, "input"))
+        for i, df in enumerate(chunks):
+            df.coalesce(1).write.mode("overwrite").parquet(write)
+            part = next(f for f in os.listdir(write) if f.endswith(".parquet"))
+            dest = os.path.join(staging, "input", f"chunk-{i:03d}.parquet")
+            shutil.move(os.path.join(write, part), dest)
+            mtime = now - 50 * (len(chunks) - 1 - i)
+            os.utime(dest, (mtime, mtime))
+        shutil.rmtree(write, ignore_errors=True)
+
+    return os.path.join(stored_dir(kind, sf_dir, ("events.parquet",), _build), "input")
+
+
 def _latedrop_staging(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events fixture as a 3-file streaming input that makes
     watermark late-drop REAL and deterministic under Trigger.AvailableNow
@@ -716,50 +740,14 @@ def _latedrop_staging(spark: SparkSession, sf_dir: str) -> str:
       user_id slice) — they arrive with the watermark at max-1h in
       effect, and every one of their windows ended long before it, so
       the watermark filter drops them all (visible as
-      numRowsDroppedByWatermark in the query progress).
+      numRowsDroppedByWatermark in the query progress)."""
 
-    Idempotent per (sf_dir, events file mtime+size): staged once under
-    /tmp and reused; a torn staging attempt is invisible because the
-    directory is renamed into place atomically."""
-    import hashlib
-    import os
-    import shutil
-    import time
+    def _split(events: DataFrame) -> list[DataFrame]:
+        cut = events.agg((F.max("ts") - F.expr("INTERVAL 2 DAYS")).alias("c")).first()["c"]
+        late = (F.col("ts") < F.lit(cut)) & (F.col("user_id") % 17 == 3)
+        return [events.filter(~late), events.orderBy(F.desc("ts")).limit(1), events.filter(late)]
 
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(f"{src}|{st.st_mtime_ns}|{st.st_size}|v1".encode()).hexdigest()[:12]
-    base = f"/tmp/spark_graft_latedrop_{key}"
-    inp = os.path.join(base, "input")
-    if os.path.isdir(inp):
-        return inp
-
-    events = load_table(spark, sf_dir, "events")
-    cut = events.agg((F.max("ts") - F.expr("INTERVAL 2 DAYS")).alias("c")).first()["c"]
-    late = (F.col("ts") < F.lit(cut)) & (F.col("user_id") % 17 == 3)
-
-    tmp = f"{base}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(os.path.join(tmp, "input"))
-
-    def _one_file(df, name: str, mtime: float) -> None:
-        stage = os.path.join(tmp, "write")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(tmp, "input", name)
-        shutil.move(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))  # file source orders by mod time
-
-    now = time.time()
-    _one_file(events.filter(~late), "chunk-000.parquet", now - 100)
-    _one_file(events.orderBy(F.desc("ts")).limit(1), "chunk-001.parquet", now - 50)
-    _one_file(events.filter(late), "chunk-002.parquet", now)
-    shutil.rmtree(os.path.join(tmp, "write"), ignore_errors=True)
-    try:
-        os.rename(tmp, base)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner staged it
-    return inp
+    return _staged_chunks(spark, sf_dir, "latedrop", _split)
 
 
 @declared_query(
@@ -840,56 +828,22 @@ def _stateful_staging(spark: SparkSession, sf_dir: str) -> str:
     in MULTIPLE micro-batches (maxFilesPerTrigger=1) and the
     applyInPandasWithState accumulator genuinely carries state across
     batches — a single-file input would reduce it to a per-batch
-    groupBy.  Same idempotent /tmp discipline as _latedrop_staging."""
-    import hashlib
-    import os
-    import shutil
-    import time
+    groupBy."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(f"{src}|{st.st_mtime_ns}|{st.st_size}|v1".encode()).hexdigest()[:12]
-    base = f"/tmp/spark_graft_stateful_{key}"
-    inp = os.path.join(base, "input")
-    if os.path.isdir(inp):
-        return inp
-
-    events = load_table(spark, sf_dir, "events")
-    lohi = events.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-    lo, hi = lohi["lo"], lohi["hi"]
-
-    tmp = f"{base}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(os.path.join(tmp, "input"))
-
-    def _one_file(df, name: str, mtime: float) -> None:
-        stage = os.path.join(tmp, "write")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(tmp, "input", name)
-        shutil.move(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))
-
-    now = time.time()
-    if lo is None:  # empty fixture: one empty chunk, one empty batch
-        _one_file(events, "chunk-000.parquet", now)
-    else:
-        span = hi - lo
-        c1 = lo + span / 3
-        c2 = lo + 2 * span / 3
-        _one_file(events.filter(F.col("ts") < F.lit(c1)), "chunk-000.parquet", now - 100)
-        _one_file(
+    def _split(events: DataFrame) -> list[DataFrame]:
+        lohi = events.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
+        lo, hi = lohi["lo"], lohi["hi"]
+        if lo is None:  # empty fixture: one empty chunk, one empty batch
+            return [events]
+        c1 = lo + (hi - lo) / 3
+        c2 = lo + 2 * (hi - lo) / 3
+        return [
+            events.filter(F.col("ts") < F.lit(c1)),
             events.filter((F.col("ts") >= F.lit(c1)) & (F.col("ts") < F.lit(c2))),
-            "chunk-001.parquet",
-            now - 50,
-        )
-        _one_file(events.filter(F.col("ts") >= F.lit(c2)), "chunk-002.parquet", now)
-    shutil.rmtree(os.path.join(tmp, "write"), ignore_errors=True)
-    try:
-        os.rename(tmp, base)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return inp
+            events.filter(F.col("ts") >= F.lit(c2)),
+        ]
+
+    return _staged_chunks(spark, sf_dir, "stateful", _split)
 
 
 @declared_query(
@@ -1060,17 +1014,13 @@ def _rollup_live_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once RollupStore MAINTAINED BY THE LIVE STREAM: the events
     fixture drains through rollup_maintenance_stream (3 time-tercile
     micro-batches, one guarded two-phase merge each) into a store under
-    <dir>/store, with the run's checkpoint kept as a sibling — same
-    idempotent staging+rename cache discipline as _latedrop_staging."""
+    <dir>/store, with the run's checkpoint kept as a sibling — a
+    catalog.stored_dir store."""
     import os
-    import tempfile
 
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.operators.rollup import RollupStore
     from politician_etl_project_spark.streaming.sources import EVENTS_SCHEMA
-
-    key = tmp_cache_key(sf_dir, "events.parquet", version="rollup-live-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_rolluplive_{key}")
 
     def _build(staging: str) -> None:
         from politician_etl_project_spark.streaming.pipelines import (
@@ -1088,7 +1038,7 @@ def _rollup_live_path(spark: SparkSession, sf_dir: str) -> str:
             stream, store, checkpoint_dir=os.path.join(staging, "ckpt")
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("rolluplive", sf_dir, ("events.parquet",), _build)
 
 
 @declared_query(
@@ -1149,16 +1099,11 @@ def _snapshot_append_live_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once SnapshotTable WRITTEN BY THE LIVE STREAM: the events
     fixture drains through snapshot_append_stream (3 time-tercile
     micro-batches, one guarded immutable append version each) into
-    <dir>/store.  Same idempotent staging+rename cache discipline as
-    _latedrop_staging."""
+    <dir>/store.  A catalog.stored_dir store."""
     import os
-    import tempfile
 
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.streaming.sources import EVENTS_SCHEMA
-
-    key = tmp_cache_key(sf_dir, "events.parquet", version="snap-append-live-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_snaplive_{key}")
 
     def _build(staging: str) -> None:
         from politician_etl_project_spark.streaming.pipelines import (
@@ -1177,7 +1122,7 @@ def _snapshot_append_live_path(spark: SparkSession, sf_dir: str) -> str:
             checkpoint_dir=os.path.join(staging, "ckpt"),
         )
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("snaplive", sf_dir, ("events.parquet",), _build)
 
 
 @declared_query(

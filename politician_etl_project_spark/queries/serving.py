@@ -48,17 +48,13 @@ request work.  The store also holds the detail report of every
 politician (metrics.all_politician_reports_sql: the report SQL grouped
 by politician_id), partitioned on politician_id, so a detail request
 is a pruned read of one partition instead of ~17 jobs of aggregation.
-The store is immutable once published and its key covers the report
-SQL and the build code (domain_store_path), so the precomputed report
-cannot go stale.  The scope report stays live: its chamber / party /
-id / congress predicates are not a partition key.
+The store is immutable once published and its key covers the engine
+source (catalog.stored_path), so the precomputed report cannot go
+stale.  The scope report stays live: its chamber / party / id /
+congress predicates are not a partition key.
 """
 
 from __future__ import annotations
-
-import functools
-import hashlib
-import inspect
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -238,6 +234,8 @@ _DOMAIN_PARTITION_COL = {"donations": "politician_id", "cosponsors": "politician
 # stored beside the tables and partitioned on politician_id
 _REPORT = "politician_report"
 _REPORT_SCHEMA = "politician_id BIGINT, section STRING, metric STRING, label STRING, value DOUBLE"
+# the fixture files the store is derived from
+_DOMAIN_INPUTS = ("orders.parquet", "part.parquet", "lineitem.parquet", "supplier.parquet", "nation.parquet")
 
 
 def _open_tables(spark: SparkSession, root: str, derived: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -284,56 +282,23 @@ def _build_domain_store(spark: SparkSession, sf_dir: str, staging: str) -> None:
     )
 
 
-@functools.cache
-def _build_source() -> str:
-    """The source of the code that builds the store: the derivation, the
-    build and the report functions.  Read once per process — the code
-    that runs cannot change after import."""
-    from politician_etl_project_spark import metrics
-
-    fns = (derive_domain_frames, _open_tables, _build_domain_store,
-           metrics.all_politician_reports_sql, metrics._report_sql)
-    return "".join(inspect.getsource(fn) for fn in fns)
-
-
-def domain_store_path(sf_dir: str) -> str:
-    """Where ensure_domain_store keeps the store of ``sf_dir``: keyed on
-    the fixture files it reads and an md5 of the report SQL text and of
-    the build code (``_build_source``), so a store written by older code
-    is never served as this code's output.  A stored report that
-    outlived an edit of ``_REPORT_SQL`` would otherwise keep serving the
-    old answers."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark import metrics
-    from politician_etl_project_spark.catalog import tmp_cache_key
-
-    code = hashlib.md5((metrics._REPORT_SQL + _build_source()).encode()).hexdigest()
-    key = tmp_cache_key(
-        sf_dir,
-        "orders.parquet",
-        "part.parquet",
-        "lineitem.parquet",
-        "supplier.parquet",
-        "nation.parquet",
-        version=code,
-    )
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_domain_{key}")
-
-
 def ensure_domain_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the politician-domain tables and the detail report
     once per corpus (round-7 verdict #5): a migrating user's
     donations/votes/bills ARE materialized tables — re-deriving them per
     request (including two ``distinct()`` shuffles over lineitem)
     measured fixture derivation, not request work.  Build-once /tmp
-    store with the shared ensure_built_dir discipline
-    (``_build_domain_store`` writes it)."""
-    from politician_etl_project_spark.catalog import ensure_built_dir
+    store (catalog.stored_dir; ``_build_domain_store`` writes it) keyed
+    on the fixture files it reads and the engine source, so a store
+    written by other code — an edited ``metrics._REPORT_SQL`` or any
+    function the build calls — is never served as this code's output."""
+    from politician_etl_project_spark.catalog import stored_dir
 
-    return ensure_built_dir(
-        domain_store_path(sf_dir), lambda staging: _build_domain_store(spark, sf_dir, staging)
+    return stored_dir(
+        "domain",
+        sf_dir,
+        _DOMAIN_INPUTS,
+        lambda staging: _build_domain_store(spark, sf_dir, staging),
     )
 
 

@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from politician_etl_project_spark.catalog import stored_path
 from politician_etl_project_spark.queries.registry import declared_query
 
 FIXTURE_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures_v1")
@@ -506,7 +507,10 @@ def _ensure_derby_orders(spark: SparkSession, sf_dir: str) -> tuple[str, int, in
     """Load orders into a process-local embedded Derby database (once);
     returns (jdbc_url, min_orderkey, max_orderkey).  Money is stored as
     BIGINT cents — DECIMAL(12,2)*100 is exact — so sums replay
-    bit-for-bit on every engine."""
+    bit-for-bit on every engine.  The database directory is removed
+    when the process exits."""
+    import atexit
+    import shutil
     import uuid
 
     from pyspark.sql import functions as F
@@ -515,10 +519,9 @@ def _ensure_derby_orders(spark: SparkSession, sf_dir: str) -> tuple[str, int, in
 
     if sf_dir in _DERBY_DBS:
         return _DERBY_DBS[sf_dir]
-    db = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_derby_{os.getpid()}_{uuid.uuid4().hex[:6]}", "db"
-    )
-    url = f"jdbc:derby:{db};create=true"
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_derby_{os.getpid()}_{uuid.uuid4().hex[:6]}")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    url = f"jdbc:derby:{os.path.join(root, 'db')};create=true"
     # floor(x*100 + 0.5), NOT a bare cast: o_totalprice is DOUBLE, so
     # x*100 lands within ~1e-10 of the true cent count on either side —
     # Spark's bigint cast TRUNCATES while DuckDB's ROUNDS, and the two
@@ -647,14 +650,17 @@ def q_provenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIFT_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_drift_v1")
+# the generations are literals of this module, like the fixtures, so the
+# store is keyed on the fixture dir and the engine source; the path is
+# fixed at import because the oracle below names it
+_DRIFT_DIR = stored_path("drift", FIXTURE_DIR)
 
 
 def _ensure_drift_store(spark: SparkSession) -> str:
     """Two deterministic parquet generations of the same logical table —
-    gen2 adds a column — written once under a fixed path (staging +
-    rename, same discipline as the stored indexes) so the DuckDB oracle
-    can DESCRIBE the identical files."""
+    gen2 adds a column — written once under a fixed path (a
+    catalog.stored_dir store) so the DuckDB oracle can DESCRIBE the
+    identical files."""
     from politician_etl_project_spark.catalog import ensure_built_dir
 
     def _build(staging: str) -> None:
@@ -856,37 +862,10 @@ def ensure_etl_fixtures() -> str:
     return d
 
 
-def _etl_warehouse_path(kind: str, fixture_dir: str) -> str:
-    """Where a built ETL fixture warehouse is cached: keyed on the staged
-    inputs AND an md5 of the code that builds it (the loaders, the upsert
-    table, the source parsers with the schemas and local-frame helper they
-    use, and this module), so a warehouse written by older code is never
-    served as this code's output."""
-    import glob
-    import hashlib
-
-    from politician_etl_project_spark.catalog import tmp_cache_key
-
-    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    builders = [
-        os.path.join(pkg, "etl.py"),
-        os.path.join(pkg, "operators", "upsert.py"),
-        os.path.join(pkg, "schemas.py"),
-        *sorted(glob.glob(os.path.join(pkg, "sources", "*.py"))),
-        os.path.abspath(__file__),
-    ]
-    h = hashlib.md5()
-    for path in builders:
-        with open(path, "rb") as fh:
-            h.update(fh.read())
-    key = tmp_cache_key(fixture_dir, version=h.hexdigest())
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_etl_{kind}_{key}")
-
-
 def _ensure_etl_warehouse(spark: SparkSession) -> str:
     """run_all over the staged chain, built once (staging + rename)."""
     from politician_etl_project_spark import etl
-    from politician_etl_project_spark.catalog import ensure_built_dir
+    from politician_etl_project_spark.catalog import stored_dir
 
     d = ensure_etl_fixtures()
 
@@ -904,7 +883,7 @@ def _ensure_etl_warehouse(spark: SparkSession) -> str:
             membership_doc=_ETL_MEMBERSHIPS,
         )
 
-    return ensure_built_dir(_etl_warehouse_path("wh", d), _build)
+    return stored_dir("etl_wh", d, (), _build)
 
 
 _ETL_ORACLE = """
@@ -1189,7 +1168,7 @@ def _ensure_etl_incremental_warehouse(spark: SparkSession) -> str:
     """Day-1 run_all, then the day-2 refresh re-running the individual
     loaders exactly as the reference's scripts are re-run daily."""
     from politician_etl_project_spark import etl
-    from politician_etl_project_spark.catalog import ensure_built_dir
+    from politician_etl_project_spark.catalog import stored_dir
 
     d1 = ensure_etl_fixtures()
     d2 = ensure_etl2_fixtures()
@@ -1215,7 +1194,7 @@ def _ensure_etl_incremental_warehouse(spark: SparkSession) -> str:
         etl.load_donations(wh, os.path.join(d2, "itcont.txt"))
         etl.load_committees(wh, _ETL_COMMITTEE_DOCS, _ETL2_MEMBERSHIPS)
 
-    return ensure_built_dir(_etl_warehouse_path("wh_inc", d2), _build)
+    return stored_dir("etl_wh_inc", d2, (), _build)
 
 
 _ETL_INC_ORACLE = """

@@ -1203,33 +1203,18 @@ def q_dedup_multi_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ingest_index_path(spark, sf_dir: str) -> str:
     """Build-once stored dedup-ingest index over the corpus slice
-    (doc_id %% 10 != 0), cached like the stored ANN indexes: keyed on the
-    source file fingerprint, staged + renamed so concurrent queries never
-    read a half-written index."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
+    (doc_id %% 10 != 0), a catalog.stored_dir store like the stored ANN
+    indexes: keyed on the source file fingerprint and the engine source,
+    staged + renamed so concurrent queries never read a half-written
+    index."""
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.operators.ingest import DedupIngestTable
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "unknown"
-    # v2: the store layout changed in r11 (one file per partition dir +
-    # prefix manifest) — new key so cached v1 stores rebuild
-    key = _hashlib.md5(f"{sf_dir}|ingest-v2|{fp}".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_{key}")
 
     def _build(staging: str) -> None:
         corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
         DedupIngestTable(spark, staging).initialize(corpus.select("doc_id", "text"))
 
-    from politician_etl_project_spark.catalog import ensure_built_dir
-
-    return ensure_built_dir(path, _build)
+    return stored_dir("ingest", sf_dir, ("documents.parquet",), _build)
 
 
 _INGEST_ORACLE = f"""

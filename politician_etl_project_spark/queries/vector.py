@@ -211,37 +211,20 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-kind algorithm versions live NEXT TO the algorithms they version
-# (operators/similarity.INDEX_ALGO_VERSION) so a plane-family or
-# training-loop edit cannot miss the bump; imported here for the /tmp
-# cache keys only.
-from politician_etl_project_spark.operators.similarity import (  # noqa: E402
-    INDEX_ALGO_VERSION as _INDEX_ALGO_VERSION,
-)
-
-
 def _stored_index_path(spark: SparkSession, sf_dir: str, kind: str, params: str, builder) -> str:
-    """Shared build-once stored-index cache (LSH / IVF / PQ): the key is
-    catalog.tmp_cache_key (abspath-normalized source fingerprint) plus
-    the index params and the per-kind algorithm version, so a
-    regenerated corpus or changed algorithm rebuilds instead of silently
-    serving stale data; the build stages into a sibling dir and renames
-    atomically so concurrent queries never read a half-written index —
-    and a FAILED build removes its staging dir instead of leaking one
-    per attempt.  ``builder(emb, staging)`` performs the actual build."""
-    import os
-    import tempfile
+    """Shared build-once stored-index cache (LSH / IVF / PQ): a
+    catalog.stored_dir store keyed on the embeddings fingerprint, the
+    index params and the engine source, so a regenerated corpus or a
+    changed algorithm rebuilds instead of silently serving stale data.
+    ``builder(emb, staging)`` performs the actual build."""
+    from politician_etl_project_spark.catalog import stored_dir
 
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
-
-    key = tmp_cache_key(
+    return stored_dir(
+        kind,
         sf_dir,
-        "embeddings.parquet",
-        version=f"{params}|{kind}-v{_INDEX_ALGO_VERSION[kind]}",
-    )
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_{key}")
-    return ensure_built_dir(
-        path, lambda staging: builder(load_table(spark, sf_dir, "embeddings"), staging)
+        ("embeddings.parquet",),
+        lambda staging: builder(load_table(spark, sf_dir, "embeddings"), staging),
+        params=params,
     )
 
 

@@ -614,17 +614,14 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once stored BM25 inverted index over documents (postings
     partitioned by term bucket + term dictionary + corpus scalars),
-    cached with the stored-ANN discipline."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
+    a catalog.stored_dir store like the stored ANN indexes."""
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.operators.textindex import build_text_index
 
-    key = tmp_cache_key(sf_dir, "documents.parquet", version="bm25-idx-v4")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_bm25_{key}")
-    return ensure_built_dir(
-        path,
+    return stored_dir(
+        "bm25",
+        sf_dir,
+        ("documents.parquet",),
         lambda staging: build_text_index(load_table(spark, sf_dir, "documents"), staging),
     )
 
@@ -660,24 +657,18 @@ def _extended_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     remaining 10% MERGED in via extend_text_index — cached as one
     artifact, so the cache holds an index that PASSED through the
     incremental-maintenance path."""
-    import os
-    import tempfile
-
-    from politician_etl_project_spark.catalog import ensure_built_dir, tmp_cache_key
+    from politician_etl_project_spark.catalog import stored_dir
     from politician_etl_project_spark.operators.textindex import (
         build_text_index,
         extend_text_index,
     )
-
-    key = tmp_cache_key(sf_dir, "documents.parquet", version="bm25-ext-v1")
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_bm25ext_{key}")
 
     def _build(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         build_text_index(docs.filter(F.col("doc_id") % 10 != 0), staging)
         extend_text_index(spark, staging, docs.filter(F.col("doc_id") % 10 == 0))
 
-    return ensure_built_dir(path, _build)
+    return stored_dir("bm25ext", sf_dir, ("documents.parquet",), _build)
 
 
 @declared_query(

@@ -27,3 +27,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+def run_in_package_copy(tmp_path: Path, code: str, edit=None) -> str:
+    """Copy the engine package under ``tmp_path``, apply ``edit(pkg_dir)``
+    and run ``code`` in a fresh interpreter that imports the copy;
+    returns its stdout.  A fresh process, because the engine reads its
+    own source once per process."""
+    import shutil
+    import subprocess
+
+    root = tmp_path / "pkgcopy"
+    pkg = root / "politician_etl_project_spark"
+    shutil.copytree(
+        REPO_ROOT / "politician_etl_project_spark", pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    if edit is not None:
+        edit(pkg)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": str(root)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    return out.stdout.strip()

@@ -332,16 +332,34 @@ def test_live_report_prunes_every_fact_scan(wh):
     assert fact_scans >= 3 and sponsored >= 1, plan
 
 
-def test_domain_store_key_covers_report_sql(monkeypatch, sf_dir):
+def test_domain_store_key_covers_report_sql(tmp_path, sf_dir):
     """The store holds the report's output, so its key covers the report
     SQL text: an edited ``_REPORT_SQL`` builds a new store instead of
-    serving the old answers."""
-    from politician_etl_project_spark.queries.serving import domain_store_path
+    serving the old answers.  The key follows the source file, so the
+    edit is made in a copy of the package."""
+    import hashlib
 
-    before = domain_store_path(sf_dir)
-    assert domain_store_path(sf_dir) == before
-    monkeypatch.setattr(metrics, "_REPORT_SQL", metrics._REPORT_SQL + "\n")
-    assert domain_store_path(sf_dir) != before
+    from politician_etl_project_spark.catalog import stored_path
+    from politician_etl_project_spark.queries import serving
+    from tests.conftest import run_in_package_copy
+
+    code = (
+        "import hashlib; from politician_etl_project_spark import catalog, metrics; "
+        "from politician_etl_project_spark.queries import serving; "
+        "print(hashlib.md5(metrics._REPORT_SQL.encode()).hexdigest(), "
+        f"catalog.stored_path('domain', {sf_dir!r}, *serving._DOMAIN_INPUTS))"
+    )
+
+    def edit_report_sql(pkg):
+        src = (pkg / "metrics.py").read_text()
+        assert src.count('_REPORT_SQL = """\n') == 1
+        (pkg / "metrics.py").write_text(src.replace('_REPORT_SQL = """\n', '_REPORT_SQL = """\n\n'))
+
+    before = stored_path("domain", sf_dir, *serving._DOMAIN_INPUTS)
+    assert stored_path("domain", sf_dir, *serving._DOMAIN_INPUTS) == before
+    sql_md5, after = run_in_package_copy(tmp_path, code, edit_report_sql).split()
+    assert sql_md5 != hashlib.md5(metrics._REPORT_SQL.encode()).hexdigest()
+    assert after != before
 
 
 def test_domain_store_equals_derivation(spark, sf_dir):

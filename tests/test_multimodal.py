@@ -1,4 +1,4 @@
-"""Multimodal operator tests: mapInPandas decode/resize/frame-sample
+"""Multimodal operator tests: mapInPandas decode/frame-sample
 plumbing against numpy references (the declared queries cover the
 oracle-checked paths; these cover the parts SQL can't express)."""
 
@@ -12,7 +12,6 @@ from politician_etl_project_spark.catalog import load_table
 from politician_etl_project_spark.operators.multimodal import (
     decode_real,
     pixel_stats,
-    resize_images,
     sample_frames,
     synthesize_media,
 )
@@ -150,25 +149,6 @@ def test_media_schema_and_kinds(media):
     assert bad == 0
 
 
-def test_resize_matches_numpy(spark, media):
-    got = {r["media_id"]: r for r in resize_images(media, 2, 2).collect()}
-    src = {
-        r["media_id"]: (bytes(r["payload"]), r["meta"]["width"], r["meta"]["height"])
-        for r in media.filter(F.col("kind") == "image").limit(20).collect()
-    }
-    assert src and set(src) <= set(got)
-    for mid, (payload, width, height) in src.items():
-        img = np.frombuffer(payload, dtype=np.uint8)[: width * height].reshape(height, width)
-        expected = [
-            int(cell.mean())
-            for row in np.array_split(img, 2, axis=0)
-            for cell in np.array_split(row, 2, axis=1)
-        ]
-        row = got[mid]
-        assert row["out_h"] == 2 and row["out_w"] == 2
-        assert [int(x) for x in row["pixels"].split(",")] == expected
-
-
 def test_frame_sample_counts(media):
     frames = sample_frames(media, every=2)
     per_media = {
@@ -195,23 +175,6 @@ def test_pixel_stats_prunes_payload_only_columns(media):
         .count()
     )
     assert joined == 0
-
-
-def test_udtf_frame_sampler_matches_mapinpandas(spark, sf_dir):
-    """The first-class @udtf tier (D4) must emit exactly the rows the
-    Arrow-batched mapInPandas tier emits — two execution surfaces, one
-    contract."""
-    from politician_etl_project_spark.operators.multimodal import (
-        sample_frames,
-        sample_frames_udtf,
-        synthesize_media,
-    )
-    from politician_etl_project_spark.catalog import load_table
-
-    media = synthesize_media(load_table(spark, sf_dir, "documents"))
-    a = sorted(map(tuple, sample_frames(media, every=2).collect()))
-    b = sorted(map(tuple, sample_frames_udtf(media, every=2).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_wav_truncation_raises_not_short_decode():

@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from politician_etl_project_spark.catalog import load_table
-from politician_etl_project_spark.operators.dedup import lsh_candidate_pairs, simhash16
+from politician_etl_project_spark.operators.dedup import (
+    _token_hashes_sql,
+    lsh_candidate_pairs,
+    simhash16_from_hashes,
+)
 from politician_etl_project_spark.operators.filters import build_predicate
 from politician_etl_project_spark.operators.similarity import (
     ann_lsh,
@@ -95,7 +99,8 @@ def test_lsh_pairs_symmetric_free(spark, sf_dir):
 
 def test_simhash_range(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    mm = docs.select(simhash16().alias("s")).agg(F.min("s"), F.max("s")).collect()[0]
+    s = simhash16_from_hashes(_token_hashes_sql("text")).alias("s")
+    mm = docs.select(s).agg(F.min("s"), F.max("s")).collect()[0]
     assert 0 <= mm[0] and mm[1] < 65536
 
 
@@ -1123,19 +1128,6 @@ def test_rollup_merge_bootstraps_without_build(spark, sf_dir, tmp_path):
     assert served == {(r[0], r[1]): r["n"] for r in full}
 
 
-def test_insert_if_absent_null_key_not_reappended(spark):
-    """NULL-safe anti join: a NULL key already present must block the
-    incoming NULL-key row, same grouping semantics as merge_keep."""
-    from politician_etl_project_spark.operators.upsert import insert_if_absent
-
-    existing = spark.createDataFrame([(None, "old"), (1, "a")], "k int, v string")
-    incoming = spark.createDataFrame([(None, "new"), (2, "b")], "k int, v string")
-    out = insert_if_absent(existing, incoming, ["k"]).collect()
-    assert sorted(((r.k, r.v) for r in out), key=str) == sorted(
-        [(None, "old"), (1, "a"), (2, "b")], key=str
-    )
-
-
 def test_merge_keep_rejects_reserved_columns(spark):
     from politician_etl_project_spark.operators.upsert import merge_keep
 
@@ -1200,35 +1192,6 @@ def test_with_salt_spreads_identical_rows(spark):
         hot, ["key"], [F.sum("x").alias("sx")], [F.sum("sx").alias("sum_x")], n_salts=8
     ).collect()
     assert out == [("k", 4000)] or (out[0]["key"], out[0]["sum_x"]) == ("k", 4000)
-
-
-def test_resize_degenerate_payloads_skip_not_crash(spark):
-    """Images smaller than the pooling grid (or with truncated
-    payloads) must not abort the job: tiny images nearest-neighbor
-    upsample, empty ones are skipped."""
-    from politician_etl_project_spark.operators.multimodal import resize_images
-    from pyspark.sql.types import (
-        BinaryType, IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    schema = StructType([
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("meta", StructType([
-            StructField("width", IntegerType()), StructField("height", IntegerType()),
-        ])),
-    ])
-    rows = [
-        (1, "image", bytes(range(8)), (8, 1)),    # 1 pixel row < out_h=2
-        (2, "image", b"", (4, 0)),                # empty: skipped
-        (3, "image", bytes(range(6)), (4, 4)),    # truncated: 1 complete row
-        (4, "image", bytes(range(16)), (4, 4)),   # normal
-    ]
-    media = spark.createDataFrame(rows, schema)
-    got = {r.media_id: r.pixels for r in resize_images(media, 2, 2).collect()}
-    assert set(got) == {1, 3, 4}
-    assert got[4] == "2,3,10,11" or len(got[4].split(",")) == 4
 
 
 def test_with_salt_deterministic_across_actions(spark, tmp_path):

@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from politician_etl_project_spark.operators.skew import salted_agg, salted_broadcast_left
-from politician_etl_project_spark.operators.upsert import insert_if_absent, merge_keep
+from politician_etl_project_spark.operators.upsert import merge_keep
 from tests.oracle_utils import segment_dedup_reference
 
 rows_strategy = st.lists(
@@ -66,29 +66,6 @@ def test_merge_precedence(spark, existing, incoming):
         # survivor must come from the precedent side (any of its rows)
         assert tuple(update_wins[k])[1:] in {r[1:] for r in incoming if r[0] == k}
         assert tuple(first_wins[k])[1:] in {r[1:] for r in existing if r[0] == k}
-
-
-@given(existing=rows_strategy, incoming=rows_strategy)
-@settings(**_SETTINGS)
-def test_insert_if_absent_never_mutates_existing(spark, existing, incoming):
-    e = _df(spark, existing, 3)
-    i = _df(spark, incoming, 3)
-    out = insert_if_absent(e, i, ["k"]).collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r.k, []).append(tuple(r))
-    for r in existing:
-        # every existing row survives verbatim
-        assert tuple(r) in out_set(out)
-    e_keys = {r[0] for r in existing}
-    for k, rows in by_key.items():
-        if k in e_keys:
-            # no incoming row joined an existing key
-            assert all(t in {tuple(r) for r in existing} for t in rows)
-
-
-def out_set(rows):
-    return {tuple(r) for r in rows}
 
 
 @given(rows=rows_strategy, n_salts=st.sampled_from([2, 8]))

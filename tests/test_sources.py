@@ -473,6 +473,35 @@ def test_jdbc_roundtrip_derby(spark, tmp_path):
     assert "PushedFilters" in plan and "o_orderstatus" in plan, plan
 
 
+def test_src_jdbc_removes_derby_db_at_exit():
+    """q_src_jdbc's process-local Derby database is gone once its
+    process exits: no ``spark_graft_derby_<pid>_*`` directory is left
+    behind per process."""
+    import glob
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from tests.conftest import REPO_ROOT, SF_SMALL
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_derby_{}_*")
+    code = (
+        "import glob, os\n"
+        "from politician_etl_project_spark.session import get_spark\n"
+        "from politician_etl_project_spark.queries.sources_decl import q_src_jdbc\n"
+        f"q_src_jdbc(get_spark('derby-exit'), {SF_SMALL!r}).collect()\n"
+        f"print(os.getpid(), len(glob.glob({pattern!r}.format(os.getpid()))))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO_ROOT, capture_output=True, text=True,
+        check=True, timeout=600,
+    )
+    pid, n_live = out.stdout.split()[-2:]
+    assert n_live == "1"  # the database existed while the process ran
+    assert glob.glob(pattern.format(pid)) == []
+
+
 def test_probe_ids_stops_after_misses():
     from politician_etl_project_spark.sources import staging
 

@@ -632,6 +632,67 @@ def test_ensure_built_dir_lost_race_is_benign(tmp_path):
     assert leftovers == [], f"staging leaked: {leftovers}"
 
 
+def test_store_path_follows_engine_source(tmp_path):
+    """Every build-once store is keyed on the engine source: a copy of
+    the package at another location keys the same, and one appended byte
+    in a build module gives the BM25 index store a new path."""
+    from politician_etl_project_spark import catalog
+    from tests.conftest import run_in_package_copy
+
+    code = (
+        "from politician_etl_project_spark import catalog; "
+        f"print(catalog.engine_digest(), catalog.stored_path('bm25', {SF_SMALL!r}, 'documents.parquet'))"
+    )
+    here = [catalog.engine_digest(), catalog.stored_path("bm25", SF_SMALL, "documents.parquet")]
+    assert run_in_package_copy(tmp_path / "same", code).split() == here
+
+    def touch_build_module(pkg):
+        with open(pkg / "operators" / "textindex.py", "a") as fh:
+            fh.write("\n")
+
+    digest, path = run_in_package_copy(tmp_path / "edited", code, touch_build_module).split()
+    assert digest != here[0] and path != here[1]
+    assert path.startswith(here[1].rsplit("_", 1)[0] + "_")  # same spark_graft_bm25_ prefix
+
+
+def test_schema_evolution_torn_build_publishes_nothing(spark, tmp_path, monkeypatch):
+    """The evolve store is written by two jobs; a build that dies between
+    them must publish nothing (the first write alone is a half store of
+    even doc_ids), and the next call builds the whole store."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from politician_etl_project_spark.catalog import stored_path
+    from politician_etl_project_spark.queries.analytics_ext import q_schema_evolution
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(os.path.join(SF_SMALL, "documents.parquet"), sf / "documents.parquet")
+    path = stored_path("evolve", str(sf), "documents.parquet")
+    real = DataFrameWriter.parquet
+    writes = []
+
+    def die_after_first_write(self, target, *args, **kwargs):
+        if writes:
+            raise RuntimeError("killed between the two writes")
+        writes.append(target)
+        return real(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", die_after_first_write)
+    try:
+        with pytest.raises(RuntimeError, match="between the two writes"):
+            q_schema_evolution(spark, str(sf))
+        assert writes and glob.glob(path + "*") == []
+        monkeypatch.undo()
+        rows = q_schema_evolution(spark, str(sf)).collect()
+        assert sum(r.n_docs for r in rows) == load_table(spark, str(sf), "documents").count()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def test_snapshot_stats_survive_compact(spark, tmp_path):
     """compact() on a stats_cols instance re-collects stats for the
     rewritten files; on a plain instance the compacted files carry no

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from politician_etl_project_spark.catalog import load_table
-from politician_etl_project_spark.operators.upsert import ParquetUpsertTable, latest_watermark
+from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
 from politician_etl_project_spark.streaming import (
     dedup_stream,
     events_stream,
@@ -204,7 +204,6 @@ def test_incremental_upsert_foreachbatch(spark, staged_events, tmp_path):
     # records_updated = rows ACTUALLY inserted (replay logs 0), so the
     # log total equals the table's distinct rows, not raw batch sizes
     assert log.agg(F.sum("records_updated")).collect()[0][0] == n_unique
-    assert latest_watermark(log, "events") is not None
 
 
 def test_interval_join_stream_matches_batch(spark, staged_events, tmp_path):

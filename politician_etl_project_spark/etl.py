@@ -7,17 +7,19 @@ The reference runs four pandas scripts sequentially against Postgres.
 Here the whole flow is a DAG of DataFrame jobs over a parquet
 :class:`Warehouse`.  Each loader only transforms its source and hands
 the batch to :meth:`Warehouse.upsert`; how a table is written lives in
-one place, ``operators.upsert.ParquetUpsertTable.upsert``: the
-reference's conflict policies (update-wins / first-wins) as a
-deterministic key-dedup merge, one row per natural key from the first
-write on (the reference's UNIQUE constraints), and for the three
-dimensions a surrogate id that is dense on the first load and never
-moves afterwards (SURVEY §7 hard-parts 1-2).
+one place, ``storage.SnapshotTable.upsert``: the reference's conflict
+policies (update-wins / first-wins) as a deterministic key-dedup merge,
+one row per natural key from the first write on (the reference's UNIQUE
+constraints), and for the three dimensions a surrogate id that is dense
+on the first load and never moves afterwards (SURVEY §7 hard-parts 1-2).
 
-Each rewrite publishes the table's schema file beside its data and
-counts the rows it writes (``DataFrame.observe``), so the ``update_log``
-row and the loaders' dimension reads (``Warehouse.read``) cost no job of
-their own: a batch's jobs are the ones that move its rows.
+Each write publishes a new version whose manifest lists its files and
+records its schema and the row count the write job observed
+(``DataFrame.observe``), so the ``update_log`` row and the loaders'
+dimension reads (``Warehouse.read``) cost no job of their own: a batch's
+jobs are the ones that move its rows.  A write that fails leaves the
+prior version live; after each write the table is vacuumed to its
+newest version, so the warehouse holds one copy of each table.
 
 Fact tables carry their natural keys (congress_id, bill_key,
 fec_filing_id) alongside the surrogate ints, so id resolution is a
@@ -27,9 +29,8 @@ byte-identical warehouse (tested in tests/test_etl.py).
 
 Scale: each step is one or two shuffles (the upsert's key dedup).  Dims
 (politicians, committees) broadcast in every resolution join; only
-donations/votes shuffle at fact scale.  At 100 TB the warehouse tables
-would be partitioned by congress / date and the upsert rewrite becomes a
-partition-scoped MERGE, same plan shape.
+donations/votes shuffle at fact scale.  Each upsert rewrites the whole
+table, so its cost follows the table, not the delta.
 """
 
 from __future__ import annotations
@@ -39,13 +40,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from politician_etl_project_spark.operators.upsert import ParquetUpsertTable, log_update
+from politician_etl_project_spark.operators.upsert import log_update
 from politician_etl_project_spark.sources import bills_xml, committees_yaml, fec, members, votes_json
+from politician_etl_project_spark.storage import SnapshotTable
 
 
 class Warehouse:
-    """The reference's 8-table star schema as managed parquet upsert
-    tables (sql/creations.sql; app/models.py:11-148), plus update_log."""
+    """The reference's 8-table star schema as managed tables
+    (``SnapshotTable``; sql/creations.sql; app/models.py:11-148), plus
+    update_log."""
 
     KEYS = {
         "politicians": ["congress_id"],                       # UNIQUE, models.py:14
@@ -72,13 +75,13 @@ class Warehouse:
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.tables = {
-            name: ParquetUpsertTable(
+            name: SnapshotTable(
                 spark, os.path.join(root, name), keys, id_col=self.IDS.get(name)
             )
             for name, keys in self.KEYS.items()
         }
 
-    def __getitem__(self, name: str) -> ParquetUpsertTable:
+    def __getitem__(self, name: str) -> SnapshotTable:
         return self.tables[name]
 
     def read(self, name: str) -> DataFrame:
@@ -86,14 +89,19 @@ class Warehouse:
 
     def log(self, table_name: str, n: int, notes: str | None = None) -> None:
         log_update(self.spark, self.tables["update_log"], table_name, n, notes=notes)
+        self.tables["update_log"].vacuum(keep_last=1)
 
     def upsert(self, name: str, fresh: DataFrame, update_wins: bool) -> DataFrame:
         """One loader step's write: upsert ``fresh`` into table ``name``
-        under the table's own policy, log the table's row count (counted
-        by the rewrite itself) to ``update_log`` and return the published
-        table (a read pinned to its schema file: no job)."""
-        self.log(name, self.tables[name].upsert(fresh, update_wins=update_wins))
-        return self.read(name)
+        under the table's own policy, log the table's row count (recorded
+        in the new version's manifest by the write itself) to
+        ``update_log`` and return the published table (a read pinned to
+        its manifest: no job)."""
+        tbl = self.tables[name]
+        version = tbl.upsert(fresh, update_wins=update_wins)
+        tbl.vacuum(keep_last=1)
+        self.log(name, tbl.row_count(version))
+        return tbl.read()
 
 
 # Enrichment columns written by a later pass (link_fec_ids): a plain
@@ -113,7 +121,7 @@ def load_politicians(wh: Warehouse, records: list[dict]) -> DataFrame:
         members.members_df(wh.spark, records), members.state_lookup(wh.spark)
     )
     tbl = wh["politicians"]
-    if tbl.exists():
+    if tbl.current_version() is not None:
         existing = tbl.read().drop("politician_id")
         # schema evolution (S15 analog): later passes (link_fec_ids) widen
         # the dim; align fresh rows with typed nulls before the merge
@@ -142,12 +150,13 @@ def link_fec_ids(wh: Warehouse, cn: DataFrame, ccl: DataFrame) -> DataFrame:
     onto the dim."""
     pol = wh.read("politicians")
     linked = fec.fuzzy_link_politicians(pol, fec.link_candidates(cn, ccl))
-    n_linked = linked.count()  # materialize BEFORE the dim rewrite deletes its input files
+    n_linked = linked.count()  # count BEFORE the vacuum after the rewrite deletes its input files
     enriched = (
         pol.drop("fec_candidate_id", "fec_committee_id")
         .join(F.broadcast(linked.drop("score")), "politician_id", "left")
     )
     wh["politicians"].overwrite(enriched)
+    wh["politicians"].vacuum(keep_last=1)
     wh.log("politicians", n_linked, notes="fec_link")
     return wh.read("politicians")
 

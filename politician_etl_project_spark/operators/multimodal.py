@@ -2260,18 +2260,12 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
     Ineligible or errored payloads transparently fall back to the
     scalar `_decode_jpeg` (identical semantics, including its
     descriptive ValueErrors), so this is a pure fast path."""
-    import time as _time
-
-    _t = {"parse": 0.0, "group": 0.0, "assemble": 0.0, "step": 0.0, "scatter": 0.0, "recon": 0.0}
-    _t0 = _time.perf_counter()
     _tune_worker_malloc()
     results: list = [None] * len(payloads)
     parsed = []
     for i, p in enumerate(payloads):
         pr = _parse_jpeg_lockstep(p)
         parsed.append(pr)
-    _t["parse"] = _time.perf_counter() - _t0
-    _t0 = _time.perf_counter()
 
     # group streams across payloads: key -> stream metadata
     groups: dict[tuple, dict] = {}
@@ -2393,8 +2387,6 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
                     {"payload": i, "scan": si, "bounds": sc["bounds"], "mcu0": blk0, "nblk": nblk}
                 )
 
-    _t["group"] = _time.perf_counter() - _t0
-    _t0 = _time.perf_counter()
     # run each group's lockstep machine and scatter into payload grids
     grids_by_payload: dict[int, dict[int, np.ndarray]] = {}
     failed: set[int] = set()
@@ -2446,8 +2438,6 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
         for ci in range(ntab):
             pat_dc[g["pat_comp"] == ci] = 2 * ci
             pat_ac[g["pat_comp"] == ci] = 2 * ci + 1
-        _t["assemble"] += _time.perf_counter() - _t0
-        _t0 = _time.perf_counter()
         coef, err = _lockstep_scan_run(
             flat,
             base,
@@ -2464,8 +2454,6 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
             g["se"],
             g["al"],
         )
-        _t["step"] += _time.perf_counter() - _t0
-        _t0 = _time.perf_counter()
         for p_i in np.unique(pay[err]):
             failed.add(int(p_i))
         # scatter: block j of stream s lands at mcu = mcu0 + j//bpm,
@@ -2518,11 +2506,7 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
                         grid[gy, gx, 0] = blk_s[cm, 0]
                     else:
                         grid[gy, gx] = blk_s[cm]
-        _t["scatter"] += _time.perf_counter() - _t0
-        _t0 = _time.perf_counter()
 
-    _t["scatter"] += _time.perf_counter() - _t0
-    _t0 = _time.perf_counter()
     # reconstruct stays PER PAYLOAD on purpose: a single payload's
     # planes fit in L2, so the float64 dequant/IDCT/color passes never
     # stream DRAM — a row-concatenated batch variant measured 3-6x
@@ -2533,11 +2517,6 @@ def decode_jpeg_batch(payloads: list[bytes]) -> list[np.ndarray]:
             results[i] = _decode_jpeg(payloads[i])
         else:
             results[i] = _jpeg_reconstruct(pr["frame"], pr["quant"], grids_by_payload[i])
-    _t["recon"] = _time.perf_counter() - _t0
-    import os
-
-    if os.environ.get("JPEG_BATCH_TIMING"):
-        print("batch phases:", {k: round(v, 3) for k, v in _t.items()})
     return results
 
 

@@ -9,8 +9,8 @@ delta batch folds in by:
 
 1. aggregating the delta alone (one shuffle over O(delta) rows),
 2. reading ONLY the store buckets the delta touches (partition-pruned
-   scan — the touched-bucket list is O(buckets), collected like
-   ParquetUpsertTable's touched-partition list),
+   scan — the touched-bucket list is O(buckets), collected to the
+   driver),
 3. re-aggregating store-partials ∪ delta-partials for those buckets and
    dynamic-partition-overwriting just those directories.
 

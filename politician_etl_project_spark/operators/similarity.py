@@ -233,8 +233,8 @@ def build_lsh_index(
     if bucketed.isEmpty():
         # a partitioned write of zero rows emits no data files at all —
         # the sidecar alone carries the schema, so probes return a typed
-        # empty frame and the FIRST extend takes the fresh partitioned
-        # write path (a flat empty file here would leave a mixed
+        # empty frame and the FIRST extend appends the first bucket=
+        # directories (a flat empty file here would leave a mixed
         # flat+partitioned layout after extend, bricking every read)
         _write_index_meta(path, meta)
         return
@@ -250,44 +250,33 @@ def extend_lsh_index(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    validate_new: bool = True,
 ) -> None:
     """Incremental index maintenance: append NEW vectors to a stored LSH
-    index, rewriting only the bucket partitions the batch lands in
-    (partition-scoped MERGE via ParquetUpsertTable) — a 100-vector batch
-    against a billion-vector index touches ≤ 100 directories, not the
-    index.
+    index.  The batch is written with ``partitionBy("bucket")`` in append
+    mode, so it adds files to the bucket directories it lands in and
+    never rewrites a stored file — a 100-vector batch against a
+    billion-vector index touches ≤ 100 directories, not the index.
 
     Contract: incoming ids must be NEW.  A *changed* embedding can move
     to a different hyperplane bucket, and removing it from its old bucket
     would require scanning every partition (the old bucket is unknown) —
     exactly the pruning this layout exists to keep.  Production systems
-    handle re-embeds with delete bitmaps or periodic rebuild; here
-    ``validate_new=True`` enforces the contract with one column-pruned id
-    scan (flip it off when id discipline — e.g. monotonically growing doc
-    ids — makes the check redundant at scale)."""
+    handle re-embeds with delete bitmaps or periodic rebuild; here one
+    column-pruned id scan refuses a batch that holds an indexed id, and
+    the batch itself keeps one row per id."""
     import os
 
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-    from politician_etl_project_spark.storage import write_partitioned
+    from politician_etl_project_spark.operators.upsert import dedup_keys
 
     _check_index_meta(index_path, "lsh", n_planes=n_planes, dim=dim)
-    bucketed = new_emb.withColumn("bucket", hyperplane_bits(vec_col, n_planes, dim))
-    # an index with no bucket= partitions yet (built from an empty
-    # corpus: sidecar only) takes the fresh partitioned-write path — the
-    # MERGE's dynamic overwrite would otherwise interleave bucket= dirs
-    # with nothing to merge against
-    has_parts = os.path.isdir(index_path) and any(
-        fn.startswith("bucket=") for fn in os.listdir(index_path)
+    bucketed = dedup_keys(
+        new_emb.withColumn("bucket", hyperplane_bits(vec_col, n_planes, dim)), [id_col]
     )
-    if not has_parts:
-        if not bucketed.isEmpty():
-            meta = _read_index_meta(index_path)  # before the dir overwrite
-            write_partitioned(bucketed, index_path, ["bucket"])
-            if meta is not None:
-                _write_index_meta(index_path, meta)
-        return
-    if validate_new:
+    # an index built from an empty corpus holds only its sidecar: there
+    # is nothing to clash with, and no parquet to scan for ids
+    if os.path.isdir(index_path) and any(
+        fn.startswith("bucket=") for fn in os.listdir(index_path)
+    ):
         existing = spark.read.parquet(index_path).select(id_col)
         clash = existing.join(bucketed.select(id_col), id_col, "semi").limit(1).collect()
         if clash:
@@ -295,10 +284,8 @@ def extend_lsh_index(
                 f"extend_lsh_index: id {clash[0][id_col]} already indexed — "
                 "changed embeddings need a rebuild (bucket may move), not an extend"
             )
-    table = ParquetUpsertTable(
-        spark, index_path, keys=["bucket", id_col], partition_cols=["bucket"]
-    )
-    table.upsert(bucketed, update_wins=True)
+    bucketed.write.mode("append").partitionBy("bucket").parquet(index_path)
+    spark.catalog.refreshByPath(index_path)
 
 
 def ann_lsh_indexed(

@@ -136,7 +136,8 @@ def extend_text_index(
 ) -> list[int]:
     """Incrementally MERGE a batch of NEW documents into a stored BM25
     index, rewriting ONLY the term buckets the batch touches — the
-    inverted-index twin of similarity.extend_lsh_index.  Returns the
+    inverted-index twin of similarity.extend_lsh_index (whose buckets
+    only gain files, since LSH postings never merge).  Returns the
     touched bucket ids.
 
     Cost contract (100 TB): new postings are one token shuffle over the

@@ -16,20 +16,18 @@ where the dedup keeps the incoming row (update-wins) or the existing row
 
 Scale: the rewrite is one shuffle on the natural key.  On a real lake the
 same functions feed ``MERGE INTO`` (Delta/Iceberg) via foreachBatch; the
-precedence logic is identical.  Parquet table rewrites are
-write-temp-then-swap so a failed job never corrupts the table.
+precedence logic is identical.  The managed table that applies them is
+``storage.SnapshotTable``: its ``upsert`` stages the merged rows and
+publishes them as a new version, so a failed job never changes the
+table.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from politician_etl_project_spark.storage import SnapshotTable
 
 _INCOMING = 0
 _EXISTING = 1
@@ -81,289 +79,6 @@ def dedup_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     value_cols = [c for c in df.columns if c not in keys] or list(keys)
     w = Window.partitionBy(*keys).orderBy(*[F.asc(c) for c in value_cols])
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-SCHEMA_FILE = "_schema.json"
-
-
-def _as_nullable(t: DataType) -> DataType:
-    """``t`` with every field, element and map value nullable: the schema
-    a parquet read reports for data written with ``t``."""
-    if isinstance(t, StructType):
-        return StructType(
-            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t]
-        )
-    if isinstance(t, ArrayType):
-        return ArrayType(_as_nullable(t.elementType), True)
-    if isinstance(t, MapType):
-        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
-    return t
-
-
-class ParquetUpsertTable:
-    """A tiny managed-table abstraction over a parquet directory with the
-    reference's three write modes: append (S11), upsert (S12/S13 via
-    merge_keep), overwrite (S14 TRUNCATE+reload).  Rewrites stage to a
-    temp dir then swap, so readers never see a half-written table.
-
-    With ``partition_cols`` the table is directory-partitioned and
-    ``upsert`` becomes a Delta-style partition-scoped MERGE: only the
-    partitions containing incoming keys are read (partition-pruned scan,
-    plan-asserted in tests/test_storage.py) and rewritten (dynamic
-    partition overwrite) — at 100 TB an incremental batch touching one
-    congress/day rewrites that slice, not the table.
-
-    With ``id_col`` the table owns a surrogate id beside its natural
-    ``keys`` (S18): ``upsert`` assigns dense ids on the first write and
-    keeps every published id on later ones (:func:`stable_ids`); an id
-    column in the incoming batch is ignored.
-
-    Every rewrite publishes the table's schema beside its data, in
-    ``_schema.json`` (the underscore keeps it out of Spark's file index,
-    like ``_SUCCESS``), staged with the data so both swap in together.
-    ``read`` pins that schema and starts no job; without it (a table
-    written by older code) every ``spark.read.parquet`` runs a footer
-    job to infer one.  An append or a MERGE whose rows do not fit the
-    published schema is refused, as ``SnapshotTable.append`` refuses it:
-    a read pinned to a stale schema would null the divergent columns.
-    A full rewrite counts its rows as it writes them
-    (``DataFrame.observe``), so ``upsert`` returns the table's row count
-    without another job."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        keys: list[str],
-        partition_cols: list[str] | None = None,
-        id_col: str | None = None,
-    ):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-        self.partition_cols = list(partition_cols or [])
-        self.id_col = id_col
-        # The partition-scoped MERGE reads only partitions the batch
-        # touches, so a merge key must never move between partitions —
-        # otherwise the same key could live in a touched AND an untouched
-        # partition and the rewrite would duplicate it.  Requiring
-        # partition_cols ⊆ keys makes that impossible by construction
-        # (the partition value is part of the key identity) — the same
-        # contract Delta users follow to get partition-pruned MERGEs.
-        stray = [c for c in self.partition_cols if c not in keys]
-        if stray:
-            raise ValueError(
-                f"partition_cols must be a subset of keys (got extra {stray}): "
-                "a key changing partitions would silently duplicate under "
-                "partition-scoped MERGE"
-            )
-        # stable ids read the whole prior key -> id map; a partition-scoped
-        # MERGE reads only the touched slice, so it could reissue an id
-        if id_col is not None and self.partition_cols:
-            raise ValueError("id_col cannot be combined with partition_cols")
-        self._recover()
-
-    def _recover(self) -> None:
-        """Crash recovery for ``_swap_write``: if a previous process died
-        after renaming the live dir aside but before publishing staging,
-        the `.old` dir is the last good table — restore it.  If both the
-        live dir and `.old` exist, the swap published successfully and
-        `.old` is garbage."""
-        old = self.path + ".old"
-        if not os.path.isdir(old):
-            return
-        if os.path.isdir(self.path):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.replace(old, self.path)
-
-    def exists(self) -> bool:
-        self._recover()
-        if not os.path.isdir(self.path):
-            return False
-        for _root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    def published_schema(self) -> StructType | None:
-        """The published schema, or None when the table has no schema
-        file (never written, or written by older code)."""
-        try:
-            with open(os.path.join(self.path, SCHEMA_FILE)) as fh:
-                return StructType.fromJson(json.load(fh))
-        except (OSError, ValueError):
-            return None
-
-    def _published(self, df: DataFrame) -> StructType:
-        """The schema a parquet read reports for ``df`` written here:
-        all nullable, partition columns last."""
-        fields = [f for f in df.schema if f.name not in self.partition_cols]
-        fields += [df.schema[c] for c in self.partition_cols]
-        return _as_nullable(StructType(fields))
-
-    def _write_schema(self, root: str, df: DataFrame) -> None:
-        fd, tmp = tempfile.mkstemp(dir=root, prefix="_schema_", suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(self._published(df).json())
-        os.replace(tmp, os.path.join(root, SCHEMA_FILE))
-
-    def _check_fits(self, df: DataFrame) -> None:
-        """Refuse rows that would land beside the published files with
-        another shape (column names and types; order and nullability
-        are free — parquet columns resolve by name)."""
-        want = self.published_schema()
-        if want is None:
-            return
-        got = self._published(df)
-        if {f.name: f.dataType for f in got} != {f.name: f.dataType for f in want}:
-            raise ValueError(
-                f"rows {got.simpleString()} do not match the schema of "
-                f"{self.path}, {want.simpleString()}; use overwrite() for "
-                "schema changes"
-            )
-
-    def read(self) -> DataFrame:
-        schema = self.published_schema()
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(self.path)
-
-    def append(self, df: DataFrame) -> None:
-        self._check_fits(df)
-        first = not self.exists()
-        df.write.mode("append").parquet(self.path)
-        if first:
-            self._write_schema(self.path, df)
-
-    def overwrite(self, df: DataFrame) -> int:
-        return self._swap_write(df)
-
-    def upsert(self, df: DataFrame, update_wins: bool = True) -> int | None:
-        """Returns the rows written: the table's row count after a full
-        rewrite, None after a partition-scoped MERGE (it writes only the
-        touched slice, so the table's size is not observed)."""
-        if self.id_col is not None:
-            df = df.drop(self.id_col)
-        if not self.exists():
-            # enforce one-row-per-key from the FIRST write: in-batch
-            # duplicate keys written raw would survive forever under
-            # partition-scoped MERGE (later batches never re-read
-            # untouched partitions to heal them — hypothesis-caught), and
-            # a duplicate key given two ids keeps both through every
-            # later stable_ids join
-            first = dedup_keys(df, self.keys)
-            if self.id_col is not None:
-                first = stable_ids(first, None, self.keys, self.id_col)
-            return self._swap_write(first)
-        if self.partition_cols:
-            self._merge_partitions(df, update_wins)
-            return None
-        if self.id_col is None:
-            merged = merge_keep(self.read(), df, self.keys, update_wins=update_wins)
-        else:
-            prior = self.read()
-            merged = stable_ids(
-                merge_keep(prior.drop(self.id_col), df, self.keys, update_wins=update_wins),
-                prior.select(*self.keys, self.id_col),
-                self.keys,
-                self.id_col,
-            )
-        return self._swap_write(merged)
-
-    def _touched_existing(self, df: DataFrame) -> DataFrame:
-        """The existing rows the MERGE must consider: only partitions the
-        incoming batch touches.  The IN-list lands on partition columns,
-        so the scan prunes directories (PartitionFilters) — the table-size
-        part of the table is never read."""
-        touched = [tuple(r) for r in df.select(*self.partition_cols).distinct().collect()]
-        if not touched:
-            return self.read().filter(F.lit(False))
-        if len(self.partition_cols) == 1 and not any(t[0] is None for t in touched):
-            # plain IN-list: folds into the scan's PartitionFilters
-            pred = F.col(self.partition_cols[0]).isin([t[0] for t in touched])
-        else:
-            # null-safe conjunctions: a NULL partition value must still
-            # select its __HIVE_DEFAULT_PARTITION__ directory
-            pred = F.lit(False)
-            for t in touched:
-                conj = F.lit(True)
-                for c, v in zip(self.partition_cols, t):
-                    conj = conj & F.col(c).eqNullSafe(F.lit(v))
-                pred = pred | conj
-        return self.read().filter(pred)
-
-    def _merge_partitions(self, df: DataFrame, update_wins: bool) -> None:
-        """Partition-scoped MERGE: merge incoming with the touched
-        partitions only, stage the merged slice, then dynamic-partition
-        overwrite — untouched partition directories are not rewritten
-        (file-level asserted in tests/test_storage.py).  Commit is
-        per-partition-directory (dynamic overwrite), so a crash can leave
-        a prefix of the touched partitions updated — each directory still
-        complete; re-running the same batch converges (idempotent MERGE)."""
-        merged = merge_keep(
-            self._touched_existing(df), df, self.keys, update_wins=update_wins
-        )
-        self._check_fits(merged)
-        staging = tempfile.mkdtemp(prefix="upsert-slice-", dir=os.path.dirname(self.path) or ".")
-        try:
-            # materialize BEFORE overwriting: the merged plan reads the very
-            # files dynamic overwrite will replace
-            merged.write.mode("overwrite").parquet(staging)
-            (
-                self.spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_cols)
-                .parquet(self.path)
-            )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        self.spark.catalog.refreshByPath(self.path)
-
-    def compact(self, target_files: int = 1) -> int:
-        """Small-files maintenance: rewrite the table into `target_files`
-        parquet files per partition (incremental appends leave one file
-        per batch — S11 — and scan planning degrades with file count at
-        scale).  Returns the file count before compaction (recursive —
-        partitioned tables keep their files under partition dirs)."""
-        before = sum(
-            1
-            for _root, _dirs, files in os.walk(self.path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        self._swap_write(self.read().coalesce(target_files))
-        return before
-
-    def _swap_write(self, df: DataFrame) -> int:
-        """Atomic-enough publish: write staging (data, then its schema
-        file), rename live aside to `.old`, rename staging into place,
-        then drop `.old`.  A crash at any point leaves either the old
-        table live or recoverable from `.old` (``_recover``) — never a
-        window where the published path is simply gone (the old version
-        rmtree'd the live dir first).  Returns the rows written, counted
-        by the write job itself."""
-        staging = tempfile.mkdtemp(prefix="upsert-", dir=os.path.dirname(self.path) or ".")
-        written = Observation()
-        try:
-            writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-            if self.partition_cols:
-                writer = writer.partitionBy(*self.partition_cols)
-            writer.parquet(staging)
-            self._write_schema(staging, df)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)  # garbage from a crash after a prior publish
-        if os.path.isdir(self.path):
-            os.replace(self.path, old)
-        os.replace(staging, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        # drop the session FileStatusCache entry for this path — readers
-        # created after the swap must list the new part files
-        self.spark.catalog.refreshByPath(self.path)
-        return written.get["rows"]
 
 
 def surrogate_ids(
@@ -469,7 +184,7 @@ def stable_ids(
 
 def log_update(
     spark: SparkSession,
-    table: ParquetUpsertTable | None,
+    table: SnapshotTable | None,
     table_name: str,
     n: int,
     status: str = "success",

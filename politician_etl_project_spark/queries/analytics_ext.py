@@ -621,8 +621,8 @@ ORDER BY lang, source
     "read back, and aggregated; the oracle aggregates the original "
     "parquet, so the hash proves the roundtrip is lossless.  The "
     "payload column is pruned before the write — format conversion "
-    "jobs should never carry columns the consumer won't read.  Write "
-    "is stage-then-swap idempotent like ParquetUpsertTable.overwrite.",
+    "jobs should never carry columns the consumer won't read.  The "
+    "write overwrites one keyed path, so a rerun replaces it.",
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1832,7 +1832,7 @@ def _time_travel_path(spark: SparkSession, sf_dir: str) -> str:
         )
         v2_cut = F.lit(_TT_V2_CUT).cast("timestamp")
         v3_cut = F.lit(_TT_V3_CUT).cast("timestamp")
-        t = SnapshotTable(spark, staging)
+        t = SnapshotTable(spark, staging, keys=["o_orderkey"])
         t.overwrite(orders.filter(F.col("o_orderdate") < v2_cut))
         t.append(
             orders.filter(
@@ -1842,8 +1842,7 @@ def _time_travel_path(spark: SparkSession, sf_dir: str) -> str:
         t.upsert(
             orders.filter(
                 (F.col("o_orderdate") < v2_cut) & (F.col("o_orderkey") % 5 == 0)
-            ).withColumn("o_totalprice", F.col("o_totalprice") * 2),
-            keys=["o_orderkey"],
+            ).withColumn("o_totalprice", F.col("o_totalprice") * 2)
         )
 
     return stored_dir("snap", sf_dir, ("orders.parquet",), _build)

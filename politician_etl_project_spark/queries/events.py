@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from politician_etl_project_spark.catalog import load_table
 from politician_etl_project_spark.functions.scalar import money
 from politician_etl_project_spark.queries.registry import declared_query
+from politician_etl_project_spark.storage import SnapshotTable
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _DUCK_TS_FMT = "%Y-%m-%d %H:%M:%S"
@@ -511,17 +512,16 @@ def _merge_replay_path(spark: SparkSession, sf_dir: str) -> str:
     must keep b0's ORIGINAL value under first-wins (ON CONFLICT DO
     NOTHING), while the genuinely-new keys (event_id %% 4 == 3) land
     with the shifted value.  Both writes go through the REAL
-    ParquetUpsertTable.upsert used by
+    SnapshotTable.upsert used by
     streaming.pipelines.incremental_upsert_stream's foreachBatch — this
     is the driver-checkable twin of that pytest-only path."""
     from politician_etl_project_spark.catalog import stored_dir
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
 
     def _build(staging: str) -> None:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
-        table = ParquetUpsertTable(spark, staging, keys=["event_id"])
+        table = SnapshotTable(spark, staging, keys=["event_id"])
         table.upsert(events.filter(F.col("event_id") % 4 != 3), update_wins=False)
         table.upsert(
             events.filter(F.col("event_id") % 2 == 1).withColumn(
@@ -555,7 +555,7 @@ ORDER BY event_type
 """,
     ops=("T5", "S12", "S13", "A2"),
     doc="Two-batch incremental MERGE replayed end-to-end through the real "
-    "managed-table write path (operators/upsert.ParquetUpsertTable — the "
+    "managed-table write path (storage.SnapshotTable.upsert — the "
     "same upsert foreachBatch calls in "
     "streaming/pipelines.incremental_upsert_stream), then verified "
     "against a DuckDB oracle that recomputes the final table "
@@ -567,13 +567,12 @@ ORDER BY event_type
     "would shift by exactly 100 per wrongly-updated row, so the check "
     "is sensitive to a single violated conflict.  Deterministic batch "
     "composition makes reruns idempotent (build-once cache keyed on the "
-    "source fingerprint).  Scale: each MERGE reads only the store once "
-    "and stages + swaps — the partition-scoped variant (partition_cols) "
-    "rewrites only touched partitions at 100 TB.",
+    "source fingerprint).  Scale: each MERGE reads the table once, "
+    "stages the merged rows and publishes them as a new version; the "
+    "query reads the current version's files through the manifest.",
 )
 def q_merge_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _merge_replay_path(spark, sf_dir)
-    final = spark.read.parquet(path)
+    final = SnapshotTable(spark, _merge_replay_path(spark, sf_dir)).read()
     return (
         final.groupBy("event_type")
         .agg(
@@ -1162,8 +1161,6 @@ ORDER BY event_type
 def q_snapshot_append_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import re
-
-    from politician_etl_project_spark.storage import SnapshotTable
 
     t = SnapshotTable(spark, os.path.join(_snapshot_append_live_path(spark, sf_dir), "store"))
     versions = t.versions()

@@ -956,8 +956,9 @@ def _wh_long_format(spark: SparkSession, root: str) -> DataFrame:
     nondeterministic) never enter the hash while run MULTIPLICITY and
     the before/after row counts do."""
 
-    def rd(name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(root, name))
+    from politician_etl_project_spark.etl import Warehouse
+
+    rd = Warehouse(spark, root).read
 
     dash = F.lit("-")
     pol = rd("politicians").select(

@@ -189,33 +189,33 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Each document is tokenized once (``toks``); candidate pairs carry only
+# ids and join their token lists back by id for the exact verify.
 _NEAR_DUP_ORACLE = f"""
-WITH sigs AS (
-  SELECT doc_id, text,
-         list_aggregate(list_transform({_DUCK_DTOKS}, t -> md5('0|' || t)), 'min') AS sig0,
-         list_aggregate(list_transform({_DUCK_DTOKS}, t -> md5('1|' || t)), 'min') AS sig1,
-         list_aggregate(list_transform({_DUCK_DTOKS}, t -> md5('2|' || t)), 'min') AS sig2,
-         list_aggregate(list_transform({_DUCK_DTOKS}, t -> md5('3|' || t)), 'min') AS sig3
-  FROM documents
+WITH toks AS (
+  SELECT doc_id, {_DUCK_DTOKS} AS dt FROM documents
+), sigs AS (
+  SELECT doc_id,
+         list_aggregate(list_transform(dt, t -> md5('0|' || t)), 'min') AS sig0,
+         list_aggregate(list_transform(dt, t -> md5('1|' || t)), 'min') AS sig1,
+         list_aggregate(list_transform(dt, t -> md5('2|' || t)), 'min') AS sig2,
+         list_aggregate(list_transform(dt, t -> md5('3|' || t)), 'min') AS sig3
+  FROM toks
 ), bands AS (
-  SELECT doc_id, text, 0 AS band_id, md5(sig0 || '|' || sig1) AS band_key FROM sigs
+  SELECT doc_id, 0 AS band_id, md5(sig0 || '|' || sig1) AS band_key FROM sigs
   UNION ALL
-  SELECT doc_id, text, 1 AS band_id, md5(sig2 || '|' || sig3) AS band_key FROM sigs
+  SELECT doc_id, 1 AS band_id, md5(sig2 || '|' || sig3) AS band_key FROM sigs
 ), cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-         l.text AS text_a, r.text AS text_b
+  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM bands l JOIN bands r
     ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-), toks AS (
-  SELECT id_a, id_b,
-         list_distinct(regexp_split_to_array(trim(text_a), '\\s+')) AS ta,
-         list_distinct(regexp_split_to_array(trim(text_b), '\\s+')) AS tb
-  FROM cand
 ), counts AS (
-  SELECT id_a, id_b,
-         len(list_intersect(ta, tb)) AS n_inter,
-         len(ta) AS n_a, len(tb) AS n_b
-  FROM toks
+  SELECT c.id_a, c.id_b,
+         len(list_intersect(a.dt, b.dt)) AS n_inter,
+         len(a.dt) AS n_a, len(b.dt) AS n_b
+  FROM cand c
+  JOIN toks a ON a.doc_id = c.id_a
+  JOIN toks b ON b.doc_id = c.id_b
 )
 SELECT id_a, id_b,
        CAST(CAST(n_inter AS DECIMAL(18,4))

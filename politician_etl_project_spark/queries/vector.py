@@ -884,9 +884,9 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _extended_lsh_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once stored LSH index constructed INCREMENTALLY: the base
     index holds vec_id % 7 != 0, then the held-out slice arrives as a
-    new-vector batch through operators/similarity.extend_lsh_index (the
-    partition-scoped MERGE that rewrites only the buckets the batch
-    lands in).  Cached under the 'lshx' kind."""
+    new-vector batch through operators/similarity.extend_lsh_index (a
+    bucket-partitioned append that adds files only to the buckets the
+    batch lands in).  Cached under the 'lshx' kind."""
     from politician_etl_project_spark.operators.similarity import (
         build_lsh_index,
         extend_lsh_index,
@@ -904,12 +904,13 @@ def _extended_lsh_index_path(spark: SparkSession, sf_dir: str) -> str:
 @declared_query(
     "q_ann_index_extend",
     oracle=_ANN_LSH_ORACLE,
-    ops=("V2", "S16", "S12", "TXT-ann"),
+    ops=("V2", "S16", "S11", "TXT-ann"),
     doc="Incremental ANN index maintenance at driver grade: the stored "
     "LSH index is built WITHOUT every 7th vector, the held-out batch is "
-    "then appended via extend_lsh_index (partition-scoped MERGE — only "
-    "the buckets the batch lands in are rewritten, new-id contract "
-    "enforced), and the probe runs against the extended index.  The "
+    "then appended via extend_lsh_index (a bucket-partitioned append — "
+    "files land only in the buckets the batch touches and no stored "
+    "file is rewritten, new-id contract enforced), and the probe runs "
+    "against the extended index.  The "
     "oracle is IDENTICAL to q_ann_lsh's full-corpus replay, so the hash "
     "match PROVES the incremental path converges to the full rebuild — "
     "the invariant that makes continuous ingestion into a 100 TB ANN "

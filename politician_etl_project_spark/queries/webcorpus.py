@@ -684,7 +684,7 @@ def _extended_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     "bit-identical to a full rebuild.  Serves the SAME probe as "
     "q_bm25_indexed against the SAME oracle — a green hash proves "
     "extend-then-serve equals rebuild-then-serve, the inverted-index "
-    "twin of q_ann_index_extend's LSH-bucket MERGE.  At 100 TB this "
+    "twin of q_ann_index_extend's LSH-bucket append.  At 100 TB this "
     "is how the index follows daily ingest without nightly rebuilds.",
 )
 def q_bm25_index_extend(spark: SparkSession, sf_dir: str) -> DataFrame:

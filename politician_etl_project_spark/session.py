@@ -35,13 +35,12 @@ def get_spark(app_name: str = "politician-etl-spark") -> SparkSession:
     # a cluster reading TB-scale tables, but the local bench tables are
     # single ~1-10 MiB parquet files which would scan as 1-3 tasks on 32
     # cores.  Size splits so the largest bench table fans out across the
-    # local cores; override (or leave default) on a real cluster.
-    max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(2 * 1024 * 1024))
+    # local cores; leave the default on a real cluster.
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.files.maxPartitionBytes", max_part)
+        .config("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -56,10 +55,7 @@ def get_spark(app_name: str = "politician-etl-spark") -> SparkSession:
         # reduce parallelism (8 MiB cost them ~25%).  On a cluster the
         # 64 MiB default advisory is the right order.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", str(2 * 1024 * 1024)),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(2 * 1024 * 1024))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Partition-pruned store probes (ingest fps/bands, ANN indexes)
         # pass up to ~512 explicit directory paths; above this threshold
@@ -68,11 +64,8 @@ def get_spark(app_name: str = "politician-etl-spark") -> SparkSession:
         # (measured: probe DataFrame creation 0.86 s -> 0.11 s at 1024).
         # Local/HDFS metadata stats are microseconds-to-ms so the driver
         # loop wins by orders of magnitude; on an object-store cluster
-        # where LIST calls are slow, lower it via the env override.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD", "1024"),
-        )
+        # where LIST calls are slow, lower it.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())

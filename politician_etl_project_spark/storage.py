@@ -11,8 +11,11 @@ instead"; §7 scale levers: "partition by date/congress").
   laid out the same way on ``politician_id`` (queries/serving.py).
   Assert-tested in tests/test_storage.py by inspecting the physical
   plan, not just the results.
-- **Snapshot versioning** (`SnapshotTable`): manifest-based versions
-  with time travel, per-file column stats and compaction.
+- **Snapshot versioning** (`SnapshotTable`): the one managed-table
+  format — manifest-based versions with time travel, per-file column
+  stats, keyed upserts with stable surrogate ids, and compaction.  The
+  ETL warehouse, the streaming MERGE sink and every build-once snapshot
+  store are written through it.
 """
 
 from __future__ import annotations
@@ -93,9 +96,10 @@ class SnapshotConflictError(RuntimeError):
 
 
 class SnapshotTable:
-    """Versioned managed table with time travel, the third storage tool
-    beside partitioning and bucketing: every write publishes an IMMUTABLE
-    snapshot and readers pin any historical version.
+    """Versioned managed table with time travel, and the reference's
+    three write modes: append (S11), upsert (S12/S13 via ``merge_keep``)
+    and overwrite (S14 TRUNCATE+reload).  Every write publishes an
+    IMMUTABLE snapshot and readers pin any historical version.
 
     Layout (the essential core of a lakehouse table format, expressed
     with nothing but parquet + atomic renames):
@@ -105,17 +109,24 @@ class SnapshotTable:
       version number isn't known until the commit lock is held, after
       staging); a version's files are listed only in its manifest
     - ``versions/v{N}.json``    — manifest: the FILE LIST composing
-      snapshot N (plus op, parent, schema)
+      snapshot N (plus op, parent, schema and row count)
     - ``_CURRENT``              — atomic pointer to the live version
 
     Snapshots share files: ``append`` writes only the new rows' files
     and its manifest references the parent's files plus the new ones —
     O(new data) regardless of table size, which is what makes the
     scheme viable at 100 TB (an overwrite-per-version copy would not
-    be).  ``upsert`` is copy-on-write over the merged result (pair with
-    ``ParquetUpsertTable``'s partition-scoped MERGE when slices must
-    stay cheap).  Time travel is free: old manifests keep old files
-    alive until ``vacuum`` retires them.
+    be).  ``upsert`` is copy-on-write over the merged result.  Time
+    travel is free: old manifests keep old files alive until ``vacuum``
+    retires them (a table that wants one copy, like the ETL warehouse,
+    vacuums after each write).
+
+    Every write counts the rows it stages (``DataFrame.observe`` on the
+    write job itself) and records the table's row count in the manifest,
+    so ``row_count`` answers from the manifest and starts no job.  A
+    ``read`` pins the manifest's schema and file list: no footer job,
+    and never a superseded file, which a raw read of the directory would
+    pick up.
 
     Crash safety mirrors the streaming sketch store's versioned-pointer
     protocol: data files land first, then the manifest, then one atomic
@@ -144,8 +155,23 @@ class SnapshotTable:
     load auditable and revertible.
     """
 
-    def __init__(self, spark: SparkSession, path: str, stats_cols: list[str] | None = None):
-        """``stats_cols``: columns whose per-FILE min/max are recorded in
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        keys: list[str] | None = None,
+        id_col: str | None = None,
+        stats_cols: list[str] | None = None,
+    ):
+        """``keys``: the natural key ``upsert`` merges on — one row per
+        key from the first write on (the reference's UNIQUE constraints).
+
+        ``id_col``: a surrogate id the table owns beside its ``keys``
+        (S18): ``upsert`` assigns dense ids on the first write and keeps
+        every published id on later ones (``stable_ids``); an id column
+        in the incoming batch is ignored.
+
+        ``stats_cols``: columns whose per-FILE min/max are recorded in
         each manifest at write time — the data-skipping half of the
         format (Delta/Iceberg file statistics).  ``read_range`` then
         plans from the manifest alone and opens only the files whose
@@ -160,6 +186,8 @@ class SnapshotTable:
 
         self.spark = spark
         self.path = path
+        self.keys = list(keys or [])
+        self.id_col = id_col
         self.stats_cols = list(stats_cols or [])
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         os.makedirs(os.path.join(path, "versions"), exist_ok=True)
@@ -196,6 +224,13 @@ class SnapshotTable:
                 if n <= cur:
                     out.append(n)
         return sorted(out)
+
+    def row_count(self, version: int | None = None) -> int | None:
+        """Rows of ``version`` (default: current; 0 before the first
+        write) as its write counted them — a manifest read, no job.
+        None for a manifest written without a count."""
+        v = self.current_version() if version is None else version
+        return 0 if v is None else self._manifest(v).get("rows")
 
     def _manifest(self, version: int) -> dict:
         import json
@@ -263,19 +298,35 @@ class SnapshotTable:
 
     # -- reads ---------------------------------------------------------------
 
-    def read(self, version: int | None = None) -> DataFrame:
-        """The table as of ``version`` (default: current)."""
-        import os
-
-        from pyspark.sql.types import StructType
-
+    def _published_manifest(self, version: int | None) -> dict:
+        """The manifest of ``version`` (default: current), refusing a
+        version that was never published: a manifest above the pointer
+        is a torn write, and reading or planning from it would expose
+        uncommitted data."""
         cur = self.current_version()
         if cur is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
         v = cur if version is None else version
         if v not in self.versions():
             raise ValueError(f"unknown version {v}; have {self.versions()}")
-        man = self._manifest(v)
+        return self._manifest(v)
+
+    def files(self, version: int | None = None) -> list[str]:
+        """Paths of the data files composing ``version`` (default:
+        current) — what any reader outside Spark must scan instead of
+        the data directory, which also holds superseded files."""
+        import os
+
+        man = self._published_manifest(version)
+        return [os.path.join(self.path, "data", f) for f in man["files"]]
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """The table as of ``version`` (default: current)."""
+        import os
+
+        from pyspark.sql.types import StructType
+
+        man = self._published_manifest(version)
         files = [os.path.join(self.path, "data", f) for f in man["files"]]
         schema = StructType.fromJson(man["schema"])
         if not files:
@@ -295,16 +346,7 @@ class SnapshotTable:
         don't match a range predicate, but the file may hold non-null
         rows in OTHER row groups only stats of finer grain could
         exclude."""
-        cur = self.current_version()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        v = cur if version is None else version
-        if v not in self.versions():
-            # same guard as read()/changes(): a manifest above the
-            # pointer is a torn write — planning from it would expose
-            # uncommitted data
-            raise ValueError(f"unknown version {v}; have {self.versions()}")
-        man = self._manifest(v)
+        man = self._published_manifest(version)
         stats = man.get("stats", {})
         # normalization authority is the manifest schema's declared type,
         # never the value's shape (round-6 advice: value sniffing can put
@@ -515,23 +557,30 @@ class SnapshotTable:
 
     # -- writes --------------------------------------------------------------
 
-    def _stage_files(self, df: DataFrame) -> tuple[list[str], dict]:
+    def _stage_files(self, df: DataFrame) -> tuple[list[str], dict, int]:
         """Write df's parquet files and move them into data/ under a
         commit-unique token prefix — collision-free even when several
         writers stage concurrently (the version number isn't known
         until the commit lock is held, which is AFTER staging).
         Returns (file names, per-file min/max stats for stats_cols —
         computed by ONE aggregate over the staged files before the
-        move, so the cost is O(new data))."""
+        move, so the cost is O(new data) — and the rows written, counted
+        by the write job itself)."""
         import os
         import shutil
         import tempfile
         import uuid
 
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         token = uuid.uuid4().hex[:12]
         staging = tempfile.mkdtemp(prefix="snap-", dir=self.path)
+        written = Observation()
         try:
-            df.write.mode("overwrite").parquet(staging)
+            df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(staging)
             staged_stats = self._collect_stats(staging, df) if self.stats_cols else {}
             names = []
             stats: dict[str, dict] = {}
@@ -542,7 +591,7 @@ class SnapshotTable:
                     names.append(dst)
                     if fn in staged_stats:
                         stats[dst] = staged_stats[fn]
-            return names, stats
+            return names, stats, written.get["rows"]
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
@@ -639,7 +688,13 @@ class SnapshotTable:
         return _lock()
 
     def _publish_locked(
-        self, parent, files: list[str], op: str, schema_json: dict, stats: dict | None = None
+        self,
+        parent,
+        files: list[str],
+        op: str,
+        schema_json: dict,
+        stats: dict | None = None,
+        rows: int | None = None,
     ) -> int:
         """Allocate the next version and commit it: exclusive manifest
         create + atomic pointer flip.  MUST be called with the commit
@@ -655,6 +710,7 @@ class SnapshotTable:
             "op": op,
             "files": files,
             "schema": schema_json,
+            "rows": rows,
         }
         if stats:
             # only files in THIS manifest — an append caller passes the
@@ -693,66 +749,88 @@ class SnapshotTable:
         return version
 
     def overwrite(self, df: DataFrame, op: str = "overwrite") -> int:
-        files, stats = self._stage_files(df)
+        files, stats, rows = self._stage_files(df)
         with self._commit_lock():
             return self._publish_locked(
-                self.current_version(), files, op, df.schema.jsonValue(), stats
+                self.current_version(), files, op, df.schema.jsonValue(), stats, rows
             )
 
     def append(self, df: DataFrame, op: str = "append") -> int:
         """O(new data): parent files are REFERENCED, not copied.  ``op``
         labels the manifest (streaming sinks tag their sink + batch id,
         making the audit trail double as a replay-marker store).
-        Rejects a schema that differs from the parent snapshot's —
-        shared-file reads would silently null the divergent columns.
-        The parent's file list is resolved UNDER the commit lock, so an
-        append never loses rows committed by an interleaved writer."""
-        got = [(f["name"], f["type"]) for f in df.schema.jsonValue()["fields"]]
-        new_files, new_stats = self._stage_files(df)
+        Rejects columns whose names or types differ from the parent
+        snapshot's — shared-file reads would silently null the divergent
+        columns; another column ORDER fits (parquet resolves columns by
+        name) and the parent's schema stays published.  The parent's
+        file list is resolved UNDER the commit lock, so an append never
+        loses rows committed by an interleaved writer."""
+        got = {f["name"]: f["type"] for f in df.schema.jsonValue()["fields"]}
+        new_files, new_stats, new_rows = self._stage_files(df)
         with self._commit_lock():
             parent = self.current_version()
             if parent is None:
-                return self._publish_locked(None, new_files, op, df.schema.jsonValue(), new_stats)
+                return self._publish_locked(
+                    None, new_files, op, df.schema.jsonValue(), new_stats, new_rows
+                )
             pman = self._manifest(parent)
-            want = [(f["name"], f["type"]) for f in pman["schema"]["fields"]]
+            want = {f["name"]: f["type"] for f in pman["schema"]["fields"]}
             if want != got:
                 self._unstage_files(new_files)
                 raise ValueError(
                     f"append schema {got} does not match snapshot schema {want}; "
                     "use overwrite() for schema changes"
                 )
+            rows = pman.get("rows")
             # inherited files keep the parent's stats; file names are
             # commit-unique so the dict merge cannot collide
             return self._publish_locked(
                 parent,
                 pman["files"] + new_files,
                 op,
-                df.schema.jsonValue(),
+                pman["schema"],
                 {**pman.get("stats", {}), **new_stats},
+                None if rows is None else rows + new_rows,
             )
 
-    def upsert(self, df: DataFrame, keys: list[str], update_wins: bool = True) -> int:
-        """Copy-on-write MERGE: the merged result becomes the new
-        snapshot's file set; the parent snapshot stays readable.
-        Optimistic: if another writer commits between the base read and
-        the publish, the stale merge is discarded and re-run against the
-        new current version (bounded retries)."""
-        from politician_etl_project_spark.operators.upsert import dedup_keys, merge_keep
+    def upsert(self, df: DataFrame, update_wins: bool = True) -> int:
+        """Copy-on-write MERGE on the table's ``keys``: the merged result
+        becomes the new snapshot's file set; the parent snapshot stays
+        readable.  The first write keeps one row per key (in-batch
+        duplicates included); with ``id_col`` new keys get ids above
+        every published one and published ids never move.  Optimistic:
+        if another writer commits between the base read and the
+        publish, the stale merge is discarded and re-run against the new
+        current version (bounded retries)."""
+        from politician_etl_project_spark.operators.upsert import (
+            dedup_keys,
+            merge_keep,
+            stable_ids,
+        )
 
+        if not self.keys:
+            raise ValueError(f"upsert needs the table's keys ({self.path})")
+        if self.id_col is not None:
+            df = df.drop(self.id_col)
         for _ in range(5):
             base_version = self.current_version()
+            old_ids = None
             if base_version is None:
-                merged = dedup_keys(df, keys)
+                merged = dedup_keys(df, self.keys)
             else:
-                merged = merge_keep(
-                    self.read(base_version), df, keys, update_wins=update_wins
-                )
-            files, stats = self._stage_files(merged)
+                prior = self.read(base_version)
+                if self.id_col is not None:
+                    old_ids = prior.select(*self.keys, self.id_col)
+                    prior = prior.drop(self.id_col)
+                merged = merge_keep(prior, df, self.keys, update_wins=update_wins)
+            if self.id_col is not None:
+                merged = stable_ids(merged, old_ids, self.keys, self.id_col)
+            files, stats, rows = self._stage_files(merged)
             schema_json = merged.schema.jsonValue()
             with self._commit_lock():
                 if self.current_version() == base_version:
                     return self._publish_locked(
-                        base_version, files, "upsert", schema_json, stats
+                        base_version, files, "upsert", schema_json, stats, rows
                     )
             self._unstage_files(files)  # lost the race: re-merge on new base
         raise SnapshotConflictError(f"upsert lost 5 commit races at {self.path}")
@@ -785,12 +863,12 @@ class SnapshotTable:
                 if scan_parts < target_files
                 else base.coalesce(target_files)
             )
-            files, stats = self._stage_files(rewritten)
+            files, stats, rows = self._stage_files(rewritten)
             schema_json = rewritten.schema.jsonValue()
             with self._commit_lock():
                 if self.current_version() == base_version:
                     return self._publish_locked(
-                        base_version, files, "compact", schema_json, stats
+                        base_version, files, "compact", schema_json, stats, rows
                     )
             self._unstage_files(files)
         raise SnapshotConflictError(f"compact lost 5 commit races at {self.path}")

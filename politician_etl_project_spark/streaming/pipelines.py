@@ -171,34 +171,32 @@ def incremental_upsert_stream(
     """T5: per-micro-batch MERGE into a managed table + watermark-log
     append — the reference's update_donations batch loop
     (scripts/update_donations.py:258-307) as foreachBatch.  `table` is a
-    ParquetUpsertTable keyed on event_id (first-wins replays ON CONFLICT
-    DO NOTHING)."""
+    ``storage.SnapshotTable`` keyed on event_id (first-wins replays ON
+    CONFLICT DO NOTHING); `update_log`, if given, is a SnapshotTable the
+    per-batch log rows append to."""
     from politician_etl_project_spark.operators.upsert import log_update
     from politician_etl_project_spark.streaming.sources import run_foreach_batch
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # logged n = rows ACTUALLY INSERTED, via cheap footer-stat counts
-        # around the MERGE — not the batch size: a replayed batch whose
-        # first-wins upsert inserts nothing then logs 0, so consumers
-        # summing the log never double-count (the log row itself may
-        # duplicate across a replay; its counts stay honest).  Under
-        # update_wins=False replacements never happen, so the metric is
-        # named records_inserted.  Both counts are gated on the log
-        # being wanted — an unmetered stream must not pay a full-table
-        # action per micro-batch.
+        # logged n = rows ACTUALLY INSERTED: the merged version's row
+        # count minus the prior one, both recorded in the manifests by
+        # the writes that produced them, so metering costs no job.  Not the
+        # batch size: a replayed batch whose first-wins upsert inserts
+        # nothing then logs 0, so consumers summing the log never
+        # double-count (the log row itself may duplicate across a
+        # replay; its counts stay honest).  Under update_wins=False
+        # replacements never happen, so the metric is named
+        # records_inserted.
+        before = table.row_count()
+        version = table.upsert(batch_df, update_wins=False)
         if update_log is not None:
-            before = table.read().count() if table.exists() else 0
-            table.upsert(batch_df, update_wins=False)
-            n = table.read().count() - before
             log_update(
                 batch_df.sparkSession,
                 update_log,
                 "events",
-                n,
+                table.row_count(version) - before,
                 notes=f"batch={batch_id} records_inserted",
             )
-        else:
-            table.upsert(batch_df, update_wins=False)
 
     run_foreach_batch(events, _apply, checkpoint_dir=checkpoint_dir)
 

@@ -299,36 +299,6 @@ def test_surrogate_ids_stable_under_early_sorting_key(spark, staging, wh):
     assert {r.politician_id for r in joined} == fact_refs_before
 
 
-def test_swap_write_crash_recovery(spark, tmp_path):
-    """_swap_write: a crash after the live dir is renamed aside must be
-    recoverable — the next ParquetUpsertTable sees the old contents,
-    read under the old schema file (the schema publishes with its data,
-    so a recovered table never pairs one version's files with another's
-    schema)."""
-    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE, ParquetUpsertTable
-
-    path = str(tmp_path / "tbl")
-    tbl = ParquetUpsertTable(spark, path, ["k"])
-    tbl.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
-    # simulate dying between "rename live aside" and "publish staging"
-    os.replace(path, path + ".old")
-    assert not os.path.isdir(path)
-    tbl2 = ParquetUpsertTable(spark, path, ["k"])  # recovery runs in __init__
-    assert tbl2.exists()
-    assert os.path.isfile(os.path.join(path, SCHEMA_FILE))
-    assert tbl2.published_schema().simpleString() == "struct<k:int,v:string>"
-    assert [tuple(r) for r in tbl2.read().collect()] == [(1, "a")]
-    # a crash AFTER publish leaves main + .old: recovery keeps main (a
-    # new shape, so a schema file left from the old version would show),
-    # drops .old
-    tbl2.overwrite(spark.createDataFrame([(2, 3, "b")], "k int, w bigint, v string"))
-    os.makedirs(path + ".old", exist_ok=True)
-    tbl3 = ParquetUpsertTable(spark, path, ["k"])
-    assert not os.path.isdir(path + ".old")
-    assert tbl3.published_schema().simpleString() == "struct<k:int,w:bigint,v:string>"
-    assert [tuple(r) for r in tbl3.read().collect()] == [(2, 3, "b")]
-
-
 def _jobs_started(spark, action) -> int:
     """Spark jobs ``action()`` starts, counted in a fresh job group."""
     sc = spark.sparkContext
@@ -342,19 +312,57 @@ def _jobs_started(spark, action) -> int:
 
 
 def test_warehouse_reads_pin_published_schema(spark, staging, tmp_path):
-    """Every table ``run_all`` writes publishes its schema file, and
-    ``Warehouse.read`` pins it: the same schema a footer-inferring read
-    reports, at zero jobs (an inferring read starts one)."""
-    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE
+    """Every table ``run_all`` writes publishes its schema in its
+    version manifest, and ``Warehouse.read`` pins it: the schema a
+    footer-inferring read of the same files reports, at zero jobs (an
+    inferring read starts one).  Each table keeps one version, and its
+    data directory holds only that version's files."""
+    wh = _run(spark, staging, tmp_path / "wh")
+
+    def files(name):
+        tbl = wh[name]
+        assert tbl.versions() == [tbl.current_version()], name
+        data = os.path.join(tbl.path, "data")
+        on_disk = [os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet")]
+        assert sorted(on_disk) == sorted(tbl.files()), name
+        return tbl.files()
+
+    for name in wh.KEYS:
+        paths = files(name)
+        assert _jobs_started(spark, lambda: wh.read(name).schema) == 0, name
+        assert wh.read(name).schema == spark.read.parquet(*paths).schema, name
+    # the probe itself sees the job an inferring read starts
+    assert _jobs_started(spark, lambda: spark.read.parquet(*files("bills"))) == 1
+
+
+def test_failed_upsert_keeps_prior_version(spark, staging, tmp_path, monkeypatch):
+    """A ``Warehouse.upsert`` whose staged write raises publishes
+    nothing: the prior version stays current and readable with the same
+    rows and ids, and no ``snap-*`` staging dir or stray data file is
+    left behind."""
+    from pyspark.sql import DataFrameWriter
 
     wh = _run(spark, staging, tmp_path / "wh")
-    for name in wh.KEYS:
-        path = wh[name].path
-        assert os.path.isfile(os.path.join(path, SCHEMA_FILE)), name
-        assert _jobs_started(spark, lambda: wh.read(name).schema) == 0, name
-        assert wh.read(name).schema == spark.read.parquet(path).schema, name
-    # the probe itself sees the job an inferring read starts
-    assert _jobs_started(spark, lambda: spark.read.parquet(wh["bills"].path)) == 1
+    tbl = wh["politicians"]
+    version = tbl.current_version()
+    before = sorted(map(str, wh.read("politicians").collect()))
+    real_parquet = DataFrameWriter.parquet
+
+    def write_then_die(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        raise RuntimeError("died after staging")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_die)
+    new_member = dict(MEMBERS[1], bioguideId="A000001", name="Aardvark, Alice")
+    with pytest.raises(RuntimeError, match="died after staging"):
+        etl.load_politicians(wh, MEMBERS + [new_member])
+    monkeypatch.undo()
+    assert tbl.current_version() == version
+    assert sorted(map(str, wh.read("politicians").collect())) == before
+    assert not [f for f in os.listdir(tbl.path) if f.startswith("snap-")]
+    data = os.path.join(tbl.path, "data")
+    on_disk = [os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet")]
+    assert sorted(on_disk) == sorted(tbl.files(version))
 
 
 def _logged_counts(wh) -> dict[str, int]:

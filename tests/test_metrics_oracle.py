@@ -34,7 +34,7 @@ def duck(wh):
     con = duckdb.connect()
     for name in wh.KEYS:
         con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{wh.tables[name].path}/*.parquet')"
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet({wh[name].files()})"
         )
     return con
 

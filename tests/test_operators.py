@@ -189,20 +189,21 @@ def test_lsh_bucket_cap_bounds_pairs(spark, sf_dir):
 
 
 def test_compact_merges_small_files(spark, tmp_path):
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    tbl = ParquetUpsertTable(spark, str(tmp_path / "t"), keys=["id"])
-    for i in range(4):  # four appends -> >= 4 part files
-        tbl.append(spark.range(i * 10, (i + 1) * 10).withColumnRenamed("id", "id"))
     import os
 
-    before = sum(1 for f in os.listdir(tbl.path) if f.endswith(".parquet"))
+    from politician_etl_project_spark.storage import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), keys=["id"])
+    for i in range(4):  # four appends -> >= 4 part files
+        tbl.append(spark.range(i * 10, (i + 1) * 10))
+    data = os.path.join(tbl.path, "data")
+    before = sum(1 for f in os.listdir(data) if f.endswith(".parquet"))
     assert before >= 4
-    reported = tbl.compact(target_files=1)
-    after = sum(1 for f in os.listdir(tbl.path) if f.endswith(".parquet"))
-    assert reported == before
+    tbl.compact(target_files=1)
+    tbl.vacuum(keep_last=1)
+    after = sum(1 for f in os.listdir(data) if f.endswith(".parquet"))
     assert after == 1
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == tbl.row_count() == 40
 
 
 def test_extend_lsh_index_partition_scoped(spark, tmp_path):

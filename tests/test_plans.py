@@ -443,7 +443,7 @@ def test_range_frame_windows_over_rollup(spark, specs):
 def test_ann_index_extend_prunes_partitions(spark, specs):
     """The probe against the INCREMENTALLY-extended LSH index must keep
     the same partition-prune property as the freshly-built one — the
-    partition-scoped MERGE in extend_lsh_index must not flatten the
+    bucket-partitioned append in extend_lsh_index must not flatten the
     bucket directory layout."""
     plan = plan_of(spark, specs, "q_ann_index_extend")
     part_lines = [ln for ln in plan.splitlines() if "PartitionFilters:" in ln]

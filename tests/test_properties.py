@@ -177,47 +177,6 @@ def test_range_join_matches_naive(spark, left, right, width):
 
 
 @given(
-    batches=st.lists(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=4),   # key within partition
-                st.integers(min_value=118, max_value=120),  # partition value (part of key)
-                st.integers(min_value=-50, max_value=50),   # payload
-            ),
-            min_size=0,
-            max_size=8,
-        ),
-        min_size=1,
-        max_size=3,
-    ),
-    update_wins=st.booleans(),
-)
-@settings(**_SETTINGS)
-def test_partition_scoped_merge_equals_full_merge(spark, tmp_path_factory, batches, update_wins):
-    """Applying the same upsert batches to a partitioned table (touched-
-    partition MERGE) and an unpartitioned one (full-table MERGE) must
-    converge to identical content — partition-scoping is a physical
-    optimization, never a semantic one."""
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    root = tmp_path_factory.mktemp("pmerge")
-    part_tbl = ParquetUpsertTable(
-        spark, str(root / "p"), keys=["k", "congress"], partition_cols=["congress"]
-    )
-    flat_tbl = ParquetUpsertTable(spark, str(root / "f"), keys=["k", "congress"])
-    for batch in batches:
-        if not batch:
-            continue
-        df = spark.createDataFrame(batch, "k int, congress int, v int")
-        part_tbl.upsert(df, update_wins=update_wins)
-        flat_tbl.upsert(df, update_wins=update_wins)
-    if part_tbl.exists() or flat_tbl.exists():
-        got = sorted(tuple(r) for r in part_tbl.read().select("k", "congress", "v").collect())
-        want = sorted(tuple(r) for r in flat_tbl.read().select("k", "congress", "v").collect())
-        assert got == want
-
-
-@given(
     keys=st.lists(
         st.one_of(
             st.none(),
@@ -632,7 +591,7 @@ def test_snapshot_table_matches_model(spark, writes, tmp_path_factory):
     update-wins.  Time travel = replaying the model prefix."""
     from politician_etl_project_spark.storage import SnapshotTable
 
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snapprop") / "t"))
+    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snapprop") / "t"), keys=["k"])
     model_states: list[list[tuple[int, int]]] = []
     state: list[tuple[int, int]] = []
     for op, rows in writes:
@@ -649,7 +608,7 @@ def test_snapshot_table_matches_model(spark, writes, tmp_path_factory):
                 t.append(df)
             state = state + list(rows)
         else:
-            t.upsert(df, keys=["k"])
+            t.upsert(df)
             # merge_keep / dedup_keys order ties by the value columns
             # ASCENDING, so the deterministic winner is the LOWEST value
             # per key WITHIN each side; update-wins puts incoming first.
@@ -666,10 +625,12 @@ def test_snapshot_table_matches_model(spark, writes, tmp_path_factory):
             merged.update(incoming)
             state = sorted(merged.items())
         model_states.append(list(state))
-    # every version still reads back its model prefix
+    # every version still reads back its model prefix, and its manifest
+    # records the prefix's row count
     for v, want in zip(t.versions(), model_states):
         got = sorted((r.k, r.v) for r in t.read(v).collect())
         assert got == sorted(want), f"version {v}: {got} != {sorted(want)}"
+        assert t.row_count(v) == len(want), f"version {v}"
 
 
 # ---------------------------------------------------------------------------

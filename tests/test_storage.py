@@ -63,109 +63,13 @@ def test_partitioned_scan_reads_fewer_files(spark, tmp_path):
     assert all("order_year=1996" in f for f in pruned)
 
 
-def test_partition_scoped_merge(spark, tmp_path):
-    """Delta-style MERGE on a partitioned upsert table: an incremental
-    batch must (1) read only touched partitions (PartitionFilters in the
-    pruned-scan plan), (2) physically rewrite only touched partition
-    directories, (3) stay idempotent."""
-    import contextlib
-    import io
-    import os
-
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    path = str(tmp_path / "facts")
-    tbl = ParquetUpsertTable(spark, path, keys=["k", "congress"], partition_cols=["congress"])
-    base = spark.createDataFrame(
-        [(1, "a", 118), (2, "b", 118), (3, "c", 119)], "k int, v string, congress int"
-    )
-    tbl.upsert(base)
-
-    def files_of(part):
-        d = os.path.join(path, f"congress={part}")
-        return {
-            f: os.stat(os.path.join(d, f)).st_mtime_ns
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    before_118, before_119 = files_of(118), files_of(119)
-
-    batch = spark.createDataFrame([(3, "c2", 119), (4, "d", 119)], "k int, v string, congress int")
-    # (1) pruned read: only congress=119 reaches the scan
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        tbl._touched_existing(batch).explain("formatted")
-    plan = buf.getvalue()
-    part_lines = [ln for ln in plan.splitlines() if "PartitionFilters:" in ln]
-    assert part_lines and any("congress" in ln for ln in part_lines), plan
-
-    tbl.upsert(batch)
-    # (2) untouched partition untouched on disk; touched partition rewritten
-    assert files_of(118) == before_118
-    assert files_of(119) != before_119
-    got = sorted(tuple(r) for r in tbl.read().select("k", "v", "congress").collect())
-    assert got == [(1, "a", 118), (2, "b", 118), (3, "c2", 119), (4, "d", 119)]
-
-    # (3) idempotent: same batch again converges to the same content
-    tbl.upsert(batch)
-    again = sorted(tuple(r) for r in tbl.read().select("k", "v", "congress").collect())
-    assert again == got
-
-
-def test_partition_scoped_merge_first_wins(spark, tmp_path):
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    path = str(tmp_path / "facts_fw")
-    tbl = ParquetUpsertTable(spark, path, keys=["k", "congress"], partition_cols=["congress"])
-    tbl.upsert(spark.createDataFrame([(1, "orig", 118)], "k int, v string, congress int"))
-    tbl.upsert(
-        spark.createDataFrame([(1, "new", 118), (2, "x", 118)], "k int, v string, congress int"),
-        update_wins=False,
-    )
-    got = sorted(tuple(r) for r in tbl.read().select("k", "v").collect())
-    assert got == [(1, "orig"), (2, "x")]
-
-
-def test_partition_cols_must_be_subset_of_keys(spark, tmp_path):
-    """A merge key that could change partitions would silently duplicate
-    under partition-scoped MERGE — rejected at construction."""
-    import pytest as _pytest
-
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    with _pytest.raises(ValueError, match="subset of keys"):
-        ParquetUpsertTable(spark, str(tmp_path / "bad"), keys=["k"], partition_cols=["congress"])
-    # stable surrogate ids need the whole key -> id map, which a
-    # partition-scoped MERGE never reads
-    with _pytest.raises(ValueError, match="id_col"):
-        ParquetUpsertTable(
-            spark, str(tmp_path / "bad2"), keys=["k", "congress"],
-            partition_cols=["congress"], id_col="k_id",
-        )
-
-
-def test_compact_counts_partitioned_files(spark, tmp_path):
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    path = str(tmp_path / "pc")
-    tbl = ParquetUpsertTable(spark, path, keys=["k", "congress"], partition_cols=["congress"])
-    tbl.upsert(spark.createDataFrame([(1, 118), (2, 119)], "k int, congress int").repartition(2))
-    before = tbl.compact()
-    assert before >= 2  # counted the files under partition dirs, not 0
-    assert sorted(tuple(r) for r in tbl.read().select("k", "congress").collect()) == [
-        (1, 118),
-        (2, 119),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # SnapshotTable: versioned snapshots + time travel
 # ---------------------------------------------------------------------------
 
 
 def _snap(spark, tmp_path, name="snap"):
-    return storage.SnapshotTable(spark, str(tmp_path / name))
+    return storage.SnapshotTable(spark, str(tmp_path / name), keys=["k"])
 
 
 def test_snapshot_versions_and_time_travel(spark, tmp_path):
@@ -173,7 +77,7 @@ def test_snapshot_versions_and_time_travel(spark, tmp_path):
     assert t.current_version() is None
     t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
     t.append(spark.createDataFrame([(3, "c")], "k long, v string"))
-    t.upsert(spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string"), keys=["k"])
+    t.upsert(spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string"))
     assert t.versions() == [1, 2, 3]
     assert {(r.k, r.v) for r in t.read(1).collect()} == {(1, "a"), (2, "b")}
     assert {(r.k, r.v) for r in t.read(2).collect()} == {(1, "a"), (2, "b"), (3, "c")}
@@ -311,7 +215,7 @@ def test_snapshot_interleaved_writers_two_handles(spark, tmp_path):
     a.overwrite(spark.createDataFrame([(1,)], "k long"))
     b.append(spark.createDataFrame([(2,)], "k long"))
     a.append(spark.createDataFrame([(3,)], "k long"))
-    b.upsert(spark.createDataFrame([(4,)], "k long"), keys=["k"])
+    b.upsert(spark.createDataFrame([(4,)], "k long"))
     assert a.versions() == [1, 2, 3, 4]
     assert {r.k for r in a.read().collect()} == {1, 2, 3, 4}
 
@@ -338,7 +242,7 @@ def test_snapshot_upsert_retries_when_table_advances(spark, tmp_path, monkeypatc
         return files
 
     monkeypatch.setattr(storage.SnapshotTable, "_stage_files", stage_and_race)
-    t.upsert(spark.createDataFrame([(2, "b")], "k long, v string"), keys=["k"])
+    t.upsert(spark.createDataFrame([(2, "b")], "k long, v string"))
     monkeypatch.setattr(storage.SnapshotTable, "_stage_files", real_stage)
     assert {(r.k, r.v) for r in t.read().collect()} == {(1, "a"), (9, "z"), (2, "b")}
 
@@ -918,46 +822,27 @@ def test_compaction_maintenance_store_physics(spark):
     assert on_disk == sorted(man["files"])
 
 
-def test_upsert_table_without_schema_file_still_reads(spark, tmp_path):
-    """A table written before schema files existed reads by inference,
-    and its next rewrite publishes one."""
+def test_upsert_table_refuses_rows_of_another_shape(spark, tmp_path):
+    """Rows appended beside the published files must carry the
+    snapshot's columns — a read pinned to the manifest schema would
+    silently null the divergent columns.  A different column order fits
+    (parquet resolves columns by name); an extra column, a changed type
+    or a missing column is refused and leaves no staged file behind, and
+    ``overwrite`` changes the shape."""
     import os
 
-    from politician_etl_project_spark.operators.upsert import SCHEMA_FILE, ParquetUpsertTable
-
-    path = str(tmp_path / "legacy")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
-    tbl = ParquetUpsertTable(spark, path, ["k"])
-    assert tbl.published_schema() is None
-    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]
-    assert tbl.upsert(spark.createDataFrame([(2, "c")], "k int, v string")) == 2
-    assert os.path.isfile(os.path.join(path, SCHEMA_FILE))
-    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "c")]
-
-
-def test_upsert_table_refuses_rows_of_another_shape(spark, tmp_path):
-    """Rows added beside the published files must fit the schema file —
-    a read pinned to a stale schema would silently null the divergent
-    columns (the SnapshotTable.append contract).  A different column
-    order fits (parquet resolves columns by name); an extra column, a
-    changed type or a MERGE whose merged rows change a type are refused
-    before any file is written, and ``overwrite`` changes the shape."""
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    tbl = ParquetUpsertTable(spark, str(tmp_path / "t"), ["k"])
-    tbl.append(spark.createDataFrame([(1, "a")], "k int, v string"))  # first append publishes
-    assert tbl.published_schema().simpleString() == "struct<k:int,v:string>"
-    tbl.append(spark.createDataFrame([("b", 2)], "v string, k int"))
+    t = _snap(spark, tmp_path)
+    t.append(spark.createDataFrame([(1, "a")], "k int, v string"))
+    t.append(spark.createDataFrame([("b", 2)], "v string, k int"))
     for row, bad in (((3, "c", 1.5), "k int, v string, x double"), ((3, 4), "k int, v bigint"), ((3,), "k int")):
-        with pytest.raises(ValueError, match="do not match the schema"):
-            tbl.append(spark.createDataFrame([row], bad))
-    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]
+        with pytest.raises(ValueError, match="does not match snapshot schema"):
+            t.append(spark.createDataFrame([row], bad))
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+    assert t.read().schema.simpleString() == "struct<k:int,v:string>"
+    assert t.row_count() == 2
+    data = os.path.join(t.path, "data")
+    on_disk = [os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet")]
+    assert sorted(on_disk) == sorted(t.files())
 
-    part = ParquetUpsertTable(spark, str(tmp_path / "p"), ["k", "c"], partition_cols=["c"])
-    part.upsert(spark.createDataFrame([(1, "a", 5)], "k int, v string, c int"))
-    with pytest.raises(ValueError, match="do not match the schema"):
-        part.upsert(spark.createDataFrame([(2, 7, 5)], "k int, v bigint, c int"))
-    assert [tuple(r) for r in part.read().collect()] == [(1, "a", 5)]
-
-    tbl.overwrite(spark.createDataFrame([(9, 1.5)], "k int, x double"))
-    assert [tuple(r) for r in tbl.read().collect()] == [(9, 1.5)]
+    t.overwrite(spark.createDataFrame([(9, 1.5)], "k int, x double"))
+    assert [tuple(r) for r in t.read().collect()] == [(9, 1.5)]

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from politician_etl_project_spark.catalog import load_table
-from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
+from politician_etl_project_spark.storage import SnapshotTable
 from politician_etl_project_spark.streaming import (
     dedup_stream,
     events_stream,
@@ -189,8 +189,8 @@ def test_incremental_upsert_foreachbatch(spark, staged_events, tmp_path):
     """T5: stream MERGEs into a managed table per micro-batch; the final
     table holds exactly the distinct events, and update_log gained one
     row per batch with a usable watermark."""
-    table = ParquetUpsertTable(spark, str(tmp_path / "events_tbl"), keys=["event_id"])
-    wm_log = ParquetUpsertTable(spark, str(tmp_path / "update_log"), keys=["table_name"])
+    table = SnapshotTable(spark, str(tmp_path / "events_tbl"), keys=["event_id"])
+    wm_log = SnapshotTable(spark, str(tmp_path / "update_log"))
 
     stream = events_stream(spark, staged_events, max_files_per_trigger=2)
     incremental_upsert_stream(
@@ -204,6 +204,27 @@ def test_incremental_upsert_foreachbatch(spark, staged_events, tmp_path):
     # records_updated = rows ACTUALLY inserted (replay logs 0), so the
     # log total equals the table's distinct rows, not raw batch sizes
     assert log.agg(F.sum("records_updated")).collect()[0][0] == n_unique
+
+
+def test_metered_upsert_batch_costs_one_log_job(spark, tmp_path, monkeypatch):
+    """A metered micro-batch starts the jobs of an unmetered one plus
+    the update_log append: the inserted count comes from the row counts
+    the upsert records per version, not from counting the table."""
+    from politician_etl_project_spark.streaming import sources
+    from tests.test_etl import _jobs_started
+
+    batches = []
+    monkeypatch.setattr(sources, "run_foreach_batch", lambda _e, apply, **_kw: batches.append(apply))
+    batch = _batch_events(spark).filter(F.col("event_id") < 200)
+    jobs = {}
+    for name, log in (("plain", None), ("metered", SnapshotTable(spark, str(tmp_path / "log")))):
+        table = SnapshotTable(spark, str(tmp_path / name), keys=["event_id"])
+        table.upsert(batch.filter(F.col("event_id") < 100), update_wins=False)
+        incremental_upsert_stream(None, table, update_log=log)
+        jobs[name] = _jobs_started(spark, lambda: batches[-1](batch, 1))
+    assert jobs["metered"] == jobs["plain"] + 1, jobs
+    fresh = batch.filter(F.col("event_id") >= 100).select("event_id").distinct().count()
+    assert [r.records_updated for r in log.read().collect()] == [fresh]
 
 
 def test_interval_join_stream_matches_batch(spark, staged_events, tmp_path):
@@ -230,71 +251,6 @@ def test_interval_join_stream_matches_batch(spark, staged_events, tmp_path):
     actual = {(r["v_id"], r["p_id"]) for r in got.collect()}
     assert expected  # fixture must produce at least one pair
     assert actual == expected
-
-
-def test_foreachbatch_merge_into_partitioned_table(spark, tmp_path):
-    """T5 + partition-scoped MERGE: a file-source stream upserts each
-    micro-batch into a partitioned warehouse table; late re-deliveries of
-    the same key converge (idempotent), untouched partitions stay
-    physically untouched."""
-    import json
-    import os
-
-    from politician_etl_project_spark.operators.upsert import ParquetUpsertTable
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"k": 1, "congress": 118, "v": 10},
-                {"k": 2, "congress": 119, "v": 20},
-            ]
-        )
-    )
-    tbl = ParquetUpsertTable(
-        spark, str(tmp_path / "tbl"), keys=["k", "congress"], partition_cols=["congress"]
-    )
-    stream = (
-        spark.readStream.schema("k int, congress int, v int")
-        .json(str(src))
-    )
-
-    def sink(batch_df, batch_id):
-        tbl.upsert(batch_df, update_wins=True)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    first = sorted(tuple(r) for r in tbl.read().select("k", "congress", "v").collect())
-    assert first == [(1, 118, 10), (2, 119, 20)]
-
-    files_118 = set(os.listdir(str(tmp_path / "tbl" / "congress=118")))
-    # second delivery: update k=2 (congress=119) and add k=3 there
-    (src / "b2.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"k": 2, "congress": 119, "v": 21},
-                {"k": 3, "congress": 119, "v": 30},
-            ]
-        )
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(tuple(r) for r in tbl.read().select("k", "congress", "v").collect())
-    assert got == [(1, 118, 10), (2, 119, 21), (3, 119, 30)]
-    assert set(os.listdir(str(tmp_path / "tbl" / "congress=118"))) == files_118
 
 
 def test_dedup_ingest_stream(spark, tmp_path):
@@ -385,7 +341,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     events = _batch_events(spark)
     events.filter(F.col("event_id") < 500).coalesce(1).write.mode("overwrite").parquet(src)
 
-    table = ParquetUpsertTable(spark, str(tmp_path / "tbl"), keys=["event_id"])
+    table = SnapshotTable(spark, str(tmp_path / "tbl"), keys=["event_id"])
     seen_batches: list[int] = []
 
     def make_runner():
@@ -529,7 +485,6 @@ def test_snapshot_append_stream_versions_per_batch(spark, staged_events, tmp_pat
     """Versioned streaming ingestion: one append version per micro-batch,
     final version equal to the batch union, and intermediate versions
     time-travelable to each batch prefix."""
-    from politician_etl_project_spark.storage import SnapshotTable
     from politician_etl_project_spark.streaming.pipelines import snapshot_append_stream
 
     store = str(tmp_path / "snap_store")
@@ -555,7 +510,6 @@ def test_snapshot_append_stream_replay_idempotent(spark, staged_events, tmp_path
     writers interleaved commits on the same table."""
     import shutil
 
-    from politician_etl_project_spark.storage import SnapshotTable
     from politician_etl_project_spark.streaming.pipelines import (
         _sink_lineage_id,
         snapshot_append_stream,
@@ -587,7 +541,7 @@ def test_snapshot_append_stream_replay_idempotent(spark, staged_events, tmp_path
     # moved current past our batch — the bounded history scan must still
     # recognize the committed op, skip, and heal the marker
     shutil.rmtree(f"{store}/markers", ignore_errors=True)
-    t.upsert(redelivered, keys=["event_id"])
+    SnapshotTable(spark, store, keys=["event_id"]).upsert(redelivered)
     interleaved = (t.versions(), t.read().count())
     assert snapshot_guarded_append(t, sink, redelivered, 3) is False
     assert (t.versions(), t.read().count()) == interleaved
@@ -605,7 +559,6 @@ def test_snapshot_append_stream_fresh_checkpoint_is_new_lineage(
     """A fresh checkpoint restarts batch ids over regrouped input — the
     sink-scoped markers must treat that as a NEW delivery lineage and
     append (conservative: duplicates possible, silent loss never)."""
-    from politician_etl_project_spark.storage import SnapshotTable
     from politician_etl_project_spark.streaming.pipelines import snapshot_append_stream
 
     store = str(tmp_path / "snap_store")
@@ -626,8 +579,6 @@ def test_snapshot_append_rejects_schema_drift(spark, tmp_path):
     columns differ from the snapshot's must be rejected, not silently
     nulled by footer sampling."""
     import pytest as _pytest
-
-    from politician_etl_project_spark.storage import SnapshotTable
 
     t = SnapshotTable(spark, str(tmp_path / "snap"))
     t.overwrite(spark.createDataFrame([(1, "a")], "k long, v string"))
@@ -727,7 +678,6 @@ def test_snapshot_append_stream_cdf_per_batch(spark, staged_events, tmp_path):
     that micro-batch's rows, all typed 'insert' — CDF composes with
     versioned streaming ingestion, giving consumers an incremental read
     of any append-only stream without their own bookkeeping."""
-    from politician_etl_project_spark.storage import SnapshotTable
     from politician_etl_project_spark.streaming.pipelines import snapshot_append_stream
 
     store = str(tmp_path / "snap_store")

@@ -41,9 +41,9 @@ MANUAL = {
            "(pushdown + 4-way range slicing plan-asserted)"),
     "S10": ("out-of-engine per SURVEY: staging-dir contract; scanners are S6/S7",
             "documented (SURVEY §2.1 S10)"),
-    "S11": ("operators/upsert.py:ParquetUpsertTable.append",
+    "S11": ("storage.py:SnapshotTable.append",
             "tests/test_etl.py (update_log appends); tests/test_streaming.py::test_incremental_upsert_foreachbatch"),
-    "S14": ("operators/upsert.py:ParquetUpsertTable.overwrite (stage-then-swap)",
+    "S14": ("storage.py:SnapshotTable.overwrite (stage, then publish a version)",
             "tests/test_etl.py::test_idempotent_rerun"),
     "S15": ("etl.py:load_politicians — typed-null schema alignment before merge",
             "tests/test_etl.py::test_incremental_update_wins_and_first_wins"),
